@@ -484,6 +484,8 @@ def connected_components(
     ``quotient_solve`` = driver UF or distributed fixpoint); the final label
     resolve is lazy and lands in the caller's action.
     """
+    if kernel not in ("auto", "csr", "df"):
+        raise ValueError(f"unknown connected_components kernel {kernel!r}; expected auto|csr|df")
     spark = edges.sparkSession
     if checkpoint is None:
         checkpoint = EphemeralCheckpointer()

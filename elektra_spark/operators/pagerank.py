@@ -11,7 +11,7 @@ Superstep (BSP):
     dangling_mass = Σ_{deg[v]=0} rank[v]            (scalar accumulator)
     rank'[v]      = (1−d)/n + d·(contrib[v] + dangling_mass/n)
 
-Three execution kernels, identical results (``kernel='auto'`` default picks
+Two execution kernels, identical results (``kernel='auto'`` default picks
 ``bsp`` for dense vid spaces, ``df`` otherwise):
 
 - ``bsp`` — **the scale/robustness path** (north-star wording: "edges
@@ -35,30 +35,24 @@ Three execution kernels, identical results (``kernel='auto'`` default picks
   space; this is the north rule's literal "repeated rank-scatter join", and
   the kernel whose 1→4-core scaling the bench gates (its per-superstep work
   is large enough at bench scale to exercise parallel shuffle/agg).
-- ``csr`` — middle path: hash-bucketed worker-resident CSR blocks; each
-  superstep hash-shuffles ONLY the rank table to its bucket, computes
-  per-bucket partial contributions (vectorized gather + ``np.bincount``),
-  and merges partials with a JVM ``groupBy(dst).sum`` (two-phase
-  aggregation with the Python stage as the bucket-local combine). Works for
-  any vid space; on chain-heavy graphs the partials barely combine, so the
-  JVM agg still sees ~E rows.
 
-Kernel choice (measured round 4 under tools/kernel_probe.py; replaces the
-round-3 df-vs-csr claim that the driver's BENCH_r03 falsified): on the
+Kernel choice (measured round 4 under tools/kernel_probe.py): on the
 4.1M-edge transcript graph, steady-state superstep df 13.5 s / 3.8-4.9 s at
-1/4 cores (healthy weather; 17-65 s at 4 cores in the driver's pathological
-windows — its superstep touches ~300 MB of fresh pages per round and this
-sandbox's host periodically serializes first-touch faults at ~10-100 MB/s),
-csr 14.0 s / 5.6 s. bsp on the 4× larger 16.6M-edge graph: 1.2-1.4 s at 1
-core / ~1.6 s at 4 (≈24M edge-messages/s on ONE core; ~0.4 s of that is the
-gather-scatter, the rest fixed per-job cost, which is why its core-scaling
-ratio is reported but not gated at local scale) — bsp is ~40× faster per
-edge than df, and its steady state allocates nothing fresh, making it
-immune to the fault-stall weather that made df bimodal. Numbers + window
-protocol in BENCH/BASELINE.md.
+1/4 cores (healthy weather; 17-65 s at 4 cores in pathological windows —
+its superstep touches ~300 MB of fresh pages per round and the measuring
+host periodically serialized first-touch faults at ~10-100 MB/s). A third,
+hash-bucketed Python CSR kernel measured 14.0 s / 5.6 s on the same graph —
+behind df, because each superstep crossed into Python and merged back in
+the JVM — and was removed. bsp on the 4× larger 16.6M-edge graph: 1.2-1.4 s
+at 1 core / ~1.6 s at 4 (≈24M edge-messages/s on ONE core; ~0.4 s of that is
+the gather-scatter, the rest fixed per-job cost, which is why its
+core-scaling ratio is reported but not gated at local scale) — bsp is ~40×
+faster per edge than df, and its steady state allocates nothing fresh,
+making it immune to the fault-stall weather that made df bimodal. Numbers +
+window protocol in BENCH/BASELINE.md.
 
 The heavy relation (adjacency) is shuffled/bucketed **once**; supersteps
-move only rank-sized (df/csr) or message-sized (bsp) relations. Each
+move only rank-sized (df) or message-sized (bsp) relations. Each
 superstep's ranks are checkpointed/committed to truncate lineage (and, via
 the resumable checkpointer or the bsp state files, to survive restarts).
 """
@@ -78,48 +72,13 @@ from pyspark.sql import functions as F
 
 from .cc import CheckpointFn, EphemeralCheckpointer, SuperstepHook, _no_aqe
 
-# Worker-resident CSR block cache for the csr/bsp kernels: lives at module
+# Worker-resident CSR block cache for the bsp kernel: lives at module
 # scope so it survives across tasks within a reused Python worker (the
 # function shipped per task references it by module global;
 # ``spark.python.worker.reuse`` keeps the process alive). Keyed by side-file
-# dir; a new pagerank() invocation (fresh tempdir) resets it, bounding worker
-# memory to one graph.
+# dir, then bucket; a pagerank() call on another prep dir resets it,
+# bounding worker memory to one graph.
 _CSR_CACHE: dict = {"dir": None, "buckets": {}}
-
-
-def _load_csr_bucket(side_dir: str, bucket: int):
-    """Read one bucket's adjacency side-file and pre-encode it for the
-    superstep gather-scatter. Runs once per (worker, bucket); the encoded
-    arrays are ~16 B/edge and stay resident for the whole fixpoint."""
-    import numpy as np
-    import pyarrow.parquet as pq
-
-    if _CSR_CACHE["dir"] != side_dir:
-        _CSR_CACHE["dir"] = side_dir
-        _CSR_CACHE["buckets"] = {}
-    blk = _CSR_CACHE["buckets"].get(bucket)
-    if blk is not None:
-        return blk
-    path = os.path.join(side_dir, f"bucket={bucket}")
-    if not os.path.isdir(path):
-        blk = None  # no edges hashed to this bucket
-    else:
-        t = pq.read_table(path, columns=["src", "dst", "deg"])
-        src = t.column("src").to_numpy(zero_copy_only=False).astype(np.int64, copy=False)
-        dst = t.column("dst").to_numpy(zero_copy_only=False).astype(np.int64, copy=False)
-        deg = t.column("deg").to_numpy(zero_copy_only=False).astype(np.float64, copy=False)
-        u_src, first, src_code = np.unique(src, return_index=True, return_inverse=True)
-        u_dst, dst_code = np.unique(dst, return_inverse=True)
-        blk = (
-            u_src,
-            (1.0 / deg[first]),
-            src_code.astype(np.int32, copy=False),
-            u_dst,
-            dst_code.astype(np.int32, copy=False),
-        )
-    _CSR_CACHE["buckets"][bucket] = blk
-    return blk
-
 
 
 def _bsp_range(b: int, n_slots: int, n_buckets: int) -> tuple[int, int]:
@@ -172,7 +131,7 @@ def _bsp_assert_storage(spark, prep_dir: str | None) -> None:
             f"bsp kernel on a multi-executor session with host-local bucket "
             f"state ({where}): per-bucket rank/CSR files must be visible to "
             f"every executor. Pass bsp_prep_dir on SHARED storage, or use "
-            f"kernel='df'/'csr' (no resident state). State-residency "
+            f"kernel='df' (no resident state). State-residency "
             f"contract: _pagerank_bsp docstring."
         )
 
@@ -218,8 +177,7 @@ def _load_bsp_bucket(side_dir: str, bucket: int, n_slots: int, n_buckets: int):
     if _CSR_CACHE["dir"] != side_dir:
         _CSR_CACHE["dir"] = side_dir
         _CSR_CACHE["buckets"] = {}
-    key = ("bsp", bucket)
-    blk = _CSR_CACHE["buckets"].get(key)
+    blk = _CSR_CACHE["buckets"].get(bucket)
     if blk is not None:
         return blk
     lo, hi = _bsp_range(bucket, n_slots, n_buckets)
@@ -230,7 +188,7 @@ def _load_bsp_bucket(side_dir: str, bucket: int, n_slots: int, n_buckets: int):
         for name in _BSP_ENC_NAMES
     ]
     blk = (lo, n_owned, mask, *arrs)
-    _CSR_CACHE["buckets"][key] = blk
+    _CSR_CACHE["buckets"][bucket] = blk
     return blk
 
 
@@ -793,9 +751,10 @@ def pagerank(
 
     ``kernel``: ``'auto'`` (default) dispatches to ``'bsp'`` when the vid
     space is dense (max vid + 1 ≤ 4× vertex count, non-negative — true for
-    derive_graph outputs) and ``'df'`` otherwise; ``'bsp'``/``'df'``/``'csr'``
-    force a kernel (module docstring has the design + measured trade-offs;
-    ``'bsp'`` raises on sparse vid spaces rather than burning slot files).
+    derive_graph outputs) and ``'df'`` otherwise; ``'bsp'``/``'df'`` force a
+    kernel (module docstring has the design + measured trade-offs; ``'bsp'``
+    raises on sparse vid spaces rather than burning slot files). Any other
+    name raises ``ValueError``.
 
     Superstep plan shape (df kernel): the adjacency is hash-repartitioned by
     ``src`` **once** and cached; the cached scan advertises that partitioning,
@@ -803,10 +762,12 @@ def pagerank(
     table round-trips through the parquet checkpoint each superstep — the
     lineage-truncation/resumability commit — which discards its partitioning;
     the shuffled-hash-join hint keeps the big cached side from being re-sorted
-    every round). Vertex base ranks are unioned *into* the aggregation instead
-    of outer-joined after it. Net per superstep: one small exchange of the
-    rank relation into the join plus the map-side-combined ``groupBy(dst)``
-    shuffle; the heavy adjacency never moves again.
+    every round). Vertices with no in-edge are unioned in after the
+    aggregation with a zero contribution, and the dangling mass joins as a
+    broadcast 1-row column, so no superstep collects to the driver. Net per
+    superstep: one small exchange of the rank relation into the join plus the
+    map-side-combined ``groupBy(dst)`` shuffle; the heavy adjacency never
+    moves again.
 
     ``init_ranks``/``start_step`` support mid-run resume from a checkpoint.
 
@@ -823,13 +784,14 @@ def pagerank(
     cluster this directory must be SHARED storage — the bsp state-residency
     contract (:func:`_pagerank_bsp`); host-local paths raise at entry.
     """
+    if kernel not in ("auto", "bsp", "df"):
+        raise ValueError(f"unknown pagerank kernel {kernel!r}; expected auto|bsp|df")
     spark = edges.sparkSession
     if checkpoint is None:
         checkpoint = EphemeralCheckpointer()
     adj_deg, deg, universe, no_dangling = _prepare(edges, vertices, directed)
     parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
 
-    side_dir = None
     with _no_aqe(spark):
         # persisted un-repartitioned: the bsp path re-buckets by vid range
         # and the df path re-keys through its own checkpoint, so a generic
@@ -861,7 +823,7 @@ def pagerank(
             if kernel == "bsp" and not dense:
                 raise ValueError(
                     f"bsp kernel needs dense non-negative vids (max vid {max_vid} vs "
-                    f"{n} vertices); use kernel='df' or 'csr'"
+                    f"{n} vertices); use kernel='df'"
                 )
             if dense:
                 # one CSR block per concurrent task slot (executor core):
@@ -904,34 +866,16 @@ def pagerank(
         # (known from the universe agg above): halves the bytes the
         # per-superstep rank exchange and contribution aggregation hash and
         # move (guide §2.3); the result is cast back to long on return
-        narrow = (
-            kernel == "df" and min_vid is not None and min_vid >= 0 and int(max_vid) < 2**31
-        )
-        if kernel == "csr":
-            # heavy relation written ONCE to bucket-partitioned parquet; the
-            # JVM never touches it again — reused Python workers load and
-            # keep their buckets resident across supersteps (module docstring)
-            buckets = num_buckets or parts
-            base_tmp = "/dev/shm" if os.path.isdir("/dev/shm") else None
-            side_dir = tempfile.mkdtemp(prefix="elektra-csr-", dir=base_tmp)
-            atexit.register(shutil.rmtree, side_dir, ignore_errors=True)
-            (
-                adj_deg.withColumn("bucket", F.pmod(F.hash("src"), F.lit(buckets)).cast("int"))
-                .repartition("bucket")
-                .write.mode("overwrite")
-                .partitionBy("bucket")
-                .parquet(side_dir)
+        narrow = min_vid is not None and min_vid >= 0 and int(max_vid) < 2**31
+        if narrow:
+            adj_deg = adj_deg.select(
+                F.col("src").cast("int").alias("src"),
+                F.col("dst").cast("int").alias("dst"),
+                "deg",
             )
-        else:
-            if narrow:
-                adj_deg = adj_deg.select(
-                    F.col("src").cast("int").alias("src"),
-                    F.col("dst").cast("int").alias("dst"),
-                    "deg",
-                )
-            # heavy relation: shuffled once, cached with its partitioning
-            adj_deg = adj_deg.repartition(parts, "src").persist()
-            adj_deg.count()
+        # heavy relation: shuffled once, cached with its partitioning
+        adj_deg = adj_deg.repartition(parts, "src").persist()
+        adj_deg.count()
 
         key_t = "int" if narrow else "long"
         universe_k = universe.select(F.col("vid").cast(key_t).alias("vid")) if narrow else universe
@@ -978,81 +922,40 @@ def pagerank(
 
         for step in range(start_step, start_step + n_iter):
             t0 = time.time()
-            dmass = 0.0
-            if has_dangling:
-                row = dangling.join(ranks, "vid").agg(F.sum("rank")).collect()[0][0]
-                dmass = float(row or 0.0)
-
-            if kernel == "csr":
-                partial = _csr_contrib(ranks, side_dir, buckets)
-            else:
-                partial = adj_deg.join(ranks.hint("shuffle_hash"), adj_deg.src == ranks.vid).select(
-                    "dst", (F.col("rank") / F.col("deg")).alias("c")
-                )
-            new_ranks = (
-                partial.groupBy("dst")
-                .agg(F.sum("c").alias("contrib"))
-                .select(
-                    F.col("dst").alias("vid"),
-                    (
-                        F.lit((1.0 - damping) / n)
-                        + F.lit(damping) * (F.col("contrib") + F.lit(dmass / n))
-                    ).alias("rank"),
-                )
+            contrib = (
+                adj_deg.join(ranks.hint("shuffle_hash"), adj_deg.src == ranks.vid)
+                .groupBy(F.col("dst").alias("vid"))
+                .agg(F.sum(F.col("rank") / F.col("deg")).alias("contrib"))
             )
             if has_no_in:
-                # same arithmetic the formula yields for contrib = 0.0
-                no_in_rank = (1.0 - damping) / n + damping * (dmass / n)
-                new_ranks = new_ranks.unionByName(
-                    no_in.select("vid", F.lit(no_in_rank).alias("rank"))
+                # contrib = 0.0 yields the closed-form base rank exactly
+                contrib = contrib.unionByName(no_in.select("vid", F.lit(0.0).alias("contrib")))
+            # dangling mass rides as a broadcast 1-row cross join (the
+            # ppr/hits pattern), so no superstep collects to the driver
+            if has_dangling:
+                dmc = dangling.join(ranks, "vid").agg(
+                    (F.coalesce(F.sum("rank"), F.lit(0.0)) / F.lit(float(n))).alias("dm")
                 )
+                contrib = contrib.crossJoin(F.broadcast(dmc))
+                dm_col = F.col("dm")
+            else:
+                dm_col = F.lit(0.0)
+            new_ranks = contrib.select(
+                "vid",
+                (
+                    F.lit((1.0 - damping) / n)
+                    + F.lit(damping) * (F.col("contrib") + dm_col)
+                ).alias("rank"),
+            )
             ranks = checkpoint(new_ranks, step + 1)
             if on_superstep is not None:
                 on_superstep(step, -1, time.time() - t0)
-        if kernel != "csr":
-            adj_deg.unpersist()
+        adj_deg.unpersist()
         universe.unpersist()
         if dangling is not None:
             dangling.unpersist()
+        if directed:
+            no_in.unpersist()
     if narrow:
         ranks = ranks.select(F.col("vid").cast("long").alias("vid"), "rank")
     return ranks
-
-
-def _csr_contrib(ranks: DataFrame, side_dir: str, buckets: int) -> DataFrame:
-    """Per-bucket vectorized contribution kernel (north-star CSR path).
-
-    Hash-shuffles ONLY the rank table to its bucket; the bucket's CSR block
-    (written once at prepare time, loaded/encoded once per reused worker —
-    :func:`_load_csr_bucket`) supplies the adjacency. Each bucket is one
-    vectorized gather (``rank/deg`` by source code) + ``np.bincount`` scatter
-    over dst codes — no per-row Python, and in steady state no fresh buffers
-    beyond the ~16 B/vertex rank batch (the robustness property the kernel
-    exists for: see module docstring).
-    """
-    ranks_b = ranks.withColumn("bucket", F.pmod(F.hash("vid"), F.lit(buckets)).cast("int"))
-
-    def kernel(key, ranks_pdf):
-        import numpy as np
-
-        blk = _load_csr_bucket(side_dir, int(key[0]))
-        if blk is None or len(ranks_pdf) == 0:
-            return pd.DataFrame({"dst": pd.Series(dtype="int64"), "c": pd.Series(dtype="float64")})
-        u_src, u_invdeg, src_code, u_dst, dst_code = blk
-        rvid = ranks_pdf["vid"].to_numpy(dtype=np.int64)
-        rval = ranks_pdf["rank"].to_numpy(dtype=np.float64)
-        order = np.argsort(rvid)
-        rvid_sorted = rvid[order]
-        pos = np.searchsorted(rvid_sorted, u_src)
-        bad = (pos >= len(rvid_sorted)) | (rvid_sorted[np.minimum(pos, len(rvid_sorted) - 1)] != u_src)
-        if bad.any():
-            # universe/adjacency mismatch must fail loudly, not corrupt ranks
-            raise ValueError(
-                f"{int(bad.sum())} adjacency sources missing from the rank table bucket "
-                "(vertices must cover all edge endpoints)"
-            )
-        r_u = rval[order][pos] * u_invdeg
-        sums = np.bincount(dst_code, weights=r_u[src_code], minlength=len(u_dst))
-        return pd.DataFrame({"dst": u_dst, "c": sums})
-
-    return ranks_b.groupBy("bucket").applyInPandas(kernel, "dst long, c double")

@@ -41,6 +41,13 @@ def test_cc_random_graph(spark, kernel):
     assert got == cc_oracle(pairs, vids=range(n))
 
 
+@pytest.mark.parametrize("kernel", ["bsp", "CSR", "bogus"])
+def test_cc_rejects_unknown_kernel(spark, kernel):
+    edges = edges_from_pairs(spark, HOUSE)
+    with pytest.raises(ValueError, match=r"auto\|csr\|df"):
+        connected_components(edges, kernel=kernel)
+
+
 def test_cc_long_chain_converges_fast(spark):
     """A 512-vertex path must converge in O(log n) supersteps, not O(n) —
     pointer jumping is load-bearing for conversation chains up to length 200."""

@@ -10,7 +10,7 @@ import zipfile
 def test_make_pyfiles_zip(tmp_path):
     from tools.make_pyfiles import main as make
 
-    zpath = make()
+    zpath = make(str(tmp_path / "dist"))
     assert os.path.exists(zpath)
     names = zipfile.ZipFile(zpath).namelist()
     assert "elektra_spark/operators/cc.py" in names
@@ -23,8 +23,8 @@ def test_cli_spark_submit_cc_roundtrip(tmp_path):
     production invocation: zip on --py-files, thin main.py driver."""
     from tools.make_pyfiles import main as make
 
-    make()
-    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    dist = str(tmp_path / "dist")
+    make(dist)
     out = str(tmp_path / "labels")
     env = {**os.environ, "SPARK_GRAFT_CPUS": "2", "SPARK_GRAFT_SHUFFLE_PARTITIONS": "4",
            "PYSPARK_PYTHON": sys.executable}
@@ -35,8 +35,8 @@ def test_cli_spark_submit_cc_roundtrip(tmp_path):
         spark_submit = os.path.join(os.path.dirname(pyspark.__file__), "bin", "spark-submit")
     r = subprocess.run(
         [spark_submit, "--master", "local[2]",
-         "--py-files", os.path.join(root, "dist", "elektra_spark.zip"),
-         os.path.join(root, "dist", "main.py"),
+         "--py-files", os.path.join(dist, "elektra_spark.zip"),
+         os.path.join(dist, "main.py"),
          "cc", "--synth-convs", "20", "--output", out],
         capture_output=True, text=True, timeout=300, env=env, cwd=str(tmp_path),
     )

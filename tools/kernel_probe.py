@@ -1,6 +1,6 @@
 """Instrumented PageRank-kernel probe: one fresh JVM per invocation.
 
-Usage: python tools/kernel_probe.py <cores> <edges_parquet> <n_iter> <kernel>
+Usage: python tools/kernel_probe.py <cores> <edges_parquet> <n_iter> <df|bsp>
        <out_json> [verts_parquet]
 
 Runs ``n_iter`` PageRank supersteps with the given kernel and records, per

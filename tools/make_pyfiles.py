@@ -2,6 +2,9 @@
 
     python tools/make_pyfiles.py
     spark-submit --py-files dist/elektra_spark.zip dist/main.py cc --synth-convs 1000
+
+``dist/`` is a build output and is not tracked; ``main(dist)`` builds into
+another directory.
 """
 
 from __future__ import annotations
@@ -13,8 +16,7 @@ import zipfile
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
-def main() -> str:
-    dist = os.path.join(ROOT, "dist")
+def main(dist: str = os.path.join(ROOT, "dist")) -> str:
     os.makedirs(dist, exist_ok=True)
     zpath = os.path.join(dist, "elektra_spark.zip")
     with zipfile.ZipFile(zpath, "w", zipfile.ZIP_DEFLATED) as z:
