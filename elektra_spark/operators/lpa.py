@@ -10,21 +10,52 @@ are pinned down so results are **exactly** reproducible against the oracle:
 - deterministic tiebreak: highest neighbor-label frequency, then minimum
   label.
 
-The vote is a two-level aggregation: ``groupBy(vid, label).count`` (map-side
-combinable — hub fan-in becomes one combiner entry per map partition) then an
-argmax via ``max(struct(cnt, -label))``, which encodes the
-frequency-then-min-label order as a single lexicographic max (min-aggregates
-are the BSP analogue of the reference's write_min, utilities/cas.h).
+On Spark the vote is a two-level aggregation: ``groupBy(vid, label).count``
+(map-side combinable — hub fan-in becomes one combiner entry per map
+partition) then an argmax via ``max(struct(cnt, -label))``, which encodes
+the frequency-then-min-label order as a single lexicographic max
+(min-aggregates are the BSP analogue of the reference's write_min,
+utilities/cas.h).
+
+A graph of at most ``driver_tier.SMALL_GRAPH_MAX`` edges and vertices, run
+with no checkpointer, takes the driver tier instead (:mod:`.driver_tier`):
+one count job, one collect, then the same vote per round in NumPy
+(:func:`_np_vote`) with no Spark superstep. A checkpointed (durable) run
+always stays on Spark, so it still commits every superstep.
 """
 
 from __future__ import annotations
 
 import time
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from . import driver_tier
 from .cc import CheckpointFn, EphemeralCheckpointer, SuperstepHook, _no_aqe
+
+
+def _np_vote(s, d, labels):
+    """One synchronous round over the dense arc list ``s → d``: each vertex
+    with a neighbour takes the most frequent neighbour label, ties to the
+    minimum label; a vertex with no neighbour keeps its label."""
+    if len(s) == 0:
+        return labels
+    lab = labels[s]
+    order = np.lexsort((lab, d))
+    dd, ll = d[order], lab[order]
+    starts = np.flatnonzero(np.r_[True, (dd[1:] != dd[:-1]) | (ll[1:] != ll[:-1])])
+    cnt = np.diff(np.r_[starts, len(dd)])
+    rd, rl = dd[starts], ll[starts]
+    # per vertex: highest count first, then the minimum label
+    best = np.lexsort((rl, -cnt, rd))
+    rd, rl = rd[best], rl[best]
+    first = np.r_[True, rd[1:] != rd[:-1]]
+    out = labels.copy()
+    out[rd[first]] = rl[first]
+    return out
 
 
 def label_propagation(
@@ -36,7 +67,28 @@ def label_propagation(
     start_step: int = 0,
     init_labels: DataFrame | None = None,
 ) -> DataFrame:
-    """→ (vid, label) after exactly ``rounds`` synchronous supersteps."""
+    """→ (vid, label) after exactly ``rounds`` synchronous supersteps.
+
+    The vertex set is ``init_labels``' vids on a warm start, else
+    ``vertices``, else every edge endpoint. Without a ``checkpoint``, a
+    graph within ``driver_tier.SMALL_GRAPH_MAX`` runs on the driver."""
+    if checkpoint is None:
+        g = (
+            driver_tier.collect_small(edges, vertices)
+            if init_labels is None
+            else driver_tier.collect_small(edges, init_labels, value="label")
+        )
+        if g is not None:
+            s, d = np.concatenate([g.src, g.dst]), np.concatenate([g.dst, g.src])
+            labels = g.vids if g.values is None else g.values.astype(np.int64)
+            for step in range(start_step, start_step + rounds):
+                t0 = time.time()
+                labels = _np_vote(s, d, labels)
+                if on_superstep is not None:
+                    on_superstep(step, -1, time.time() - t0)
+            return edges.sparkSession.createDataFrame(
+                pd.DataFrame({"vid": g.vids, "label": labels}), "vid long, label long"
+            )
     both = edges.select("src", "dst").union(edges.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
     if vertices is not None:
         universe = vertices.select("vid")

@@ -11,8 +11,13 @@ Superstep (BSP):
     dangling_mass = Σ_{deg[v]=0} rank[v]            (scalar accumulator)
     rank'[v]      = (1−d)/n + d·(contrib[v] + dangling_mass/n)
 
-Two execution kernels, identical results (``kernel='auto'`` default picks
-``bsp`` for dense vid spaces, ``df`` otherwise):
+``kernel='auto'`` (the default) runs a graph of at most
+``driver_tier.SMALL_GRAPH_MAX`` edges and vertices on the driver in NumPy
+when nothing else was asked for (no checkpointer, no ``bsp_prep_dir``):
+:func:`_pagerank_small`, the same power iteration with no Spark superstep
+(:mod:`.driver_tier`). Larger graphs, and any call with a checkpointer or a
+prep dir, run one of two Spark kernels with identical results — ``bsp`` for
+dense vid spaces, ``df`` otherwise:
 
 - ``bsp`` — **the scale/robustness path** (north-star wording: "edges
   materialized as per-partition CSR blocks inside pandas/Arrow UDFs so each
@@ -70,6 +75,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from . import driver_tier
 from .cc import CheckpointFn, EphemeralCheckpointer, SuperstepHook, _no_aqe
 
 # Worker-resident CSR block cache for the bsp kernel: lives at module
@@ -281,6 +287,21 @@ def _backfill_bsp_encodes(side_dir: str, bucket: int, n_owned: int) -> None:
             np.save(path, defaults.get(name, np.empty(0, np.int32)))
 
 
+def _rank_update(w, src, dst, n: int, base: float, damping: float, extra=()):
+    """One power-iteration step over ``n`` dense slots, shared by bsp stage B
+    and the driver tier: bincount-scatter the weighted ranks ``w``
+    (rank / out-degree) along ``src → dst``, add the ``extra`` contribution
+    vectors in order (bsp's received messages), then
+    ``base + damping · contrib``. ``base`` carries the teleport and dangling
+    terms, ``(1−d)/n + d·dangling_mass/n``."""
+    import numpy as np
+
+    contrib = np.bincount(dst, weights=w[src], minlength=n)
+    for c in extra:
+        contrib = contrib + c
+    return base + damping * contrib
+
+
 def _rw_state(path: str, arr=None, count: int = 0):
     """Read or in-place-overwrite a raw float64 state file. Overwrite (not
     recreate) is the point: tmpfs pages stay allocated across supersteps, so
@@ -366,18 +387,23 @@ def _pagerank_bsp(
 
     Superstep = ONE Spark job chaining two Arrow stages:
       stage A (per source bucket): read the bucket's current rank file,
-        emit the minimized cross rows (tb, dst, c) + mirror value rows + a
-        sentinel row per bucket (reads only — writes nothing);
-      stage B (per target bucket): read the same current rank file,
+        emit the minimized cross rows (tb, dst, c) + mirror value rows + one
+        row per target bucket carrying this bucket's dangling mass (reads
+        only — writes nothing; on a universe ``_prepare`` proved
+        dangling-free, ``no_dangling``, one zero row to its own bucket);
+      stage B (per target bucket): read the same current rank file, sum the
+        B dangling partials it received (``math.fsum``, so every bucket
+        gets the same scalar whatever order the shuffle delivers),
         bincount-scatter the bucket's own in-range contributions over the
         resident CSR, add the received message rows, apply the
-        damping/dangling formula, ping-pong-write the next rank file, emit
-        (bucket, sum_rank, max_delta).
-    With dangling vertices present the superstep needs the global dangling
-    scalar between the stages, so it splits into two jobs (stage A persisted,
-    scalar collected, stage B applied) — same dangling-mass semantics as the
-    df kernel, and still write-free until stage B.
+        damping/dangling formula (:func:`_rank_update`), ping-pong-write the
+        next rank file, emit (bucket, sum_rank, max_delta).
+    The partial rows also guarantee every target bucket a stage-B group, so
+    no driver round-trip sits between the stages — same dangling-mass
+    semantics as the df kernel.
     """
+    import math
+
     import numpy as np
 
     B = buckets
@@ -413,7 +439,6 @@ def _pagerank_bsp(
     # exact long integer division (Python's // on the worker side must agree
     # bit-for-bit; float division would mis-bucket boundary vids)
     bucket_of = lambda name: F.expr(f"cast(({name} * {B}) div {n_slots} as int)")  # noqa: E731
-    dang_total = None
     if not prep_ok:
         # Prep = two chained shuffles straight into the encode kernels
         # (guide §2.4/§4): the adjacency is shuffled by source bucket into
@@ -453,34 +478,21 @@ def _pagerank_bsp(
             .collect()
         )
 
-        # membership masks + structural dangling counts in the same pass
-        # (dangling = masked slot with no out-edge; inv_owned was written by
-        # the encode job above). The total is stamped into the prep dir so a
-        # reusing run skips the probe job entirely.
+        # universe membership masks
         def mask_task(key, pdf):
             b = int(key[0])
             lo, hi = _bsp_range(b, n_slots, B)
             mask = np.zeros(hi - lo, dtype=np.uint8)
             mask[pdf["vid"].to_numpy(np.int64) - lo] = 1
             mask.tofile(os.path.join(side_dir, f"mask_{b}.bin"))
-            inv_p = os.path.join(side_dir, f"enc_{b}_inv_owned.npy")
-            if os.path.exists(inv_p):
-                inv = np.load(inv_p, mmap_mode="r")
-                nd = int((mask.view(bool) & (inv == 0.0)).sum())
-            else:
-                nd = int(mask.sum())  # no edges in this bucket: all dangling
-            return pd.DataFrame({"bucket": [b], "n_dangling": [nd]})
+            return pd.DataFrame({"bucket": [b]})
 
-        dang_total = int(
+        (
             universe.withColumn("bucket", bucket_of("vid"))
             .groupBy("bucket")
-            .applyInPandas(mask_task, "bucket int, n_dangling long")
-            .agg(F.sum("n_dangling"))
-            .collect()[0][0]
-            or 0
+            .applyInPandas(mask_task, "bucket int")
+            .collect()
         )
-        with open(os.path.join(side_dir, "_N_DANGLING"), "w") as df_:
-            df_.write(str(dang_total))
     init_dir = None
     if init_ranks is not None:
         init_dir = os.path.join(side_dir, "init")
@@ -522,33 +534,6 @@ def _pagerank_bsp(
         with open(os.path.join(side_dir, "_PREP_DONE"), "w") as mf:
             mf.write(marker_val)
 
-    # dangling = universe vertices with no outgoing edge; a deg-derived
-    # universe proves there are none without a probe job (_prepare), a
-    # fresh prep counted them in mask_task, and a reused prep stamped the
-    # total into _N_DANGLING; only a pre-stamp legacy prep dir still pays
-    # the structural probe job (inv_deg==0 under the membership mask)
-    if no_dangling:
-        has_dangling = False
-    elif dang_total is not None:
-        has_dangling = dang_total > 0
-    elif os.path.exists(os.path.join(side_dir, "_N_DANGLING")):
-        with open(os.path.join(side_dir, "_N_DANGLING")) as df_:
-            has_dangling = int(df_.read()) > 0
-    else:
-        def dangling_probe(key, pdf):
-            b = int(key[0])
-            blk = _load_bsp_bucket(side_dir, b, n_slots, B)
-            mask, inv_owned = blk[2], blk[3]
-            return pd.DataFrame({"bucket": [b], "n_dangling": [int((mask & (inv_owned == 0.0)).sum())]})
-
-        has_dangling = (
-            drv.groupBy("bucket")
-            .applyInPandas(dangling_probe, "bucket int, n_dangling long")
-            .agg(F.sum("n_dangling"))
-            .collect()[0][0]
-            > 0
-        )
-
     def make_stage_a(step: int):
         p = step % 2
 
@@ -568,36 +553,31 @@ def _pagerank_bsp(
             ccontrib = np.bincount(
                 cross_code, weights=w[src_cross], minlength=len(ucross_dst)
             )
-            out = {
+            # this bucket's dangling mass (masked slots with no out-edge),
+            # one dst=-1 row per target bucket; with no dangling vertex one
+            # zero row to its own bucket still gives that bucket a stage-B
+            # group
+            if no_dangling:
+                dtb, dpart = np.array([b], np.int32), 0.0
+            else:
+                dtb, dpart = np.arange(B, dtype=np.int32), float(rank[mask & (inv_owned == 0.0)].sum())
+            return pd.DataFrame({
                 # mirrored sources ship their w VALUE (m=True; dst = source
                 # vid); the target applies it over its resident mirror edges
-                "tb": np.concatenate([ucross_tb, mir_tb, np.array([b], np.int32)]),
+                "tb": np.concatenate([ucross_tb, mir_tb, dtb]),
                 "dst": np.concatenate(
-                    [ucross_dst, lo + mir_src_local.astype(np.int64), np.array([-1], np.int64)]
+                    [ucross_dst, lo + mir_src_local.astype(np.int64), np.full(len(dtb), -1, np.int64)]
                 ),
-                "c": np.concatenate([ccontrib, w[mir_src_local], np.array([0.0])]),
+                "c": np.concatenate([ccontrib, w[mir_src_local], np.full(len(dtb), dpart)]),
                 "m": np.concatenate(
-                    [
-                        np.zeros(len(ucross_dst), bool),
-                        np.ones(len(mir_src_local), bool),
-                        np.array([False]),
-                    ]
+                    [np.zeros(len(ucross_dst), bool), np.ones(len(mir_src_local), bool), np.zeros(len(dtb), bool)]
                 ),
-            }
-            if has_dangling:
-                out["tb"] = np.concatenate([out["tb"], np.array([-2], np.int32)])
-                out["dst"] = np.concatenate([out["dst"], np.array([-1], np.int64)])
-                out["c"] = np.concatenate(
-                    [out["c"], np.array([float(rank[mask & (inv_owned == 0.0)].sum())])]
-                )
-                out["m"] = np.concatenate([out["m"], np.array([False])])
-            return pd.DataFrame(out)
+            })
 
         return stage_a
 
-    def make_stage_b(step: int, dmass: float):
+    def make_stage_b(step: int):
         p, q = step % 2, (step + 1) % 2
-        base = (1.0 - damping) / n + damping * dmass / n
 
         def stage_b(key, pdf):
             b = int(key[0])
@@ -607,22 +587,18 @@ def _pagerank_bsp(
                 _mir_src_local, _mir_tb, u_msrc, m_code, m_dst_local,
             ) = _load_bsp_bucket(side_dir, b, n_slots, B)
             old = _rw_state(os.path.join(side_dir, f"rank_{p}_{b}.bin"), count=n_owned)
-            # the bucket's own in-range gather-scatter lives HERE, in the
-            # same task that consumes the bucket's message inbox and writes
-            # its next rank file: within a superstep the only cross-task
-            # dataflow is the shuffled message relation (docstring contract)
-            w = old * inv_owned
-            contrib = np.bincount(dst_in, weights=w[src_in], minlength=n_owned)
             dsts = pdf["dst"].to_numpy()
             cs = pdf["c"].to_numpy()
             mm = pdf["m"].to_numpy()
+            dmass = math.fsum(cs[dsts < 0])
+            extra = []
             real = (dsts >= 0) & ~mm
             if real.any():
-                contrib = contrib + np.bincount(
+                extra.append(np.bincount(
                     (dsts[real] - lo).astype(np.int64),
                     weights=cs[real],
                     minlength=n_owned,
-                )
+                ))
             if mm.any():
                 # mirrored-source values applied over the resident mirror
                 # edges (loader docstring): align received (src, w) rows to
@@ -634,10 +610,15 @@ def _pagerank_bsp(
                     # must fail loudly, not silently misroute rank mass
                     raise ValueError("mirror-source row without resident mirror edges")
                 wvec[pos] = cs[mm]
-                contrib = contrib + np.bincount(
-                    m_dst_local, weights=wvec[m_code], minlength=n_owned
-                )
-            new = np.where(mask, base + damping * contrib, 0.0)
+                extra.append(np.bincount(m_dst_local, weights=wvec[m_code], minlength=n_owned))
+            # the bucket's own in-range gather-scatter lives HERE, in the
+            # same task that consumes the bucket's message inbox and writes
+            # its next rank file: within a superstep the only cross-task
+            # dataflow is the shuffled message relation (docstring contract)
+            base = (1.0 - damping) / n + damping * dmass / n
+            new = np.where(
+                mask, _rank_update(old * inv_owned, src_in, dst_in, n_owned, base, damping, extra), 0.0
+            )
             _rw_state(os.path.join(side_dir, f"rank_{q}_{b}.bin"), new)
             delta = float(np.abs(new - old).max()) if n_owned else 0.0
             return pd.DataFrame(
@@ -674,19 +655,13 @@ def _pagerank_bsp(
     b_schema = "bucket int, sum_rank double, max_delta double"
     for step in range(start_step, start_step + n_iter):
         t0 = time.time()
-        a_out = drv.groupBy("bucket").applyInPandas(make_stage_a(step), a_schema)
-        if has_dangling:
-            a_out = a_out.persist()
-            dmass = (
-                a_out.filter(F.col("tb") == -2).agg(F.sum("c")).collect()[0][0] or 0.0
-            )
-            msgs = a_out.filter(F.col("tb") >= 0)
-        else:
-            dmass, msgs = 0.0, a_out
-        stage_b = make_stage_b(step, dmass)
-        stats = msgs.groupBy("tb").applyInPandas(stage_b, b_schema).collect()
-        if has_dangling:
-            a_out.unpersist()
+        (
+            drv.groupBy("bucket")
+            .applyInPandas(make_stage_a(step), a_schema)
+            .groupBy("tb")
+            .applyInPandas(make_stage_b(step), b_schema)
+            .collect()
+        )
         if durable:
             committed = checkpoint(
                 drv.groupBy("bucket").applyInPandas(make_emit(step + 1), "vid long, rank double"),
@@ -701,6 +676,31 @@ def _pagerank_bsp(
         make_emit(start_step + n_iter), "vid long, rank double"
     )
     return checkpoint(final, start_step + n_iter)
+
+
+def _pagerank_small(spark, g, damping, n_iter, directed, on_superstep, start_step):
+    """The driver tier (:mod:`.driver_tier`): the oracle-shaped power
+    iteration over a collected graph — ``bincount`` scatter, uniform
+    dangling redistribution, warm start from ``g.values`` (ranks absent from
+    ``init_ranks`` start at 0, as in the Spark kernels) — through the same
+    :func:`_rank_update` step as bsp stage B."""
+    import numpy as np
+
+    n = len(g.vids)
+    src, dst = g.src, g.dst
+    if not directed:
+        src, dst = np.concatenate([src, dst]), np.concatenate([dst, src])
+    deg = np.bincount(src, minlength=n)
+    inv_deg = np.divide(1.0, deg, out=np.zeros(n), where=deg > 0)
+    dangling = deg == 0
+    rank = np.full(n, 1.0 / n) if g.values is None else np.nan_to_num(g.values.astype(np.float64))
+    for step in range(start_step, start_step + n_iter):
+        t0 = time.time()
+        base = (1.0 - damping) / n + damping * float(rank[dangling].sum()) / n
+        rank = _rank_update(rank * inv_deg, src, dst, n, base, damping)
+        if on_superstep is not None:
+            on_superstep(step, -1, time.time() - t0)
+    return spark.createDataFrame(pd.DataFrame({"vid": g.vids, "rank": rank}), "vid long, rank double")
 
 
 def _prepare(edges: DataFrame, vertices: DataFrame | None, directed: bool):
@@ -749,12 +749,14 @@ def pagerank(
     """PageRank → (vid, rank), ranks sum to 1. Fixed ``n_iter`` supersteps so
     engine and oracle execute the identical schedule.
 
-    ``kernel``: ``'auto'`` (default) dispatches to ``'bsp'`` when the vid
-    space is dense (max vid + 1 ≤ 4× vertex count, non-negative — true for
-    derive_graph outputs) and ``'df'`` otherwise; ``'bsp'``/``'df'`` force a
-    kernel (module docstring has the design + measured trade-offs; ``'bsp'``
-    raises on sparse vid spaces rather than burning slot files). Any other
-    name raises ``ValueError``.
+    ``kernel``: ``'auto'`` (default) tries, in order, the driver tier
+    (:func:`_pagerank_small`: at most ``driver_tier.SMALL_GRAPH_MAX`` edges
+    and vertices, and only with no ``checkpoint`` and no ``bsp_prep_dir``),
+    then ``'bsp'`` when the vid space is dense (max vid + 1 ≤ 4× vertex
+    count, non-negative — true for derive_graph outputs), then ``'df'``;
+    ``'bsp'``/``'df'`` force a Spark kernel (module docstring has the design
+    + measured trade-offs; ``'bsp'`` raises on sparse vid spaces rather than
+    burning slot files). Any other name raises ``ValueError``.
 
     Superstep plan shape (df kernel): the adjacency is hash-repartitioned by
     ``src`` **once** and cached; the cached scan advertises that partitioning,
@@ -787,6 +789,7 @@ def pagerank(
     if kernel not in ("auto", "bsp", "df"):
         raise ValueError(f"unknown pagerank kernel {kernel!r}; expected auto|bsp|df")
     spark = edges.sparkSession
+    small_ok = kernel == "auto" and checkpoint is None and bsp_prep_dir is None
     if checkpoint is None:
         checkpoint = EphemeralCheckpointer()
     adj_deg, deg, universe, no_dangling = _prepare(edges, vertices, directed)
@@ -812,11 +815,32 @@ def pagerank(
                     F.sum(F.xxhash64("vid").cast("decimal(38,0)")), F.lit(0)
                 )
             )
-        row = universe.agg(*agg_cols).collect()[0]
+        stats = universe.agg(*agg_cols)
+        if small_ok:
+            # the driver tier's edge count rides the same job as a second
+            # row, so its bound costs no job of its own
+            stats = stats.union(
+                edges.agg(F.count("*"), *[F.lit(None)] * (len(agg_cols) - 1))
+            )
+        rows = stats.collect()
+        row = rows[0]
         n, max_vid, min_vid = int(row[0]), row[1], row[2]
         vfp = f"{n}:{int(row[3])}" if need_vfp else None
         if n == 0:
             return spark.createDataFrame([], "vid long, rank double")
+        # both sizes are known here, so a graph over the bound pays no probe
+        # job; the probe collects the persisted universe, with the
+        # warm-start ranks joined on
+        if small_ok:
+            sizes = (int(rows[1][0]), n)
+            if init_ranks is None:
+                g = driver_tier.collect_small(edges, universe, sizes=sizes)
+            else:
+                warm = universe.join(init_ranks.select("vid", "rank"), "vid", "left")
+                g = driver_tier.collect_small(edges, warm, value="rank", sizes=sizes)
+            if g is not None:
+                universe.unpersist()
+                return _pagerank_small(spark, g, damping, n_iter, directed, on_superstep, start_step)
         if kernel in ("bsp", "auto"):
             n_slots = int(max_vid) + 1
             dense = min_vid is not None and min_vid >= 0 and n_slots <= 4 * n

@@ -63,10 +63,11 @@ def spanning_forest_invariants(forest, edges, vids=None) -> None:
         assert uf.find(v) == lbl, f"forest does not span: {v} -> {uf.find(v)} != {lbl}"
 
 
-def pagerank_oracle(edges, n_or_vids, damping=0.85, iters=100, tol=None, directed=False):
+def pagerank_oracle(edges, n_or_vids, damping=0.85, iters=100, tol=None, directed=False, init=None):
     """Dense power iteration with uniform dangling-mass redistribution.
 
-    Returns dict vid → rank (ranks sum to 1).
+    ``init`` (vid → rank) warm-starts the iteration; vertices it omits start
+    at 0. Returns dict vid → rank (ranks sum to 1 from a uniform start).
     """
     if np.isscalar(n_or_vids):
         vids = np.arange(int(n_or_vids))
@@ -81,6 +82,8 @@ def pagerank_oracle(edges, n_or_vids, damping=0.85, iters=100, tol=None, directe
             out[idx[int(v)]].append(idx[int(u)])
     deg = np.array([len(o) for o in out], dtype=np.float64)
     r = np.full(n, 1.0 / n)
+    if init is not None:
+        r = np.array([float(init.get(int(v), 0.0)) for v in vids])
     for _ in range(iters):
         new = np.zeros(n)
         for i, targets in enumerate(out):
@@ -97,17 +100,25 @@ def pagerank_oracle(edges, n_or_vids, damping=0.85, iters=100, tol=None, directe
     return {int(v): float(r[idx[int(v)]]) for v in vids}
 
 
-def lpa_oracle(edges, vids=None, rounds=5):
+def lpa_oracle(edges, vids=None, rounds=5, init=None):
     """Synchronous label propagation, frequency-then-min-label tiebreak
-    (SURVEY.md §2.7). Returns vid → label after `rounds` supersteps."""
+    (SURVEY.md §2.7). Returns vid → label after `rounds` supersteps.
+
+    ``init`` (vid → label) warm-starts the run: its vids are the vertex set
+    and edges with an endpoint outside it carry no vote."""
     universe = set(int(v) for v in (vids or []))
     adj: dict[int, list[int]] = {}
     for u, v in edges:
         u, v = int(u), int(v)
+        if init is not None and (u not in init or v not in init):
+            continue
         universe.update((u, v))
         adj.setdefault(u, []).append(v)
         adj.setdefault(v, []).append(u)
     labels = {v: v for v in universe}
+    if init is not None:
+        labels = {int(v): int(lab) for v, lab in init.items()}
+        universe = set(labels)
     for _ in range(rounds):
         new = {}
         for v in universe:

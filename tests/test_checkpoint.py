@@ -57,7 +57,7 @@ def test_pagerank_resume_equals_uninterrupted(spark, tmp_path):
     # EVERY superstep is individually durable (a kill after superstep k
     # resumes from k, not from scratch) — this pins the bsp kernel's
     # per-superstep catalog commits, not just the end-of-run snapshot
-    # (CHAIN's dense vids route kernel='auto' to bsp)
+    # (with a checkpointer, CHAIN's dense vids route kernel='auto' to bsp)
     ops = {s["operation"] for s in run.catalog.history("run1_ranks")}
     assert {f"superstep={i}" for i in range(1, 5)} <= ops
 
@@ -69,7 +69,7 @@ def test_pagerank_resume_equals_uninterrupted(spark, tmp_path):
         init_ranks=run.load("ranks"),
         checkpoint=run.checkpoint_fn("ranks"),
     )
-    full = pagerank(edges, n_iter=8)
+    full = pagerank(edges, n_iter=8, kernel="bsp")
     a = {r["vid"]: r["rank"] for r in resumed.collect()}
     b = {r["vid"]: r["rank"] for r in full.collect()}
     assert a.keys() == b.keys()

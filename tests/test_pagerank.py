@@ -16,7 +16,12 @@ def _ranks_dict(df):
     return {r["vid"]: r["rank"] for r in df.collect()}
 
 
-@pytest.mark.parametrize("kernel", ["df", "bsp"])
+# "auto" takes the driver tier on these small graphs; with the tier off it
+# would pick bsp (dense vids), so the "bsp" leg is its Spark counterpart
+KERNELS = ["df", "bsp", "auto"]
+
+
+@pytest.mark.parametrize("kernel", KERNELS)
 def test_pagerank_house(spark, kernel):
     edges = edges_from_pairs(spark, HOUSE)
     got = _ranks_dict(pagerank(edges, n_iter=30, kernel=kernel))
@@ -27,7 +32,7 @@ def test_pagerank_house(spark, kernel):
     assert abs(sum(got.values()) - 1.0) < 1e-9
 
 
-@pytest.mark.parametrize("kernel", ["df", "bsp"])
+@pytest.mark.parametrize("kernel", KERNELS)
 def test_pagerank_with_dangling(spark, kernel):
     """Isolated vertices hold dangling mass that must be redistributed."""
     pairs = [(0, 1), (1, 2)]
@@ -40,7 +45,7 @@ def test_pagerank_with_dangling(spark, kernel):
     assert abs(sum(got.values()) - 1.0) < 1e-9
 
 
-@pytest.mark.parametrize("kernel", ["df", "bsp"])
+@pytest.mark.parametrize("kernel", KERNELS)
 def test_pagerank_directed(spark, kernel):
     """Directed ranks: 3 is a sink (its mass is redistributed as dangling),
     4 has no in-edge (base rank only) and 5 is isolated (both)."""
