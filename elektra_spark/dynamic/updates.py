@@ -36,6 +36,9 @@ from ..operators.cc import _np_min_labels, connected_components
 from ..operators.forest import _np_forest_winners, spanning_forest
 from ..tables import SnapshotCatalog
 
+# a delete's affected slice is solved on the driver up to this many edges AND vertices
+DELETE_SLICE_MAX = 5_000_000
+
 
 def _solve_contracted_driver(pdf: pd.DataFrame):
     """Driver-side solve of the contracted batch (sequential-fallback trade,
@@ -354,13 +357,15 @@ class DynamicGraph:
         # bit-identical to the distributed one while replacing ~10 fixed-
         # cost jobs with two bounded collects (guide §1.2 / the reference's
         # own sequential-fallback trade, euler_tour_tree.h:279).
-        sub_pdf = sub_edges.limit(5_000_001).toPandas()
+        sub_pdf = sub_edges.limit(DELETE_SLICE_MAX + 1).toPandas()
+        vpdf = None
+        if len(sub_pdf) <= DELETE_SLICE_MAX:
+            vpdf = sub_vertices.limit(DELETE_SLICE_MAX + 1).toPandas()
         new_sub_labels = new_sub_forest = None
-        if len(sub_pdf) <= 5_000_000:
+        if vpdf is not None and len(vpdf) <= DELETE_SLICE_MAX:
             import numpy as np
 
             spark = batch.sparkSession
-            vpdf = sub_vertices.toPandas()
             es = sub_pdf["src"].to_numpy(dtype=np.int64)
             ed = sub_pdf["dst"].to_numpy(dtype=np.int64)
             uverts = vpdf["vid"].to_numpy(dtype=np.int64)

@@ -37,7 +37,7 @@ import time
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .cc import CheckpointFn, RetainedCheckpointer, SuperstepHook, _no_aqe
+from ..checkpoint import CheckpointFn, RetainedCheckpointer, SuperstepHook, _no_aqe
 
 # rho for a zero mantissa (md5 chars 3..15 all zero — probability 2^-52);
 # also the max trailing-zero count + 1 the 52-bit slice can produce

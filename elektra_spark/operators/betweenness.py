@@ -48,7 +48,7 @@ import time
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .cc import CheckpointFn, RetainedCheckpointer, SuperstepHook, _no_aqe
+from ..checkpoint import CheckpointFn, RetainedCheckpointer, SuperstepHook, _no_aqe
 
 
 def betweenness(

@@ -40,7 +40,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .cc import CheckpointFn, SuperstepHook, connected_components
+from ..checkpoint import CheckpointFn, SuperstepHook
+from .cc import connected_components
 
 
 def bipartite_components(

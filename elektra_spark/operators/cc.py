@@ -26,7 +26,8 @@ Euler-tour point updates, SURVEY.md §7.1):
    ``find_compress``, elektra union_find.h:188-205). Min-aggregation is the
    BSP analogue of the reference's ``write_min`` CAS (utilities/cas.h).
    Converges in O(log n) supersteps; each superstep's labels are materialized
-   (checkpointed) to truncate lineage.
+   by the ``checkpoint=`` function to truncate lineage (the superstep
+   materializers and the durable run live in :mod:`elektra_spark.checkpoint`).
 
 At 100 TB: the heavy relation (edges) is shuffled **once** (the range
 partition); supersteps shuffle only the label table, which shrinks to the
@@ -36,158 +37,15 @@ a fully map-side-combinable aggregate.
 
 from __future__ import annotations
 
-import os
-import shutil
 import time
 from collections.abc import Callable, Iterator
-from contextlib import contextmanager
 from typing import Any
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-
-@contextmanager
-def _no_aqe(spark: SparkSession):
-    """Disable AQE for the duration of an iterative fixpoint loop.
-
-    AQE re-optimizes at every exchange, turning each superstep into several
-    jobs; for the fixpoint the per-superstep relations are the (small) label /
-    quotient tables, the join keys are min-aggregated (map-side combinable, so
-    hub skew cannot produce a hot reducer), and the plan shape is identical
-    every round — runtime re-planning is pure overhead. The heavy, skew-prone
-    one-shot scans (edge derivation, triangle joins, PageRank contributions)
-    keep AQE on.
-    """
-    prev = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
-        yield
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", prev)
-
-# CheckpointFn contract: callable (state_df, step) -> materialized state_df;
-# step < 0 marks a static relation (materialize only, no commit). Optional
-# attribute ``durable: bool`` — operators whose working state lives OUTSIDE
-# the DataFrame plan (the bsp PageRank kernel's bucket files) read it via
-# getattr to decide per-superstep catalog commits. The flag lives on the
-# function OBJECT, so wrapping a checkpoint fn (functools.partial, lambda,
-# decorator) silently drops it and downgrades to end-of-run-only commits:
-# wrappers must re-set ``wrapper.durable = inner.durable``
-# (CheckpointedRun.checkpoint_fn sets it; EphemeralCheckpointer deliberately
-# lacks it). See elektra_spark/checkpoint.py:70.
-# Liveness: EphemeralCheckpointer additionally assumes a SINGLE state chain
-# (each call's output is consumed only by the next call's input); loops that
-# retain several live frames per round must use RetainedCheckpointer.
-CheckpointFn = Callable[[DataFrame, int], DataFrame]
-SuperstepHook = Callable[[int, int, float], Any]
-
-
-class RetainedCheckpointer:
-    """Superstep materializer for loops that keep **more than one live state
-    frame** per round (BFS visited+frontier, HITS hub+auth, k-core deg+edges).
-
-    :class:`EphemeralCheckpointer` assumes a single state chain — each call's
-    output is consumed only by the next call's input — which lets it unpersist
-    old frames and delete the previous hard commit. A loop that still holds an
-    older frame when the next commit lands would see its backing files vanish
-    (FAILED_READ_FILE on the next action). This variant trades that
-    aggressiveness for safety: every call is a parquet hard commit (lineage
-    truncated every round — no plan-depth growth) and **nothing is deleted
-    until process exit**, so any frame the loop retained stays readable.
-    Scratch lives on tmpfs when available; round states for the operators
-    using this are vertex-sized tables, not edge-sized, so retained bytes
-    stay modest. Static relations (step < 0) are localCheckpointed once,
-    as in EphemeralCheckpointer.
-    """
-
-    def __init__(self, scratch: str | None = None):
-        import atexit
-        import tempfile
-
-        base = "/dev/shm" if os.path.isdir("/dev/shm") else None
-        self.dir = scratch or tempfile.mkdtemp(prefix="elektra-rckpt-", dir=base)
-        self._n = 0
-        atexit.register(shutil.rmtree, self.dir, ignore_errors=True)
-
-    def __call__(self, df: DataFrame, step: int) -> DataFrame:
-        if step < 0:
-            return df.localCheckpoint(eager=True)
-        self._n += 1
-        path = os.path.join(self.dir, f"s{self._n}")
-        df.write.mode("overwrite").parquet(path)
-        return df.sparkSession.read.parquet(path)
-
-
-class EphemeralCheckpointer:
-    """Default superstep materializer for non-resumable runs: the state table
-    stays **persisted in the JVM** between supersteps and is hard-committed to
-    parquet (tmpfs scratch) every ``truncate_every`` rounds to truncate
-    lineage.
-
-    Why hybrid: the persisted frame keeps the hash partitioning the previous
-    round's aggregation produced, so the next superstep's join needs **no
-    exchange of the state side at all**, and it skips the parquet read-back —
-    measured ~1.2 s/superstep of fixed (non-scaling) cost on the 8.3M-edge
-    scaling graph at 4 cores, which is what moved N→4N efficiency from ~0.78
-    to ~0.87. Pure persist chains can't run forever (plan depth grows, and
-    chained ``localCheckpoint`` was measured degrading 19s → 72s per
-    superstep over 6 rounds at 4M rows), so every ``truncate_every``-th round
-    does the parquet round-trip that resets lineage — the same shape as the
-    production path, where the durable Iceberg snapshot commit
-    (:mod:`elektra_spark.checkpoint`) is the truncation point (SURVEY.md §7.4
-    'iterative lineage'). Static relations (step < 0) are localCheckpointed
-    once.
-    """
-
-    def __init__(self, scratch: str | None = None, truncate_every: int = 4):
-        import atexit
-        import tempfile
-
-        base = "/dev/shm" if os.path.isdir("/dev/shm") else None
-        self.dir = scratch or tempfile.mkdtemp(prefix="elektra-ckpt-", dir=base)
-        self.truncate_every = max(1, truncate_every)
-        self._n = 0
-        self._persisted: list[DataFrame] = []
-        self._prev_commit: str | None = None
-        # the final snapshot backs the operator's *returned* DataFrame, so
-        # the scratch dir must outlive this object — clean at process exit
-        atexit.register(shutil.rmtree, self.dir, ignore_errors=True)
-
-    def __call__(self, df: DataFrame, step: int) -> DataFrame:
-        from pyspark import StorageLevel
-
-        if step < 0:
-            return df.localCheckpoint(eager=True)
-        self._n += 1
-        if self._n % self.truncate_every == 0:
-            # hard commit: parquet round-trip resets lineage. The write
-            # consumes the retained persisted frames, so they can be released
-            # afterwards; the previous commit's files are only referenced by
-            # lineage that the fresh read-back no longer carries.
-            path = os.path.join(self.dir, f"s{self._n}")
-            df.write.mode("overwrite").parquet(path)
-            out = df.sparkSession.read.parquet(path)
-            for p in self._persisted:
-                p.unpersist()
-            self._persisted.clear()
-            if self._prev_commit:
-                shutil.rmtree(self._prev_commit, ignore_errors=True)
-            self._prev_commit = path
-            return out
-        out = df.persist(StorageLevel.MEMORY_AND_DISK)
-        out.count()  # materialize eagerly — one job per superstep, as before
-        self._persisted.append(out)
-        if len(self._persisted) > 2:
-            # frames older than two rounds have no live consumers; their
-            # lineage (back to the last hard commit) stays replayable
-            self._persisted.pop(0).unpersist()
-        return out
-
-
-def _default_checkpoint(df: DataFrame, step: int) -> DataFrame:
-    return df.localCheckpoint(eager=True)
+from ..checkpoint import CheckpointFn, EphemeralCheckpointer, SuperstepHook, _no_aqe
 
 
 def _np_min_labels(s, d, n: int):

@@ -26,7 +26,7 @@ import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .cc import _no_aqe
+from ..checkpoint import _no_aqe
 
 # Bound on both edges and vertices for the driver tier: the collect runs only
 # when each table has at most SMALL_GRAPH_MAX rows. The smallest

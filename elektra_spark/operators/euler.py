@@ -59,7 +59,8 @@ import math
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from .cc import EphemeralCheckpointer, _no_aqe, connected_components
+from ..checkpoint import EphemeralCheckpointer, _no_aqe
+from .cc import connected_components
 
 # arithmetic arc-key mix for deterministic heights: exact in both Spark and
 # ANSI SQL (operands bounded so no BIGINT overflow anywhere: 2^20 * the

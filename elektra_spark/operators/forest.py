@@ -34,7 +34,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .cc import _default_checkpoint, _np_min_labels
+from .cc import _np_min_labels
 
 
 def _np_forest_winners(src, dst, w=None):
@@ -114,7 +114,7 @@ def spanning_forest(
     spark = edges.sparkSession
     parts = num_partitions or spark.sparkContext.defaultParallelism
     partitioned = edges.select("src", "dst").repartitionByRange(parts, "src")
-    winners = _default_checkpoint(partitioned.mapInPandas(_winner_kernel, "src long, dst long"), _depth)
+    winners = partitioned.mapInPandas(_winner_kernel, "src long, dst long").localCheckpoint(eager=True)
     n_winners = winners.count()
     if n_winners <= driver_threshold:
         # sequential fallback below threshold (euler_tour_tree.h:279): one
@@ -182,9 +182,7 @@ def minimum_spanning_forest(
     spark = edges.sparkSession
     parts = num_partitions or spark.sparkContext.defaultParallelism
     partitioned = edges.select("src", "dst", "w").repartitionByRange(parts, "src")
-    winners = _default_checkpoint(
-        partitioned.mapInPandas(_msf_kernel, "src long, dst long, w long"), _depth
-    )
+    winners = partitioned.mapInPandas(_msf_kernel, "src long, dst long, w long").localCheckpoint(eager=True)
     n_winners = winners.count()
     if n_winners <= driver_threshold:
         pdf = winners.toPandas()

@@ -39,8 +39,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..checkpoint import CheckpointFn, RetainedCheckpointer, SuperstepHook
 from .bfs import _expand_frontier
-from .cc import CheckpointFn, RetainedCheckpointer, SuperstepHook
 
 
 def live_arcs(edges: DataFrame, p_permille: int, salt: int = 0) -> DataFrame:

@@ -35,7 +35,7 @@ import time
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .cc import CheckpointFn, RetainedCheckpointer, SuperstepHook, _no_aqe
+from ..checkpoint import CheckpointFn, RetainedCheckpointer, SuperstepHook, _no_aqe
 
 # removed-vertex sets below this fit comfortably in a task broadcast; above
 # it the anti-join runs as a shuffle (first rounds of a heavy peel).

@@ -33,8 +33,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..checkpoint import CheckpointFn, EphemeralCheckpointer, SuperstepHook, _no_aqe
 from . import driver_tier
-from .cc import CheckpointFn, EphemeralCheckpointer, SuperstepHook, _no_aqe
 
 
 def _np_vote(s, d, labels):

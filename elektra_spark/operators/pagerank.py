@@ -75,8 +75,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..checkpoint import CheckpointFn, EphemeralCheckpointer, SuperstepHook, _no_aqe
 from . import driver_tier
-from .cc import CheckpointFn, EphemeralCheckpointer, SuperstepHook, _no_aqe
 
 # Worker-resident CSR block cache for the bsp kernel: lives at module
 # scope so it survives across tasks within a reused Python worker (the

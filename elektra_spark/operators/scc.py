@@ -70,7 +70,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .cc import CheckpointFn, RetainedCheckpointer, SuperstepHook, _no_aqe
+from ..checkpoint import CheckpointFn, RetainedCheckpointer, SuperstepHook, _no_aqe
 
 
 def _local_min_reach(labels_pdf: pd.DataFrame, edges_pdf: pd.DataFrame) -> pd.DataFrame:

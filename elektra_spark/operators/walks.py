@@ -40,7 +40,7 @@ import time
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .cc import CheckpointFn, RetainedCheckpointer, SuperstepHook, _no_aqe
+from ..checkpoint import CheckpointFn, RetainedCheckpointer, SuperstepHook, _no_aqe
 
 WALK_MOD = 1_073_741_789  # largest prime < 2^30
 _A, _B, _C = 1_000_003, 999_983, 7_919

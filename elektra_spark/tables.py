@@ -1,7 +1,7 @@
 """Snapshot-versioned local table catalog — the engine's Iceberg stand-in.
 
 The production engine keeps all mutable state (the ``edges`` table, per-superstep
-``labels``/``ranks`` checkpoints, ``lineage`` and ``metrics``) in Iceberg tables
+``labels``/``ranks`` checkpoints with their lineage and metrics) in Iceberg tables
 and applies batch edge updates as ``MERGE INTO`` deltas (SURVEY.md §1.5, §7.5;
 reference semantics: ``InsertIntoEdgeTable``/``DeleteFromEdgeTable``,
 elektra connectivity.h:425-448). This sandbox ships no Iceberg runtime jar, so
@@ -12,7 +12,9 @@ JSON manifest:
 - **ACID-ish commits**: each write lands in a fresh ``v_<n>/`` directory; the
   manifest file is replaced with ``os.replace`` (atomic on POSIX), so readers
   always see a complete snapshot and a crashed writer leaves the previous
-  version intact — the property checkpoint/resume (M5) depends on.
+  version intact — the property checkpoint/resume (M5) depends on. Every
+  commit writes a whole snapshot (no fast-append), and its manifest entry
+  records the row count of each data file, read from the parquet footers.
 - **MERGE semantics**: ``merge_insert`` (WHEN NOT MATCHED THEN INSERT),
   ``merge_delete`` (WHEN MATCHED THEN DELETE) and ``upsert`` are computed as
   anti/semi joins and committed as a new snapshot — the same logical plan an
@@ -32,6 +34,7 @@ import shutil
 import time
 from dataclasses import dataclass
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -67,37 +70,45 @@ class SnapshotCatalog:
         with open(mp) as f:
             return json.load(f)
 
-    # ---- core commit protocol --------------------------------------------
-    def _commit(
-        self, name: str, df: DataFrame, operation: str, base_paths: list[str] | None = None
-    ) -> SnapshotInfo:
-        """Write df as the next snapshot and atomically swap the manifest.
-
-        ``base_paths``: existing snapshot directories carried forward into the
-        new snapshot's file set (fast-append — the Iceberg append pattern:
-        commit only the delta files, the manifest lists the full file set per
-        snapshot instead of rewriting the table).
-        """
-        man = self._load_manifest(name)
-        version = (man["current"] or 0) + 1
-        snap_dir = os.path.join(self._table_dir(name), f"v_{version}")
-        df.write.mode("overwrite").parquet(snap_dir)
-        info = SnapshotInfo(version, snap_dir, time.time(), operation, None)
-        man["snapshots"].append(
-            {
-                "version": version,
-                "path": snap_dir,
-                "paths": (base_paths or []) + [snap_dir],
-                "committed_at": info.committed_at,
-                "operation": operation,
-            }
-        )
-        man["current"] = version
+    def _swap_manifest(self, name: str, man: dict) -> None:
         tmp = self._manifest_path(name) + ".tmp"
         os.makedirs(self._table_dir(name), exist_ok=True)
         with open(tmp, "w") as f:
             json.dump(man, f)
         os.replace(tmp, self._manifest_path(name))  # atomic commit point
+
+    # ---- core commit protocol --------------------------------------------
+    def _commit(self, name: str, df: DataFrame, operation: str) -> SnapshotInfo:
+        """Write df as the next snapshot and atomically swap the manifest.
+
+        The snapshot entry records each data file's row count (``files``,
+        file name → rows) and their sum (``rows``), read from the parquet
+        footers just written — pyarrow on the driver, no Spark job. This is
+        the snapshot summary :mod:`elektra_spark.checkpoint` reads lineage
+        from.
+        """
+        man = self._load_manifest(name)
+        version = (man["current"] or 0) + 1
+        snap_dir = os.path.join(self._table_dir(name), f"v_{version}")
+        df.write.mode("overwrite").parquet(snap_dir)
+        files = {
+            f: pq.read_metadata(os.path.join(snap_dir, f)).num_rows
+            for f in sorted(os.listdir(snap_dir))
+            if f.endswith(".parquet")
+        }
+        info = SnapshotInfo(version, snap_dir, time.time(), operation, sum(files.values()))
+        man["snapshots"].append(
+            {
+                "version": version,
+                "path": snap_dir,
+                "committed_at": info.committed_at,
+                "operation": operation,
+                "rows": info.rows,
+                "files": files,
+            }
+        )
+        man["current"] = version
+        self._swap_manifest(name, man)
         return info
 
     # ---- public API --------------------------------------------------------
@@ -107,33 +118,16 @@ class SnapshotCatalog:
     def write(self, name: str, df: DataFrame, operation: str = "overwrite") -> SnapshotInfo:
         return self._commit(name, df, operation)
 
-    def append(self, name: str, df: DataFrame) -> SnapshotInfo:
-        """Fast-append: commit only the delta files; the new snapshot's
-        manifest references the previous snapshot's file set plus the delta
-        (like Iceberg fast-append). Per-superstep lineage/metrics appends are
-        therefore O(delta), not O(table) — a checkpointed run with S
-        supersteps writes S deltas instead of S full copies.
+    def add_entry(self, name: str, key: str, entry: dict) -> None:
+        """Append ``entry`` to the manifest's ``key`` list in one atomic swap.
+        Table-level metadata (the analogue of Iceberg table properties): no
+        data file, no snapshot, no Spark job."""
+        man = self._load_manifest(name)
+        man.setdefault(key, []).append(entry)
+        self._swap_manifest(name, man)
 
-        The delta's schema must match the table's: a fast-append never rewrites
-        existing files, so a drifted column set would otherwise be silently
-        tolerated at read time (missing columns null-filled, extra columns
-        dropped) instead of failing loudly like a unionByName append."""
-        if self.exists(name):
-            current_schema = self.read(name).schema
-            # compare (name, type) only: nullability legitimately differs
-            # between a freshly built delta and the parquet read-back
-            delta_sig = [(f.name, f.dataType) for f in df.schema.fields]
-            table_sig = [(f.name, f.dataType) for f in current_schema.fields]
-            if sorted(delta_sig, key=str) != sorted(table_sig, key=str):
-                raise ValueError(
-                    f"append schema mismatch for table {name!r}: "
-                    f"delta={df.schema.simpleString()} vs table={current_schema.simpleString()}"
-                )
-            man = self._load_manifest(name)
-            snap = next(s for s in man["snapshots"] if s["version"] == man["current"])
-            base = snap.get("paths") or [snap["path"]]
-            return self._commit(name, df, "append", base_paths=base)
-        return self._commit(name, df, "append")
+    def entries(self, name: str, key: str) -> list[dict]:
+        return self._load_manifest(name).get(key, [])
 
     def read(self, name: str, version: int | None = None) -> DataFrame:
         man = self._load_manifest(name)
@@ -141,8 +135,7 @@ class SnapshotCatalog:
             raise FileNotFoundError(f"table {name} does not exist in {self.root}")
         version = version or man["current"]
         snap = next(s for s in man["snapshots"] if s["version"] == version)
-        paths = snap.get("paths") or [snap["path"]]
-        return self.spark.read.parquet(*paths)
+        return self.spark.read.parquet(snap["path"])
 
     def history(self, name: str) -> list[dict]:
         return self._load_manifest(name)["snapshots"]

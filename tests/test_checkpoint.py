@@ -32,20 +32,6 @@ def test_snapshot_catalog_basics(spark, tmp_path):
     ]
 
 
-def test_append_rejects_schema_drift(spark, tmp_path):
-    """Fast-append commits only delta files, so a drifted delta schema must be
-    rejected at commit time — silently null-filling missing columns at read
-    time is how a table rots."""
-    cat = SnapshotCatalog(spark, str(tmp_path / "wh"))
-    cat.write("t", spark.createDataFrame([(1, 10)], "k long, v long"))
-    cat.append("t", spark.createDataFrame([(2, 20)], "k long, v long"))
-    assert cat.read("t").count() == 2
-    with pytest.raises(ValueError, match="schema mismatch"):
-        cat.append("t", spark.createDataFrame([(3,)], "k long"))
-    with pytest.raises(ValueError, match="schema mismatch"):
-        cat.append("t", spark.createDataFrame([(3, 30, 1)], "k long, v long, extra long"))
-
-
 def test_pagerank_resume_equals_uninterrupted(spark, tmp_path):
     """Kill-and-resume: 4 supersteps, 'crash', resume for 4 more — ranks are
     bit-identical to an uninterrupted 8-superstep run (same schedule)."""
@@ -109,6 +95,44 @@ def test_lineage_and_metrics_recorded(spark, tmp_path):
     # per-superstep row counts are conserved (every vertex present each step)
     per_step = lin.groupBy("superstep").agg(F.sum("rows").alias("n")).collect()
     assert len({r["n"] for r in per_step}) == 1
+
+
+def test_crash_window_lineage_rides_the_state_commit(spark, tmp_path, monkeypatch):
+    """A kill at any manifest swap of a durable LPA run leaves every
+    superstep either committed with its lineage or absent from both: the
+    lineage is the state snapshot's own summary, not a second commit."""
+    import os
+
+    from elektra_spark.operators.lpa import label_propagation
+
+    edges = edges_from_pairs(spark, CHAIN[:15])
+    real_replace = os.replace
+    swaps = [0]
+
+    def lpa(root, kill_at=None):
+        def replace(src, dst):
+            swaps[0] += 1
+            if swaps[0] == kill_at:
+                raise OSError(f"killed at swap {kill_at}")
+            return real_replace(src, dst)
+
+        swaps[0] = 0
+        run = CheckpointedRun(spark, str(root), "lpa")
+        with monkeypatch.context() as m:
+            m.setattr(os, "replace", replace)
+            label_propagation(edges, rounds=1, checkpoint=run.checkpoint_fn("labels"),
+                              on_superstep=run.metrics_hook("labels"))
+
+    lpa(tmp_path / "clean")
+    n_swaps = swaps[0]
+    assert n_swaps >= 3  # supersteps 0 and 1, and at least one metrics row
+    for n in range(1, n_swaps + 1):
+        with pytest.raises(OSError, match="killed"):
+            lpa(tmp_path / f"kill{n}", kill_at=n)
+        run = CheckpointedRun(spark, str(tmp_path / f"kill{n}"), "lpa")  # the restarted driver
+        committed = {int(s["operation"].split("=")[1]) for s in run.catalog.history("lpa_labels")}
+        lineage = {r["superstep"] for r in run.lineage_table().collect()}
+        assert committed == lineage, f"kill at swap {n}"
 
 
 def test_changelog_net_delta(spark, tmp_path):

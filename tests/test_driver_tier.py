@@ -178,7 +178,7 @@ def test_tier_declines_edges_outside_vertex_table(spark, tier):
 def test_tier_taken_only_when_nothing_specific_asked(spark, monkeypatch, tmp_path):
     """A named kernel, a checkpointer or a bsp prep dir keeps the Spark
     path; the default call takes the tier."""
-    from elektra_spark.operators.cc import EphemeralCheckpointer
+    from elektra_spark.checkpoint import EphemeralCheckpointer
 
     e = _edges(spark, [(0, 1), (1, 2), (2, 0)])
     calls = []

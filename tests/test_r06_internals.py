@@ -83,6 +83,30 @@ def test_adamic_adar_fallback_path_wide_vids(spark):
     assert s == b and len(s) > 0
 
 
+@pytest.mark.parametrize("top", [2**31 - 1, 2**31])
+def test_copurchase_packed_distinct_matches_pairs(spark, tmp_path, top):
+    """``_copurchase_graph`` packs (src, dst) into one long for its distinct
+    while every l_partkey < 2^31 (top = 2^31 - 1) and falls back to the
+    two-column distinct above (top = 2^31); both give the Python pair set."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    import __spark_entry__ as entry
+
+    rows = [(1, 5), (1, 7), (1, top), (2, 7), (2, 5), (2, top), (3, top - 1), (3, top), (3, 3), (4, 9)]
+    pq.write_table(
+        pa.table({"l_orderkey": pa.array([o for o, _ in rows], pa.int64()),
+                  "l_partkey": pa.array([p for _, p in rows], pa.int64())}),
+        tmp_path / "lineitem.parquet",
+    )
+    parts = {}
+    for o, p in rows:
+        parts.setdefault(o, set()).add(p)
+    want = {(min(a, b), max(a, b)) for ps in parts.values() for a in ps for b in ps if a != b}
+    got = [(r["src"], r["dst"]) for r in entry._copurchase_graph(spark, str(tmp_path)).collect()]
+    assert sorted(got) == sorted(want)
+
+
 def test_pagerank_df_wide_vids_matches_narrow(spark):
     """The int32-narrowed df superstep and the wide-vid (long) path must
     agree: shifting every vid by 2^32 changes only the ids."""

@@ -58,7 +58,7 @@ def main():
     sections.append(("Filtered projection scan (lineitem)", p, checks))
 
     # 2. PageRank superstep plan: one exchange on the contribution path
-    from elektra_spark.operators.cc import EphemeralCheckpointer
+    from elektra_spark.checkpoint import EphemeralCheckpointer
     from elektra_spark.operators.pagerank import _prepare
 
     edges = spark.createDataFrame([(i, i + 1) for i in range(2000)], "src long, dst long")
