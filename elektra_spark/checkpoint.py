@@ -67,6 +67,9 @@ def _no_aqe(spark: SparkSession):
 CheckpointFn = Callable[[DataFrame, int], DataFrame]
 SuperstepHook = Callable[[int, int, float], Any]
 
+# EphemeralCheckpointer hard-commits (parquet round-trip) every TRUNCATE_EVERY-th call
+TRUNCATE_EVERY = 4
+
 
 class RetainedCheckpointer:
     """Superstep materializer for loops that keep **more than one live state
@@ -86,12 +89,12 @@ class RetainedCheckpointer:
     as in EphemeralCheckpointer.
     """
 
-    def __init__(self, scratch: str | None = None):
+    def __init__(self):
         import atexit
         import tempfile
 
         base = "/dev/shm" if os.path.isdir("/dev/shm") else None
-        self.dir = scratch or tempfile.mkdtemp(prefix="elektra-rckpt-", dir=base)
+        self.dir = tempfile.mkdtemp(prefix="elektra-rckpt-", dir=base)
         self._n = 0
         atexit.register(shutil.rmtree, self.dir, ignore_errors=True)
 
@@ -107,7 +110,7 @@ class RetainedCheckpointer:
 class EphemeralCheckpointer:
     """Default superstep materializer for non-resumable runs: the state table
     stays **persisted in the JVM** between supersteps and is hard-committed to
-    parquet (tmpfs scratch) every ``truncate_every`` rounds to truncate
+    parquet (tmpfs scratch) every :data:`TRUNCATE_EVERY` rounds to truncate
     lineage.
 
     Why hybrid: the persisted frame keeps the hash partitioning the previous
@@ -117,7 +120,7 @@ class EphemeralCheckpointer:
     scaling graph at 4 cores, which is what moved N→4N efficiency from ~0.78
     to ~0.87. Pure persist chains can't run forever (plan depth grows, and
     chained ``localCheckpoint`` was measured degrading 19s → 72s per
-    superstep over 6 rounds at 4M rows), so every ``truncate_every``-th round
+    superstep over 6 rounds at 4M rows), so every ``TRUNCATE_EVERY``-th round
     does the parquet round-trip that resets lineage — the same shape as the
     production path, where the durable snapshot commit
     (:class:`CheckpointedRun`) is the truncation point (SURVEY.md §7.4
@@ -125,13 +128,12 @@ class EphemeralCheckpointer:
     once.
     """
 
-    def __init__(self, scratch: str | None = None, truncate_every: int = 4):
+    def __init__(self):
         import atexit
         import tempfile
 
         base = "/dev/shm" if os.path.isdir("/dev/shm") else None
-        self.dir = scratch or tempfile.mkdtemp(prefix="elektra-ckpt-", dir=base)
-        self.truncate_every = max(1, truncate_every)
+        self.dir = tempfile.mkdtemp(prefix="elektra-ckpt-", dir=base)
         self._n = 0
         self._persisted: list[DataFrame] = []
         self._prev_commit: str | None = None
@@ -145,7 +147,7 @@ class EphemeralCheckpointer:
         if step < 0:
             return df.localCheckpoint(eager=True)
         self._n += 1
-        if self._n % self.truncate_every == 0:
+        if self._n % TRUNCATE_EVERY == 0:
             # hard commit: parquet round-trip resets lineage. The write
             # consumes the retained persisted frames, so they can be released
             # afterwards; the previous commit's files are only referenced by

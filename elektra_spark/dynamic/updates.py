@@ -32,12 +32,10 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.cc import _np_min_labels, connected_components
-from ..operators.forest import _np_forest_winners, spanning_forest
+from ..operators import driver_tier
+from ..operators.cc import _np_components, connected_components
+from ..operators.forest import _np_forest_winners, _winners, spanning_forest
 from ..tables import SnapshotCatalog
-
-# a delete's affected slice is solved on the driver up to this many edges AND vertices
-DELETE_SLICE_MAX = 5_000_000
 
 
 def _solve_contracted_driver(pdf: pd.DataFrame):
@@ -64,9 +62,7 @@ def _solve_contracted_driver(pdf: pd.DataFrame):
     cv = pdf["cv"].to_numpy(dtype=np.int64)
     mask = _np_forest_winners(cu, cv)
     winners = pdf.loc[mask, ["src", "dst"]]
-    vids, inv = np.unique(np.concatenate([cu, cv]), return_inverse=True)
-    lbl = _np_min_labels(inv[: len(cu)], inv[len(cu):], len(vids))
-    new = vids[lbl]
+    vids, new = _np_components(cu, cv)
     changed = new != vids
     mapping = pd.DataFrame({"component": vids[changed], "new_component": new[changed]})
     return mapping, winners
@@ -209,14 +205,15 @@ class DynamicGraph:
         return batch_connected(self.labels(), queries)
 
     # -- batch insert ----------------------------------------------------------
-    def batch_add_edges(self, batch: DataFrame, driver_threshold: int = 5_000_000) -> None:
+    def batch_add_edges(self, batch: DataFrame, driver_threshold: int | None = None) -> None:
         """Insert an edge batch (elektra ``BatchAddEdges``,
         dynamic_connectivity.h:44-110): contract by current labels, spanning
         tree of the contracted graph, relabel through the root mapping.
 
         The contracted cross-component graph (one row per batch edge joining
         distinct components) is solved on the driver when it has ≤
-        ``driver_threshold`` rows — vectorized NumPy, one collect — else by
+        ``driver_threshold`` rows (default ``driver_tier.DRIVER_ROWS_MAX``,
+        read at call time) — vectorized NumPy, one bounded collect — else by
         the distributed CC + spanning-forest operators, so arbitrarily large
         insert batches (the reference's bread and butter) never OOM the
         driver.
@@ -242,17 +239,20 @@ class DynamicGraph:
         # one job decides the path AND collects the cross batch when small
         # (formerly an eager checkpoint + count + collect — three jobs per
         # batch on a path whose cost is almost entirely fixed job overhead)
-        head = cross.limit(driver_threshold + 1).toPandas()
-        n_cross = len(head)
+        if driver_threshold is None:
+            driver_threshold = driver_tier.DRIVER_ROWS_MAX
+        head = driver_tier.collect_bounded(cross, driver_threshold)
 
         mapping_df = winners_df = None
-        if n_cross > 0 and n_cross <= driver_threshold:
+        if head is not None and len(head):
             mapping, winners = _solve_contracted_driver(head)
+            # broadcast only the driver-solved (small) mapping; the
+            # distributed mapping can be arbitrarily large — let AQE pick
             if len(mapping):
-                mapping_df = spark.createDataFrame(mapping)
+                mapping_df = F.broadcast(spark.createDataFrame(mapping))
             if len(winners):
                 winners_df = spark.createDataFrame(winners)
-        elif n_cross > 0:
+        elif head is None:
             cross = cross.localCheckpoint(eager=True)
             # distributed fallback: quotient CC gives the root mapping; the
             # spanning forest of one representative original edge per
@@ -279,10 +279,6 @@ class DynamicGraph:
 
         self.catalog.merge_insert(self._t("edges"), fresh, ["src", "dst"])
         if mapping_df is not None:
-            # broadcast only the driver-solved (small) mapping; the
-            # distributed mapping can be arbitrarily large — let AQE pick
-            if n_cross <= driver_threshold:
-                mapping_df = F.broadcast(mapping_df)
             relabeled = (
                 labels.join(mapping_df, "component", "left")
                 .select("vid", F.coalesce("new_component", F.col("component")).alias("component"))
@@ -357,32 +353,22 @@ class DynamicGraph:
         # bit-identical to the distributed one while replacing ~10 fixed-
         # cost jobs with two bounded collects (guide §1.2 / the reference's
         # own sequential-fallback trade, euler_tour_tree.h:279).
-        sub_pdf = sub_edges.limit(DELETE_SLICE_MAX + 1).toPandas()
-        vpdf = None
-        if len(sub_pdf) <= DELETE_SLICE_MAX:
-            vpdf = sub_vertices.limit(DELETE_SLICE_MAX + 1).toPandas()
+        k = driver_tier.DRIVER_ROWS_MAX
+        sub_pdf = driver_tier.collect_bounded(sub_edges, k)
+        vpdf = driver_tier.collect_bounded(sub_vertices, k) if sub_pdf is not None else None
         new_sub_labels = new_sub_forest = None
-        if vpdf is not None and len(vpdf) <= DELETE_SLICE_MAX:
+        if vpdf is not None:
             import numpy as np
 
             spark = batch.sparkSession
             es = sub_pdf["src"].to_numpy(dtype=np.int64)
             ed = sub_pdf["dst"].to_numpy(dtype=np.int64)
-            uverts = vpdf["vid"].to_numpy(dtype=np.int64)
-            vids = np.unique(np.concatenate([uverts, es, ed]))
-            lbl = _np_min_labels(
-                np.searchsorted(vids, es), np.searchsorted(vids, ed), len(vids)
-            )
+            vids, roots = _np_components(es, ed, vpdf["vid"].to_numpy(dtype=np.int64))
             new_sub_labels = spark.createDataFrame(
-                pd.DataFrame({"vid": vids, "component": vids[lbl]})
+                pd.DataFrame({"vid": vids, "component": roots})
             )
-            mask = _np_forest_winners(es, ed)
-            fo = pd.DataFrame({"src": es[mask], "dst": ed[mask]})
-            new_sub_forest = (
-                spark.createDataFrame(fo)
-                if len(fo)
-                else spark.createDataFrame([], "src long, dst long")
-            )
+            fo = _winners(sub_pdf[["src", "dst"]])
+            new_sub_forest = spark.createDataFrame(fo if len(fo) else [], "src long, dst long")
         if new_sub_labels is None:
             new_sub_labels = connected_components(sub_edges, vertices=sub_vertices)
         untouched = labels.join(F.broadcast(affected), "component", "left_anti")

@@ -46,6 +46,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..checkpoint import CheckpointFn, EphemeralCheckpointer, SuperstepHook, _no_aqe
+from . import driver_tier
 
 
 def _np_min_labels(s, d, n: int):
@@ -114,6 +115,19 @@ def _np_min_labels(s, d, n: int):
     return lbl
 
 
+def _np_components(src, dst, extra=None):
+    """Components of an id-valued edge list → ``(ids, roots)``: the sorted
+    distinct ids of ``src``, ``dst`` and ``extra`` (isolated vertices), and
+    each one's component min id — :func:`_np_min_labels` on the dense
+    relabel."""
+    import numpy as np
+
+    parts = [src, dst] if extra is None else [src, dst, extra]
+    ids, inv = np.unique(np.concatenate(parts), return_inverse=True)
+    m = len(src)
+    return ids, ids[_np_min_labels(inv[:m], inv[m : 2 * m], len(ids))]
+
+
 def _np_cols(batches, names):
     """Concatenate Arrow record batches into one int64 NumPy array per
     column (one copy each — ``mapInArrow`` feeds Arrow buffers directly,
@@ -146,14 +160,9 @@ def _local_cc_kernel(batches) -> Iterator:
     cols = _np_cols(batches, ["src", "dst"])
     if cols is None:
         return
-    src, dst = cols
-    import numpy as np
-
-    vids, inv = np.unique(np.concatenate([src, dst]), return_inverse=True)
-    s, d = inv[: len(src)], inv[len(src) :]
-    lbl = _np_min_labels(s, d, len(vids))
+    vids, roots = _np_components(*cols)
     yield pa.RecordBatch.from_arrays(
-        [pa.array(vids, pa.int64()), pa.array(vids[lbl], pa.int64())],
+        [pa.array(vids, pa.int64()), pa.array(roots, pa.int64())],
         ["vid", "comp"],
     )
 
@@ -169,7 +178,10 @@ def _min_label_fixpoint(
     """Iterate label[v] ← min(self, neighbors, label[label[v]]) to fixpoint.
 
     ``labels`` must contain every vertex (vid, label) with label values drawn
-    from the vid universe (true for min-vid labels by construction).
+    from the vid universe (true for min-vid labels by construction). With
+    ``start_step > 0`` they are a resumed state (e.g. ``CheckpointedRun.load``),
+    materialized without a second commit of step ``start_step``; a fresh
+    run (``start_step == 0``) commits them as step 0.
     """
     if checkpoint is None:
         checkpoint = EphemeralCheckpointer()
@@ -188,7 +200,7 @@ def _min_label_loop(
 ) -> DataFrame:
     both = checkpoint(both, -1)  # materialize once; reused every superstep
 
-    labels = checkpoint(labels.select("vid", "label"), start_step)
+    labels = checkpoint(labels.select("vid", "label"), -1 if start_step else 0)
     for step in range(start_step, start_step + max_iter):
         t0 = time.time()
         # Superstep = hash-to-min cluster exchange, two aggregations:
@@ -291,13 +303,9 @@ def _driver_union_find(spark, links_pdf: pd.DataFrame) -> DataFrame:
     """
     import numpy as np
 
-    src = links_pdf["src"].to_numpy(dtype=np.int64)
-    dst = links_pdf["dst"].to_numpy(dtype=np.int64)
-    vids = np.unique(np.concatenate([src, dst]))
-    idx_src = np.searchsorted(vids, src)
-    idx_dst = np.searchsorted(vids, dst)
-    lbl = _np_min_labels(idx_src, idx_dst, len(vids))
-    new = vids[lbl]
+    vids, new = _np_components(
+        links_pdf["src"].to_numpy(dtype=np.int64), links_pdf["dst"].to_numpy(dtype=np.int64)
+    )
     changed = new != vids
     out = pd.DataFrame({"label": vids[changed], "root": new[changed]})
     return spark.createDataFrame(out) if len(out) else None
@@ -311,7 +319,6 @@ def connected_components(
     max_iter: int = 50,
     checkpoint: CheckpointFn | None = None,
     on_superstep: SuperstepHook | None = None,
-    driver_uf_threshold: int = 5_000_000,
     pre_partitioned: bool = False,
     on_phase: Callable[[str, float], Any] | None = None,
 ) -> DataFrame:
@@ -320,9 +327,10 @@ def connected_components(
     kernel:
       - 'csr'  : per-partition NumPy union-find collapse (one pass over the
                  range-partitioned edges), then the root quotient graph is
-                 solved either on the driver (≤ driver_uf_threshold links —
-                 the reference's sequential-fallback trade,
-                 euler_tour_tree.h:279) or by the distributed fixpoint.
+                 solved either on the driver (≤
+                 ``driver_tier.DRIVER_ROWS_MAX`` links — the reference's
+                 sequential-fallback trade, euler_tour_tree.h:279) or by the
+                 distributed fixpoint.
                  Default at scale: the heavy relation is shuffled exactly
                  once; supersteps touch only the quotient.
       - 'df'   : pure DataFrame hash-to-min + pointer jumping over the raw
@@ -394,18 +402,17 @@ def connected_components(
         )
         # one job decides the path AND collects the quotient when small
         t0 = time.time()
-        head = links.limit(driver_uf_threshold + 1).toPandas()
+        head = driver_tier.collect_bounded(links, driver_tier.DRIVER_ROWS_MAX)
         _ph("quotient_probe", t0)
         t0 = time.time()
-        resolve = None
-        if len(head) == 0:
-            resolve = None  # every seed is already the component min
-        elif len(head) <= driver_uf_threshold:
+        if head is not None:
             # Sequential fallback below threshold — the same trade the
             # reference makes (batch ≤ 75 handled sequentially,
             # euler_tour_tree.h:279): the root quotient fits on the driver,
             # so one vectorized NumPy union-find replaces O(log n) shuffle
             # rounds; the quotient was already collected by the path probe.
+            # With no links every seed is already its component min and
+            # there is nothing to resolve (None).
             resolve = _driver_union_find(spark, head)
             if resolve is not None:
                 resolve = F.broadcast(resolve)

@@ -1,20 +1,31 @@
-"""Driver-NumPy tier for small graphs.
+"""Driver fallbacks: small relations are solved on the driver in NumPy.
 
 On a small graph an iterative operator's Spark supersteps cost almost
 nothing but fixed per-job overhead: a 6k-edge bsp PageRank superstep is one
 two-stage job of ~0.7 s, and its prep is four more ``applyInPandas`` jobs
-that encode side files. Below :data:`SMALL_GRAPH_MAX` edges and vertices,
-:func:`collect_small` brings the graph to the driver once and the operator
-runs the same synchronous schedule in NumPy — the reference's sequential
-fallback below a threshold (elektra ``euler_tour_tree.h:279``), and the
-Python-boundary cost that "Accelerating Python UDFs in Vectorized Query
-Execution" (CIDR 2022) measures, paid once instead of per stage.
+that encode side files. Every operator here makes the reference's trade —
+the sequential fallback below a threshold (elektra
+``euler_tour_tree.h:279``), and the Python-boundary cost that "Accelerating
+Python UDFs in Vectorized Query Execution" (CIDR 2022) measures, paid once
+instead of per stage — under two bounds and one collect rule:
 
-Callers (:func:`~elektra_spark.operators.pagerank.pagerank`,
-:func:`~elektra_spark.operators.lpa.label_propagation`) take the tier only
-when the caller asked for nothing specific — the default kernel, no
-checkpointer, no bsp prep dir — so durable runs still commit every
-superstep.
+- :data:`SMALL_GRAPH_MAX` bounds a whole input graph, edges and vertices.
+  :func:`collect_small` brings it to the driver for
+  :func:`~elektra_spark.operators.pagerank.pagerank` and
+  :func:`~elektra_spark.operators.lpa.label_propagation`, which take the
+  tier only when the caller asked for nothing specific (the default
+  kernel, no checkpointer, no bsp prep dir), so durable runs still commit
+  every superstep.
+- :data:`DRIVER_ROWS_MAX` bounds a *derived* relation that a distributed
+  operator has already shrunk: the CC quotient links
+  (:func:`~elektra_spark.operators.cc.connected_components`), the winner
+  union of both forests (:mod:`~elektra_spark.operators.forest`), the
+  contracted add batch and the delete slice's edges and vertices
+  (:class:`~elektra_spark.dynamic.updates.DynamicGraph`). Each collects it
+  with :func:`collect_bounded` — one job that both decides the path and
+  ships the rows — and otherwise keeps its distributed fallback.
+
+Tests set either bound to 0 (or to a small k) to force the fallback.
 """
 
 from __future__ import annotations
@@ -23,6 +34,7 @@ from functools import reduce
 from typing import NamedTuple
 
 import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -34,6 +46,20 @@ from ..checkpoint import _no_aqe
 # bench leaf stays distributed. Tests set it to 0 to force the distributed
 # path.
 SMALL_GRAPH_MAX = 500_000
+
+# Bound on the rows of a derived relation that a driver fallback collects
+# (collect_bounded). Over it, the operator's distributed path runs.
+DRIVER_ROWS_MAX = 5_000_000
+
+
+def collect_bounded(df: DataFrame, k: int) -> pd.DataFrame | None:
+    """``df`` as pandas when it has at most ``k`` rows, else ``None``.
+
+    One ``limit(k + 1)`` job both decides and collects: a relation over the
+    bound ships at most k + 1 rows, and one within it needs no count job
+    first."""
+    pdf = df.limit(k + 1).toPandas()
+    return pdf if len(pdf) <= k else None
 
 
 class SmallGraph(NamedTuple):

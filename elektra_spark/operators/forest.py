@@ -14,7 +14,9 @@ union_find.h:277-324). Our execution is the two-level scheme shared with CC:
    a size threshold (the reference's sequential-fallback trade,
    euler_tour_tree.h:279), else by recursing the distributed pass — is a
    spanning forest of the original graph, and every emitted edge is an
-   original edge.
+   original edge. The driver collects the union when it has at most
+   ``driver_tier.DRIVER_ROWS_MAX`` rows (:func:`.driver_tier.collect_bounded`,
+   one job).
 
 Determinism: edges carry *distinct* lexicographic (src, dst) weights, so the
 minimum spanning forest is **unique** — Boruvka (each component picks its
@@ -32,9 +34,9 @@ from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
-from .cc import _np_min_labels
+from . import driver_tier
+from .cc import _np_components
 
 
 def _np_forest_winners(src, dst, w=None):
@@ -78,86 +80,57 @@ def _np_forest_winners(src, dst, w=None):
         eidx = order[np.unique(min_rank)]
         mask[eidx] = True
         # merge the touched components: min-label fixpoint on the quotient
-        qs, qd = lbl[s[eidx]], lbl[d[eidx]]
-        qvids, qinv = np.unique(np.concatenate([qs, qd]), return_inverse=True)
-        qlbl = _np_min_labels(qinv[: len(qs)], qinv[len(qs):], len(qvids))
+        qvids, qroots = _np_components(lbl[s[eidx]], lbl[d[eidx]])
         remap = np.arange(n, dtype=np.int64)
-        remap[qvids] = qvids[qlbl]
+        remap[qvids] = qroots
         lbl = remap[lbl]
     return mask
+
+
+def _winners(pdf: pd.DataFrame) -> pd.DataFrame:
+    """The winner edges of ``pdf`` — ranked by (src, dst), or by (w, src,
+    dst) and carrying w when ``pdf`` has a ``w`` column."""
+    import numpy as np
+
+    cols = {c: pdf[c].to_numpy(dtype=np.int64) for c in pdf.columns}
+    mask = _np_forest_winners(cols["src"], cols["dst"], cols.get("w"))
+    return pd.DataFrame({c: v[mask] for c, v in cols.items()})
 
 
 def _winner_kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     """Per-partition winner edges — the vectorized analogue of
     spanning_tree.h:65-71 (CAS unite per edge, winners recorded)."""
-    import numpy as np
-
     chunks = list(batches)
-    if not chunks:
-        return
-    pdf = pd.concat(chunks, ignore_index=True)
-    src = pdf["src"].to_numpy(dtype=np.int64)
-    dst = pdf["dst"].to_numpy(dtype=np.int64)
-    mask = _np_forest_winners(src, dst)
-    yield pd.DataFrame({"src": src[mask], "dst": dst[mask]})
+    if chunks:
+        yield _winners(pd.concat(chunks, ignore_index=True))
 
 
-def spanning_forest(
-    edges: DataFrame,
-    num_partitions: int | None = None,
-    driver_threshold: int = 5_000_000,
-    _depth: int = 0,
-) -> DataFrame:
-    """→ forest edges (src, dst) ⊆ edges; |F| = n − #components."""
-    import numpy as np
-
+def _forest(edges: DataFrame, cols: list[str], num_partitions: int | None, depth: int = 0) -> DataFrame:
+    """The two-level forest over ``cols`` (``src, dst`` or ``src, dst, w``)."""
     spark = edges.sparkSession
+    schema = ", ".join(f"{c} long" for c in cols)
     parts = num_partitions or spark.sparkContext.defaultParallelism
-    partitioned = edges.select("src", "dst").repartitionByRange(parts, "src")
-    winners = partitioned.mapInPandas(_winner_kernel, "src long, dst long").localCheckpoint(eager=True)
-    n_winners = winners.count()
-    if n_winners <= driver_threshold:
+    partitioned = edges.select(*cols).repartitionByRange(parts, "src")
+    winners = partitioned.mapInPandas(_winner_kernel, schema).localCheckpoint(eager=True)
+    pdf = driver_tier.collect_bounded(winners, driver_tier.DRIVER_ROWS_MAX)
+    if pdf is not None:
         # sequential fallback below threshold (euler_tour_tree.h:279): one
         # vectorized Boruvka over the collected winner union
-        pdf = winners.toPandas()
-        if len(pdf) == 0:
-            return spark.createDataFrame([], "src long, dst long")
-        src = pdf["src"].to_numpy(dtype=np.int64)
-        dst = pdf["dst"].to_numpy(dtype=np.int64)
-        mask = _np_forest_winners(src, dst)
-        out = pd.DataFrame({"src": src[mask], "dst": dst[mask]})
-        if len(out) == 0:
-            return spark.createDataFrame([], "src long, dst long")
-        return spark.createDataFrame(out)
-    if _depth >= 4:
-        raise RuntimeError("spanning_forest failed to reduce below driver threshold")
+        out = _winners(pdf)
+        return spark.createDataFrame(out if len(out) else [], schema)
+    if depth >= 4:
+        raise RuntimeError("spanning forest failed to reduce below driver_tier.DRIVER_ROWS_MAX")
     # winner union still too large: recurse with fewer, larger partitions —
     # each level multiplies components merged per partition
-    return spanning_forest(winners, num_partitions=max(2, parts // 4), driver_threshold=driver_threshold, _depth=_depth + 1)
+    return _forest(winners, cols, max(2, parts // 4), depth + 1)
 
 
-def _msf_kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """Per-partition weighted winners — same shape as :func:`_winner_kernel`
-    but ranked by (w, src, dst) and carrying w through."""
-    import numpy as np
-
-    chunks = list(batches)
-    if not chunks:
-        return
-    pdf = pd.concat(chunks, ignore_index=True)
-    src = pdf["src"].to_numpy(dtype=np.int64)
-    dst = pdf["dst"].to_numpy(dtype=np.int64)
-    w = pdf["w"].to_numpy(dtype=np.int64)
-    mask = _np_forest_winners(src, dst, w)
-    yield pd.DataFrame({"src": src[mask], "dst": dst[mask], "w": w[mask]})
+def spanning_forest(edges: DataFrame, num_partitions: int | None = None) -> DataFrame:
+    """→ forest edges (src, dst) ⊆ edges; |F| = n − #components."""
+    return _forest(edges, ["src", "dst"], num_partitions)
 
 
-def minimum_spanning_forest(
-    edges: DataFrame,
-    num_partitions: int | None = None,
-    driver_threshold: int = 5_000_000,
-    _depth: int = 0,
-) -> DataFrame:
+def minimum_spanning_forest(edges: DataFrame, num_partitions: int | None = None) -> DataFrame:
     """Weighted minimum spanning forest → (src, dst, w) ⊆ edges.
 
     Input: (src, dst, w:long) — canonical undirected edges. The (w, src,
@@ -177,27 +150,4 @@ def minimum_spanning_forest(
     weight assignment selects, which is what makes a cross-engine
     edge-set-exact oracle possible at all.
     """
-    import numpy as np
-
-    spark = edges.sparkSession
-    parts = num_partitions or spark.sparkContext.defaultParallelism
-    partitioned = edges.select("src", "dst", "w").repartitionByRange(parts, "src")
-    winners = partitioned.mapInPandas(_msf_kernel, "src long, dst long, w long").localCheckpoint(eager=True)
-    n_winners = winners.count()
-    if n_winners <= driver_threshold:
-        pdf = winners.toPandas()
-        if len(pdf) == 0:
-            return spark.createDataFrame([], "src long, dst long, w long")
-        src = pdf["src"].to_numpy(dtype=np.int64)
-        dst = pdf["dst"].to_numpy(dtype=np.int64)
-        w = pdf["w"].to_numpy(dtype=np.int64)
-        mask = _np_forest_winners(src, dst, w)
-        out = pd.DataFrame({"src": src[mask], "dst": dst[mask], "w": w[mask]})
-        if len(out) == 0:
-            return spark.createDataFrame([], "src long, dst long, w long")
-        return spark.createDataFrame(out)
-    if _depth >= 4:
-        raise RuntimeError("minimum_spanning_forest failed to reduce below driver threshold")
-    return minimum_spanning_forest(
-        winners, num_partitions=max(2, parts // 4), driver_threshold=driver_threshold, _depth=_depth + 1
-    )
+    return _forest(edges, ["src", "dst", "w"], num_partitions)

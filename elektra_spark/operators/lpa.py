@@ -70,8 +70,11 @@ def label_propagation(
     """→ (vid, label) after exactly ``rounds`` synchronous supersteps.
 
     The vertex set is ``init_labels``' vids on a warm start, else
-    ``vertices``, else every edge endpoint. Without a ``checkpoint``, a
-    graph within ``driver_tier.SMALL_GRAPH_MAX`` runs on the driver."""
+    ``vertices``, else every edge endpoint. A warm start's labels are
+    materialized, not committed again as step ``start_step``; a fresh run
+    commits its initial labels as step ``start_step``. Without a
+    ``checkpoint``, a graph within ``driver_tier.SMALL_GRAPH_MAX`` runs on
+    the driver."""
     if checkpoint is None:
         g = (
             driver_tier.collect_small(edges, vertices)
@@ -100,7 +103,8 @@ def label_propagation(
     with _no_aqe(edges.sparkSession):
         both = checkpoint(both, -1)
         if init_labels is not None:
-            labels = checkpoint(init_labels.select("vid", "label"), start_step)
+            # a warm start is already durable: materialize, don't commit it again
+            labels = checkpoint(init_labels.select("vid", "label"), -1)
         else:
             labels = checkpoint(universe.withColumn("label", F.col("vid")), start_step)
 

@@ -771,7 +771,9 @@ def pagerank(
     map-side-combined ``groupBy(dst)`` shuffle; the heavy adjacency never
     moves again.
 
-    ``init_ranks``/``start_step`` support mid-run resume from a checkpoint.
+    ``init_ranks``/``start_step`` support mid-run resume from a checkpoint;
+    the loaded ranks are materialized, not committed again as step
+    ``start_step`` (the first commit is step ``start_step + 1``).
 
     ``bsp_prep_dir``: persistent directory for the bsp kernel's one-time
     graph encoding (bucketed edge/mirror/univ datasets + per-bucket CSR
@@ -933,10 +935,11 @@ def pagerank(
             has_no_in = has_dangling
 
         if init_ranks is not None:
+            # a warm start is already durable: materialize, don't commit it again
             ranks = checkpoint(
                 init_ranks.select(F.col("vid").cast(key_t).alias("vid"), "rank")
                 .repartition(parts, "vid"),
-                start_step,
+                -1,
             )
         else:
             ranks = checkpoint(

@@ -83,6 +83,40 @@ def test_cc_fixpoint_resume(spark, tmp_path):
     assert got == {v: 0 for v in range(64)}
 
 
+@pytest.mark.parametrize("op", ["lpa", "pagerank", "cc"])
+def test_warm_start_commits_each_superstep_once(spark, tmp_path, op):
+    """A resume from durable step k commits steps k+1.. only: the loaded
+    state is not written again as a second ``superstep=k`` snapshot, and
+    the resumed result equals the uninterrupted run."""
+    from elektra_spark.checkpoint import EphemeralCheckpointer
+    from elektra_spark.operators.lpa import label_propagation
+
+    pairs = CHAIN[:20] + [(3, 9), (30, 40), (40, 41)]
+    edges = edges_from_pairs(spark, pairs)
+    run = CheckpointedRun(spark, str(tmp_path / "wh"), op)
+    state = "ranks" if op == "pagerank" else "labels"
+    cp = run.checkpoint_fn(state)
+    if op == "lpa":
+        label_propagation(edges, rounds=2, checkpoint=cp)
+        got = label_propagation(edges, rounds=2, checkpoint=cp, start_step=2, init_labels=run.load(state))
+        full = label_propagation(edges, rounds=4, checkpoint=EphemeralCheckpointer())
+    elif op == "pagerank":
+        pagerank(edges, n_iter=3, kernel="df", checkpoint=cp)
+        got = pagerank(edges, n_iter=3, kernel="df", checkpoint=cp, start_step=3, init_ranks=run.load(state))
+        full = pagerank(edges, n_iter=6, kernel="df")
+    else:
+        both = edges.union(edges.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
+        labels0 = both.select(F.col("src").alias("vid")).distinct().withColumn("label", F.col("vid"))
+        _min_label_fixpoint(edges, labels0, max_iter=1, checkpoint=cp)
+        got = _min_label_fixpoint(edges, run.load(state), max_iter=30, checkpoint=cp, start_step=1)
+        full = _min_label_fixpoint(edges, labels0, max_iter=30)
+    steps = [int(s["operation"].split("=")[1]) for s in run.catalog.history(f"{op}_{state}")]
+    assert steps == list(range(len(steps))) and steps[-1] >= 2
+    a, b = (dict(map(tuple, df.select("vid", df.columns[1]).collect())) for df in (got, full))
+    assert a.keys() == b.keys()
+    assert all(abs(a[v] - b[v]) < 1e-12 for v in a)
+
+
 def test_lineage_and_metrics_recorded(spark, tmp_path):
     edges = edges_from_pairs(spark, CHAIN[:15])
     run = CheckpointedRun(spark, str(tmp_path / "wh"), "m")

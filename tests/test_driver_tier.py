@@ -1,7 +1,9 @@
-"""Driver-NumPy tier (operators/driver_tier.py) for PageRank and LPA.
+"""Driver fallbacks (operators/driver_tier.py): the small-graph tier of
+PageRank and LPA, and the bounded collects of CC and the forests.
 
-Every case runs with the tier on and with it off (``SMALL_GRAPH_MAX`` set to
-0, so the same call takes the Spark path), and both must match the oracle.
+Every case runs with the fallback taken and with it forced off
+(``SMALL_GRAPH_MAX`` / ``DRIVER_ROWS_MAX`` set to 0 or a small k, so the
+same call takes the Spark path), and both must give the same answer.
 """
 
 import pytest
@@ -233,3 +235,81 @@ def test_bsp_dangling_superstep_is_one_job(spark):
     st = sc.statusTracker()
     # supersteps 1..3 each ran entirely inside one group
     assert [len(st.getJobIdsForGroup(group.format(s))) for s in (1, 2, 3)] == [1, 1, 1]
+
+
+def test_cc_quotient_forced_fallback(spark, monkeypatch):
+    """With DRIVER_ROWS_MAX at 0 the csr kernel solves a non-empty quotient
+    with the distributed fixpoint, and its labels equal the driver path's."""
+    import random
+
+    from elektra_spark.operators import cc as cc_mod
+
+    from .oracles import cc_oracle
+
+    rng = random.Random(11)
+    pairs = sorted({(min(a, b), max(a, b)) for a, b in ((rng.randrange(150), rng.randrange(150)) for _ in range(130)) if a != b})
+    e = _edges(spark, pairs).repartition(7)  # many cross-partition links
+
+    def labels():
+        df = cc_mod.connected_components(e, kernel="csr", pre_partitioned=True)
+        return {r["vid"]: r["component"] for r in df.collect()}
+
+    fixpoints = []
+    real = cc_mod._min_label_fixpoint
+    monkeypatch.setattr(cc_mod, "_min_label_fixpoint", lambda *a, **kw: fixpoints.append(1) or real(*a, **kw))
+    on_driver = labels()
+    assert fixpoints == []
+    monkeypatch.setattr(driver_tier, "DRIVER_ROWS_MAX", 0)
+    distributed = labels()
+    assert fixpoints == [1]
+    assert distributed == on_driver == cc_oracle(pairs)
+
+
+@pytest.mark.parametrize("weighted", [False, True])
+def test_forest_recursion_forced_fallback(spark, monkeypatch, weighted):
+    """K20 over 8 partitions: each partition's local forest spans its own
+    src range, so the first level's winner union exceeds 2 × 19 rows; with
+    DRIVER_ROWS_MAX at 38 the forest recurses once (2 partitions, at most
+    38 winners) and gives the driver path's edge set."""
+    from elektra_spark.operators import forest as forest_mod
+
+    n = 20
+    rows = [(a, b, (7 * a + 3 * b) % 5) for a in range(n) for b in range(a + 1, n)]
+    if weighted:
+        e, op = spark.createDataFrame(rows, "src long, dst long, w long"), forest_mod.minimum_spanning_forest
+    else:
+        e, op = _edges(spark, [r[:2] for r in rows]), forest_mod.spanning_forest
+
+    def run():
+        return {tuple(r) for r in op(e, num_partitions=8).collect()}
+
+    depths = []
+    real = forest_mod._forest
+
+    def spy(edges, cols, parts, depth=0):
+        depths.append(depth)
+        return real(edges, cols, parts, depth)
+
+    monkeypatch.setattr(forest_mod, "_forest", spy)
+    on_driver = run()
+    assert depths == [0] and len(on_driver) == n - 1
+    depths.clear()
+    monkeypatch.setattr(driver_tier, "DRIVER_ROWS_MAX", 2 * (n - 1))
+    assert run() == on_driver
+    assert depths == [0, 1]
+
+
+def test_driver_bound_lives_only_in_driver_tier():
+    """The connectivity operators name no size bound of their own and
+    collect through driver_tier.collect_bounded: no bare 5_000_000 /
+    500_000 literal, no hand-written .limit(...).toPandas() probe."""
+    import re
+    from pathlib import Path
+
+    root = Path(driver_tier.__file__).resolve().parents[1]
+    size = re.compile(r"\b(5_?000_?000|500_?000)\b")
+    probe = re.compile(r"\.limit\(|\.toPandas\(")
+    for rel in ("operators/cc.py", "operators/forest.py", "dynamic/updates.py"):
+        for i, line in enumerate((root / rel).read_text().splitlines(), 1):
+            assert not size.search(line), f"{rel}:{i} size literal; use driver_tier.DRIVER_ROWS_MAX"
+            assert not probe.search(line), f"{rel}:{i} bounded collect; use driver_tier.collect_bounded"

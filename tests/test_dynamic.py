@@ -132,8 +132,10 @@ def test_randomized_differential_insert_delete(spark, catalog):
 def test_delete_slice_vertex_bound(spark, tmp_path, monkeypatch):
     """A delete slice with no edges left but many vertices (a star whose
     edges are all deleted) takes the distributed path once its vertex count
-    passes DELETE_SLICE_MAX, and lands on the driver path's labels and forest."""
+    passes driver_tier.DRIVER_ROWS_MAX, and lands on the driver path's
+    labels and forest."""
     import elektra_spark.dynamic.updates as upd
+    from elektra_spark.operators import driver_tier
 
     star = [(0, i) for i in range(1, 9)]
     cc = upd.connected_components
@@ -142,12 +144,12 @@ def test_delete_slice_vertex_bound(spark, tmp_path, monkeypatch):
         g = DynamicGraph.create(SnapshotCatalog(spark, str(tmp_path / name)), edges_from_pairs(spark, star))
         calls = []
         with monkeypatch.context() as m:
-            m.setattr(upd, "DELETE_SLICE_MAX", k)
+            m.setattr(driver_tier, "DRIVER_ROWS_MAX", k)
             m.setattr(upd, "connected_components", lambda *a, **kw: calls.append(a) or cc(*a, **kw))
             g.batch_delete_edges(spark.createDataFrame(star, "src long, dst long"))
         return bool(calls), _labels(g), sorted((r["src"], r["dst"]) for r in g.forest().collect())
 
-    driver = delete_all("driver", upd.DELETE_SLICE_MAX)
+    driver = delete_all("driver", driver_tier.DRIVER_ROWS_MAX)
     distributed = delete_all("distributed", 4)  # 0 edges, 9 vertices
     assert driver[0] is False and distributed[0] is True
     assert distributed[1:] == driver[1:] == ({v: v for v in range(9)}, [])
