@@ -52,7 +52,7 @@ def main() -> None:
             continue
         best = None
         for _ in range(REPS):
-            spark.sparkContext.setJobDescription(f"bench_extra: {name}")
+            spark.sparkContext.setJobDescription(name)
             t0 = time.time()
             df = qs[name](spark, SF_DIR)  # rebuild: builder cost is part of the query
             df.write.format("noop").mode("overwrite").save()

@@ -1,5 +1,20 @@
-"""Superstep checkpointing: the ``checkpoint=`` materializers of every
-iterative operator, and durable runs with lineage, metrics and resume (M5).
+"""Superstep runtime: the one loop helper every iterative operator runs in,
+the ``checkpoint=`` materializers, and durable runs with lineage, metrics
+and resume (M5).
+
+:func:`supersteps` is the harness. One ``with supersteps(spark, "hits",
+checkpoint, on_superstep) as loop:`` block owns the default checkpointer
+(``loop.checkpoint``), the AQE-off scope (:func:`_no_aqe`), per-superstep
+timing (``for step in loop.steps(ids): … loop.done(frontier)``), named
+phases timed into ``on_phase`` (``with loop.phase(name):``) and the Spark
+job label. Jobs run under the ``spark.job.description`` local property
+``<outer>/<operator>/prep`` before the first superstep,
+``<outer>/<operator>/superstep/<k>`` inside superstep ``k`` and
+``<outer>/<operator>/<phase>`` inside a phase, where ``<outer>`` is the
+description set when the loop started (a contract query, a benchmark span;
+omitted when none was set) — the ``query/operator/phase/step`` label an
+offline profile folds jobs by. On exit the helper restores ``<outer>``. It
+never touches ``spark.jobGroup.id``, which callers use to count jobs.
 
 A :class:`CheckpointedRun` makes each superstep durable with **one catalog
 commit**: a snapshot of the ``<run_id>_<state>`` table, one atomic manifest
@@ -11,10 +26,11 @@ footers, no Spark job; ``partition_id`` is the write task's index
 dumps. So a superstep is resumable exactly when its lineage is recorded.
 The hook appends frontier metrics ``(run_id, state, superstep, frontier,
 seconds)`` to the same manifest (one swap, no Spark job; the reference's
-benchmarks/get_time.h timers). ``lineage_table()``/``metrics_table()`` read
-both back for every run under the root. ``latest_step()`` is the last
-durable superstep; operators take ``start_step``/``init_*`` to resume
-mid-iteration (tests/test_checkpoint.py: kill-and-resume, crash window).
+benchmarks/get_time.h timers, taken by :func:`supersteps`).
+``lineage_table()``/``metrics_table()`` read both back for every run under
+the root. ``latest_step()`` is the last durable superstep; operators take
+``start_step``/``init_*`` to resume mid-iteration (tests/test_checkpoint.py:
+kill-and-resume, crash window).
 """
 
 from __future__ import annotations
@@ -23,7 +39,7 @@ import os
 import shutil
 import time
 from collections.abc import Callable
-from contextlib import contextmanager
+from contextlib import contextmanager, nullcontext
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
@@ -64,6 +80,16 @@ def _no_aqe(spark: SparkSession):
 # Liveness: EphemeralCheckpointer additionally assumes a SINGLE state chain
 # (each call's output is consumed only by the next call's input); loops that
 # retain several live frames per round must use RetainedCheckpointer.
+#
+# SuperstepHook contract: hook(step, frontier, seconds), called once per
+# superstep by ``loop.done`` (see :func:`supersteps`) after the step's
+# checkpoint or count and before the loop's early exit. ``frontier`` is the
+# operator's change count for that step (-1 when it has none); ``seconds``
+# is the wall time from the start of the step body — after the previous
+# hook returned, so time a hook spends blocking is never charged to a step
+# — to the call. Step ids are the operator's own (resumed runs continue
+# from ``start_step``; betweenness numbers its backward pass above
+# ``max_hops``).
 CheckpointFn = Callable[[DataFrame, int], DataFrame]
 SuperstepHook = Callable[[int, int, float], Any]
 
@@ -170,6 +196,86 @@ class EphemeralCheckpointer:
             # lineage (back to the last hard commit) stays replayable
             self._persisted.pop(0).unpersist()
         return out
+
+
+_DESC = "spark.job.description"
+
+
+class _Loop:
+    """What a :func:`supersteps` block hands its operator."""
+
+    def __init__(self, sc, prefix, checkpoint, default, on_superstep, on_phase):
+        self._sc, self._prefix = sc, prefix
+        self._checkpoint, self._default = checkpoint, default
+        self._on_superstep, self._on_phase = on_superstep, on_phase
+        self._step, self._t0 = None, 0.0
+
+    @property
+    def checkpoint(self) -> CheckpointFn:
+        """The caller's checkpointer, else the default, built on first use
+        (a driver-side path that never checkpoints makes no scratch dir)."""
+        if self._checkpoint is None:
+            self._checkpoint = self._default()
+        return self._checkpoint
+
+    def _label(self, part: str) -> None:
+        self._sc.setLocalProperty(_DESC, f"{self._prefix}/{part}")
+
+    def steps(self, ids):
+        """Yield each step id; the step's label and clock start as its body
+        does."""
+        for step in ids:
+            self._label(f"superstep/{step}")
+            self._step, self._t0 = step, time.time()
+            yield step
+
+    def done(self, frontier=-1) -> None:
+        """Report the current step to ``on_superstep``. ``frontier`` may be
+        a zero-argument callable, evaluated (inside the timed window) only
+        when a hook listens — for counts that cost a job."""
+        if self._on_superstep is not None:
+            if callable(frontier):
+                frontier = frontier()
+            self._on_superstep(self._step, frontier, time.time() - self._t0)
+
+    @contextmanager
+    def phase(self, name: str):
+        """A named non-superstep phase, timed into ``on_phase(name, s)``."""
+        self._label(name)
+        t0 = time.time()
+        yield
+        if self._on_phase is not None:
+            self._on_phase(name, time.time() - t0)
+
+
+@contextmanager
+def supersteps(
+    spark: SparkSession,
+    operator: str,
+    checkpoint: CheckpointFn | None = None,
+    on_superstep: SuperstepHook | None = None,
+    default: Callable[[], CheckpointFn] = RetainedCheckpointer,
+    on_phase: Callable[[str, float], Any] | None = None,
+    no_aqe: bool = True,
+):
+    """The superstep runtime of one operator call (module docstring).
+
+    ``default`` builds the checkpointer when the caller passed none:
+    :class:`RetainedCheckpointer` is safe for any loop;
+    :class:`EphemeralCheckpointer` is faster but only for loops that keep a
+    single live state chain. ``no_aqe=False`` leaves AQE alone, for
+    operators whose heavy one-shot phases want it (CC's csr collapse).
+    """
+    sc = spark.sparkContext
+    outer = sc.getLocalProperty(_DESC)
+    prefix = f"{outer}/{operator}" if outer else operator
+    loop = _Loop(sc, prefix, checkpoint, default, on_superstep, on_phase)
+    loop._label("prep")
+    try:
+        with _no_aqe(spark) if no_aqe else nullcontext():
+            yield loop
+    finally:
+        sc.setLocalProperty(_DESC, outer)
 
 
 class CheckpointedRun:

@@ -31,13 +31,10 @@ same order as one rank vector per PageRank superstep.
 
 from __future__ import annotations
 
-import math
-import time
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..checkpoint import CheckpointFn, RetainedCheckpointer, SuperstepHook, _no_aqe
+from ..checkpoint import CheckpointFn, SuperstepHook, supersteps
 
 # rho for a zero mantissa (md5 chars 3..15 all zero — probability 2^-52);
 # also the max trailing-zero count + 1 the 52-bit slice can produce
@@ -98,8 +95,6 @@ def hyperball(
     if m < 2 or m > 256 or (m & (m - 1)):
         raise ValueError(f"m must be a power of two in [2, 256], got {m}")
     spark = edges.sparkSession
-    if checkpoint is None:
-        checkpoint = RetainedCheckpointer()
     e = edges.select(F.col("src").cast("long").alias("src"), F.col("dst").cast("long").alias("dst"))
     both = e.union(e.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
     if vertices is not None:
@@ -107,14 +102,14 @@ def hyperball(
     else:
         universe = both.select(F.col("src").alias("vid")).distinct()
     reg, rho = _reg_rho(F.col("vid"), m)
-    with _no_aqe(spark):
+    with supersteps(spark, "hyperball", checkpoint, on_superstep) as loop:
+        checkpoint = loop.checkpoint
         both = checkpoint(both, -1)
         regs = checkpoint(universe.select("vid", reg, rho), 0)
         out = regs.groupBy("vid").agg(_ball_estimate(m)).select(
             "vid", F.lit(0).alias("hop"), "ball_est"
         )
-        for t in range(1, hops + 1):
-            t0 = time.time()
+        for t in loop.steps(range(1, hops + 1)):
             pushed = (
                 both.join(regs.withColumnRenamed("vid", "dst"), "dst")
                 .select(F.col("src").alias("vid"), "reg", "rho")
@@ -123,8 +118,7 @@ def hyperball(
                 regs.unionByName(pushed).groupBy("vid", "reg").agg(F.max("rho").alias("rho")),
                 t,
             )
-            if on_superstep is not None:
-                on_superstep(t, regs.count(), time.time() - t0)
+            loop.done(regs.count)
             out = out.unionByName(
                 regs.groupBy("vid").agg(_ball_estimate(m)).select(
                     "vid", F.lit(t).alias("hop"), "ball_est"

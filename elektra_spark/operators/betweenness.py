@@ -43,12 +43,10 @@ max_hops`` regardless of ``|S|``.
 
 from __future__ import annotations
 
-import time
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..checkpoint import CheckpointFn, RetainedCheckpointer, SuperstepHook, _no_aqe
+from ..checkpoint import CheckpointFn, SuperstepHook, supersteps
 
 
 def betweenness(
@@ -77,19 +75,15 @@ def betweenness(
     else:
         seed = spark.createDataFrame([(int(v),) for v in sources], "vid long").distinct()
 
-    if checkpoint is None:
-        # forward levels stay live through the backward pass — Retained, not
-        # the single-chain Ephemeral variant
-        checkpoint = RetainedCheckpointer()
-    with _no_aqe(spark):
+    with supersteps(spark, "betweenness", checkpoint, on_superstep) as loop:
+        checkpoint = loop.checkpoint
         both = checkpoint(both, -1)
         level0 = checkpoint(
             seed.select(F.col("vid").alias("s"), "vid", F.lit(1.0).alias("sigma")), 0
         )
         levels = [level0]
         visited = level0.select("s", "vid")
-        for step in range(1, max_hops + 1):
-            t0 = time.time()
+        for step in loop.steps(range(1, max_hops + 1)):
             frontier = levels[-1]
             nxt = (
                 both.join(frontier.withColumnRenamed("vid", "src"), "src")
@@ -99,8 +93,7 @@ def betweenness(
             )
             nxt = checkpoint(nxt, step)
             n_new = nxt.count()
-            if on_superstep is not None:
-                on_superstep(step, n_new, time.time() - t0)
+            loop.done(n_new)
             if n_new == 0:
                 break
             levels.append(nxt)
@@ -109,11 +102,13 @@ def betweenness(
         # backward dependency accumulation: deepest level has no successors
         # (delta = 0); walk the DAG back to level 1. The deepest level's
         # zero-delta rows join the output union so every reached non-source
-        # vertex gets a row even without ``vertices``.
+        # vertex gets a row even without ``vertices``. Backward step ids live
+        # above the forward range (max_hops + 1 + i for level i) so a shared
+        # checkpoint namespace never collides.
         succ = levels[-1].withColumn("delta", F.lit(0.0))
         deltas: list[DataFrame] = [succ] if len(levels) > 1 else []
-        for i in range(len(levels) - 2, -1, -1):
-            t0 = time.time()
+        for step in loop.steps(range(max_hops + len(levels) - 1, max_hops, -1)):
+            i = step - max_hops - 1
             cur = levels[i]
             contrib = (
                 cur.join(both, cur["vid"] == both["src"])
@@ -128,11 +123,8 @@ def betweenness(
             cur_d = cur.join(contrib, ["s", "vid"], "left").select(
                 "s", "vid", "sigma", F.coalesce("delta", F.lit(0.0)).alias("delta")
             )
-            # backward step ids live above the forward range (max_hops + 1 + i)
-            # so a shared checkpoint namespace never collides
-            cur_d = checkpoint(cur_d, max_hops + 1 + i)
-            if on_superstep is not None:
-                on_superstep(max_hops + 1 + i, -1, time.time() - t0)
+            cur_d = checkpoint(cur_d, step)
+            loop.done()
             succ = cur_d
             if i >= 1:  # the source's own delta (level 0) is not part of bc
                 deltas.append(cur_d)

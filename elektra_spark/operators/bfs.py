@@ -21,7 +21,7 @@ Execution is textbook BSP frontier expansion:
    dedupes candidates (map-side combinable ``distinct``), and anti-joins
    the visited set to produce the next frontier,
 3. the visited set grows monotonically; each superstep is checkpointed to
-   truncate lineage (same EphemeralCheckpointer machinery as CC/LPA).
+   truncate lineage (the RetainedCheckpointer of :mod:`elektra_spark.checkpoint`).
 
 At 100 TB: per-superstep shuffle volume is ``|frontier| × avg-degree``
 candidate rows — proportional to the wavefront, not the graph. The visited
@@ -33,24 +33,24 @@ bounded and unbounded cases the same loop.
 
 from __future__ import annotations
 
-import time
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..checkpoint import CheckpointFn, RetainedCheckpointer, SuperstepHook, _no_aqe
+from ..checkpoint import CheckpointFn, SuperstepHook, supersteps
 
 
 def _expand_frontier(
     spark,
+    operator: str,
     both: DataFrame,
     seed: DataFrame,
     keys: list[str],
     max_hops: int,
-    checkpoint: CheckpointFn,
+    checkpoint: CheckpointFn | None,
     on_superstep: SuperstepHook | None,
 ) -> DataFrame:
-    """Shared BFS frontier-expansion loop → the visited set (keys + dist).
+    """Shared BFS frontier-expansion loop → the visited set (keys + dist),
+    run as ``operator``'s superstep loop.
 
     ``keys`` names the state key columns, last one always ``vid`` (the
     vertex the frontier expands through); extra leading keys ride along
@@ -60,12 +60,12 @@ def _expand_frontier(
     / early-exit semantics cannot diverge between the two operators.
     """
     carry = [k for k in keys if k != "vid"]
-    with _no_aqe(spark):
+    with supersteps(spark, operator, checkpoint, on_superstep) as loop:
+        checkpoint = loop.checkpoint
         both = checkpoint(both, -1)
         visited = checkpoint(seed, 0)
         frontier = visited.select(*keys)
-        for step in range(1, max_hops + 1):
-            t0 = time.time()
+        for step in loop.steps(range(1, max_hops + 1)):
             nxt = (
                 both.join(frontier.withColumnRenamed("vid", "src"), "src")
                 .select(*carry, F.col("dst").alias("vid"))
@@ -75,8 +75,7 @@ def _expand_frontier(
             )
             nxt = checkpoint(nxt, step)
             n_new = nxt.count()
-            if on_superstep is not None:
-                on_superstep(step, n_new, time.time() - t0)
+            loop.done(n_new)
             if n_new == 0:
                 break
             visited = checkpoint(visited.unionByName(nxt), step)
@@ -104,12 +103,9 @@ def hop_distance(
     else:
         seed = spark.createDataFrame([(int(v),) for v in sources], "vid long").distinct()
 
-    if checkpoint is None:
-        # this loop retains multiple live frames per round — the single-chain
-        # EphemeralCheckpointer would delete files a held frame still reads
-        checkpoint = RetainedCheckpointer()
     visited = _expand_frontier(
-        spark, both, seed.withColumn("dist", F.lit(0)), ["vid"], max_hops, checkpoint, on_superstep
+        spark, "hop_distance", both, seed.withColumn("dist", F.lit(0)), ["vid"], max_hops,
+        checkpoint, on_superstep,
     )
     out = visited.select("vid", F.col("dist").cast("int").alias("dist"))
     if vertices is not None:
@@ -161,14 +157,11 @@ def weighted_distance(
     else:
         seed = spark.createDataFrame([(int(v),) for v in sources], "vid long").distinct()
 
-    if checkpoint is None:
-        # static adjacency + evolving distance vector live concurrently
-        checkpoint = RetainedCheckpointer()
-    with _no_aqe(spark):
+    with supersteps(spark, "weighted_distance", checkpoint, on_superstep) as loop:
+        checkpoint = loop.checkpoint
         both = checkpoint(both, -1)
         dist = checkpoint(seed.withColumn("dist", F.lit(0).cast("long")), 0)
-        for step in range(1, max_hops + 1):
-            t0 = time.time()
+        for step in loop.steps(range(1, max_hops + 1)):
             relaxed = (
                 both.join(dist.withColumnRenamed("vid", "src").withColumnRenamed("dist", "d"), "src")
                 .select(F.col("dst").alias("vid"), (F.col("d") + F.col("w")).alias("dist"))
@@ -186,8 +179,7 @@ def weighted_distance(
             # improved dist" — a changed row's (vid, dist) pair is absent
             # from the previous table either way
             changed = nxt.join(dist, ["vid", "dist"], "left_anti").limit(1).count()
-            if on_superstep is not None:
-                on_superstep(step, changed, time.time() - t0)
+            loop.done(changed)
             dist = nxt
             if changed == 0:
                 break
@@ -255,11 +247,9 @@ def harmonic_centrality(
     else:
         seed = spark.createDataFrame([(int(v),) for v in landmarks], "lmk long").distinct()
 
-    if checkpoint is None:
-        # multiple live frames per round (static adjacency + visited + frontier)
-        checkpoint = RetainedCheckpointer()
     visited = _expand_frontier(
         spark,
+        "harmonic_centrality",
         both,
         seed.select("lmk", F.col("lmk").alias("vid"), F.lit(0).alias("dist")),
         ["lmk", "vid"],
@@ -311,10 +301,9 @@ def closeness_centrality(
     else:
         seed = spark.createDataFrame([(int(v),) for v in landmarks], "lmk long").distinct()
 
-    if checkpoint is None:
-        checkpoint = RetainedCheckpointer()
     visited = _expand_frontier(
         spark,
+        "closeness_centrality",
         both,
         seed.select("lmk", F.col("lmk").alias("vid"), F.lit(0).alias("dist")),
         ["lmk", "vid"],
@@ -420,13 +409,11 @@ def widest_path(
         seed = sources.select(F.col("vid").cast("long").alias("vid")).distinct()
     else:
         seed = spark.createDataFrame([(int(v),) for v in sources], "vid long").distinct()
-    if checkpoint is None:
-        checkpoint = RetainedCheckpointer()
-    with _no_aqe(spark):
+    with supersteps(spark, "widest_path", checkpoint, on_superstep) as loop:
+        checkpoint = loop.checkpoint
         both = checkpoint(both, -1)
         width = checkpoint(seed.withColumn("width", F.lit(WIDEST_SOURCE_W).cast("long")), 0)
-        for step in range(1, max_hops + 1):
-            t0 = time.time()
+        for step in loop.steps(range(1, max_hops + 1)):
             relaxed = (
                 both.join(width.withColumnRenamed("vid", "src").withColumnRenamed("width", "wd"), "src")
                 .select(F.col("dst").alias("vid"), F.least("wd", "w").alias("width"))
@@ -436,8 +423,7 @@ def widest_path(
             # monotone (per-vid max only rises, vertex set only grows), so
             # the two-column anti-join is an exact change probe
             changed = nxt.join(width, ["vid", "width"], "left_anti").limit(1).count()
-            if on_superstep is not None:
-                on_superstep(step, changed, time.time() - t0)
+            loop.done(changed)
             width = nxt
             if changed == 0:
                 break

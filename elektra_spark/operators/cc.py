@@ -37,7 +37,6 @@ a fully map-side-combinable aggregate.
 
 from __future__ import annotations
 
-import time
 from collections.abc import Callable, Iterator
 from typing import Any
 
@@ -45,7 +44,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..checkpoint import CheckpointFn, EphemeralCheckpointer, SuperstepHook, _no_aqe
+from ..checkpoint import CheckpointFn, EphemeralCheckpointer, SuperstepHook, supersteps
 from . import driver_tier
 
 
@@ -183,64 +182,52 @@ def _min_label_fixpoint(
     materialized without a second commit of step ``start_step``; a fresh
     run (``start_step == 0``) commits them as step 0.
     """
-    if checkpoint is None:
-        checkpoint = EphemeralCheckpointer()
     both = edges.select("src", "dst").union(edges.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-    with _no_aqe(edges.sparkSession):
-        return _min_label_loop(both, labels, max_iter, checkpoint, on_superstep, start_step)
+    with supersteps(
+        edges.sparkSession, "connected_components", checkpoint, on_superstep, EphemeralCheckpointer
+    ) as loop:
+        checkpoint = loop.checkpoint
+        both = checkpoint(both, -1)  # materialize once; reused every superstep
 
-
-def _min_label_loop(
-    both: DataFrame,
-    labels: DataFrame,
-    max_iter: int,
-    checkpoint: CheckpointFn,
-    on_superstep: SuperstepHook | None,
-    start_step: int,
-) -> DataFrame:
-    both = checkpoint(both, -1)  # materialize once; reused every superstep
-
-    labels = checkpoint(labels.select("vid", "label"), -1 if start_step else 0)
-    for step in range(start_step, start_step + max_iter):
-        t0 = time.time()
-        # Superstep = hash-to-min cluster exchange, two aggregations:
-        #  1. candidate min per vertex: own label, neighbors' labels, and
-        #     label[label[v]] (pointer-jump messages w → v for label[v] = w —
-        #     the BSP analogue of find_compress, elektra union_find.h:188-205);
-        #  2. star broadcast: the min candidate of each label-group flows to
-        #     every member, so a min discovered anywhere in a cluster reaches
-        #     the whole cluster next round — without it a min arriving
-        #     mid-chain crawls one hop per round. Clusters merge by doubling
-        #     → O(log n) supersteps.
-        # Both aggregates are min() — map-side combinable, so hub vertices /
-        # giant components cost one combiner entry per map partition, never a
-        # hot reducer.
-        jump_msgs = labels.select(F.col("label").alias("src"), F.col("vid").alias("dst"))
-        msgs = both.union(jump_msgs)
-        nbr = (
-            msgs.join(labels, msgs.src == labels.vid)
-            .select(F.col("dst").alias("vid"), "label")
-            .groupBy("vid")
-            .agg(F.min("label").alias("nbr_min"))
-        )
-        cand = labels.join(nbr, "vid", "left").select(
-            "vid",
-            F.col("label"),
-            F.least(F.col("label"), F.coalesce("nbr_min", F.col("label"))).alias("cmin"),
-        )
-        star = cand.groupBy("label").agg(F.min("cmin").alias("star_min"))
-        new_labels = (
-            cand.join(star, "label")
-            .select("vid", F.col("label").alias("old"), F.least("cmin", "star_min").alias("label"))
-            .select("vid", "label", (F.col("old") != F.col("label")).alias("changed"))
-        )
-        cp = checkpoint(new_labels, step + 1)  # durable state: (vid, label, changed)
-        changed = cp.filter("changed").count()
-        labels = cp.select("vid", "label")
-        if on_superstep is not None:
-            on_superstep(step, changed, time.time() - t0)
-        if changed == 0:
-            break
+        labels = checkpoint(labels.select("vid", "label"), -1 if start_step else 0)
+        for step in loop.steps(range(start_step, start_step + max_iter)):
+            # Superstep = hash-to-min cluster exchange, two aggregations:
+            #  1. candidate min per vertex: own label, neighbors' labels, and
+            #     label[label[v]] (pointer-jump messages w → v for label[v] = w —
+            #     the BSP analogue of find_compress, elektra union_find.h:188-205);
+            #  2. star broadcast: the min candidate of each label-group flows to
+            #     every member, so a min discovered anywhere in a cluster reaches
+            #     the whole cluster next round — without it a min arriving
+            #     mid-chain crawls one hop per round. Clusters merge by doubling
+            #     → O(log n) supersteps.
+            # Both aggregates are min() — map-side combinable, so hub vertices /
+            # giant components cost one combiner entry per map partition, never a
+            # hot reducer.
+            jump_msgs = labels.select(F.col("label").alias("src"), F.col("vid").alias("dst"))
+            msgs = both.union(jump_msgs)
+            nbr = (
+                msgs.join(labels, msgs.src == labels.vid)
+                .select(F.col("dst").alias("vid"), "label")
+                .groupBy("vid")
+                .agg(F.min("label").alias("nbr_min"))
+            )
+            cand = labels.join(nbr, "vid", "left").select(
+                "vid",
+                F.col("label"),
+                F.least(F.col("label"), F.coalesce("nbr_min", F.col("label"))).alias("cmin"),
+            )
+            star = cand.groupBy("label").agg(F.min("cmin").alias("star_min"))
+            new_labels = (
+                cand.join(star, "label")
+                .select("vid", F.col("label").alias("old"), F.least("cmin", "star_min").alias("label"))
+                .select("vid", "label", (F.col("old") != F.col("label")).alias("changed"))
+            )
+            cp = checkpoint(new_labels, step + 1)  # durable state: (vid, label, changed)
+            changed = cp.filter("changed").count()
+            labels = cp.select("vid", "label")
+            loop.done(changed)
+            if changed == 0:
+                break
     return labels
 
 
@@ -344,88 +331,88 @@ def connected_components(
     absorbs cross-partition structure), clustering only keeps the quotient
     small.
 
-    ``on_phase(name, seconds)``: observability hook for the csr kernel's three
-    eager phases (``collapse_repart`` = local union-find kernel + the one
-    vid-shuffle of the pair table, ``quotient_probe`` = links collect,
-    ``quotient_solve`` = driver UF or distributed fixpoint); the final label
-    resolve is lazy and lands in the caller's action.
+    ``on_phase``: observability hook, called with ``(name, seconds)`` for
+    the csr kernel's three eager phases (``collapse_repart`` = local
+    union-find kernel + the one vid-shuffle of the pair table,
+    ``quotient_probe`` = links collect, ``quotient_solve`` = driver UF or
+    distributed fixpoint; each a ``loop.phase`` of
+    :func:`~elektra_spark.checkpoint.supersteps`, which also labels its
+    jobs); the final label resolve is lazy and lands in the caller's
+    action.
     """
     if kernel not in ("auto", "csr", "df"):
         raise ValueError(f"unknown connected_components kernel {kernel!r}; expected auto|csr|df")
     spark = edges.sparkSession
-    if checkpoint is None:
-        checkpoint = EphemeralCheckpointer()
-    if kernel == "auto":
-        kernel = "csr"
-
-    def _ph(name: str, t0: float) -> None:
-        if on_phase is not None:
-            on_phase(name, time.time() - t0)
-
-    if kernel == "csr":
-        spark_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
-        parts = num_partitions or edges.sparkSession.sparkContext.defaultParallelism
-        partitioned = edges.select("src", "dst")
-        if not pre_partitioned:
-            partitioned = partitioned.repartitionByRange(parts, "src")
-        pairs = partitioned.mapInArrow(_local_cc_kernel, "vid long, comp long")
-        # The (vid, local-root) pair table is shuffled by vid exactly once,
-        # and ONE second-level union-find pass (:func:`_merge_cc_kernel`)
-        # over each hash partition emits both the per-vid seed labels and
-        # the residual quotient links, materialized together. This replaced
-        # a JVM chain (checkpoint the full pair table → groupBy-min seeds →
-        # second checkpoint → pair⋈seed self-join → dropDuplicates) that
-        # re-walked the ~|V|-row pair table several times to find a quotient
-        # measured at a few hundred rows on src-clustered input — the
-        # single-pass shape cut the 1-core collapse phase roughly in half at
-        # the 8.3M-edge bench scale (guide §2.4). The quotient's size is the
-        # number of cross-partition adjacencies between local components —
-        # orders of magnitude smaller than V for src-clustered input
-        # (conversation boundaries + tool hubs), which is what makes the
-        # driver fallback viable.
-        t0 = time.time()
-        # eager materialization on purpose: ONE fully parallel job. Fusing
-        # the materialization into the quotient probe's limit-collect was
-        # tried and reverted — CollectLimit materializes incrementally
-        # (1 partition, then 4, then the rest), which serializes the merge
-        # tasks and cost ~50% at 4 cores (measured 4.2 s → 6.3 s).
-        tagged = checkpoint(
-            pairs.repartition(spark_parts, "vid").mapInArrow(
-                _merge_cc_kernel, "vid long, label long, link boolean"
-            ),
-            -2,
-        )
-        seeds = tagged.filter(~F.col("link")).select("vid", "label")
-        _ph("collapse_repart", t0)
-        links = tagged.filter(F.col("link")).select(
-            F.col("vid").alias("src"), F.col("label").alias("dst")
-        )
-        # one job decides the path AND collects the quotient when small
-        t0 = time.time()
-        head = driver_tier.collect_bounded(links, driver_tier.DRIVER_ROWS_MAX)
-        _ph("quotient_probe", t0)
-        t0 = time.time()
-        if head is not None:
-            # Sequential fallback below threshold — the same trade the
-            # reference makes (batch ≤ 75 handled sequentially,
-            # euler_tour_tree.h:279): the root quotient fits on the driver,
-            # so one vectorized NumPy union-find replaces O(log n) shuffle
-            # rounds; the quotient was already collected by the path probe.
-            # With no links every seed is already its component min and
-            # there is nothing to resolve (None).
-            resolve = _driver_union_find(spark, head)
-            if resolve is not None:
-                resolve = F.broadcast(resolve)
-        else:
-            endpoints = links.select(F.col("src").alias("vid")).union(
-                links.select(F.col("dst").alias("vid"))
-            ).distinct()
-            labels0 = endpoints.withColumn("label", F.col("vid"))
-            root_map = _min_label_fixpoint(links, labels0, max_iter, checkpoint, on_superstep)
-            resolve = root_map.filter(F.col("vid") != F.col("label")).select(
-                F.col("vid").alias("label"), F.col("label").alias("root")
+    if kernel == "df":
+        endpoints = edges.select(F.col("src").alias("vid")).union(edges.select(F.col("dst").alias("vid"))).distinct()
+        labels0 = endpoints.withColumn("label", F.col("vid"))
+        labels = _min_label_fixpoint(edges, labels0, max_iter, checkpoint, on_superstep)
+    else:
+        with supersteps(
+            spark, "connected_components", checkpoint, default=EphemeralCheckpointer, on_phase=on_phase, no_aqe=False
+        ) as loop:
+            spark_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
+            parts = num_partitions or spark.sparkContext.defaultParallelism
+            partitioned = edges.select("src", "dst")
+            if not pre_partitioned:
+                partitioned = partitioned.repartitionByRange(parts, "src")
+            pairs = partitioned.mapInArrow(_local_cc_kernel, "vid long, comp long")
+            # The (vid, local-root) pair table is shuffled by vid exactly once,
+            # and ONE second-level union-find pass (:func:`_merge_cc_kernel`)
+            # over each hash partition emits both the per-vid seed labels and
+            # the residual quotient links, materialized together. This replaced
+            # a JVM chain (checkpoint the full pair table → groupBy-min seeds →
+            # second checkpoint → pair⋈seed self-join → dropDuplicates) that
+            # re-walked the ~|V|-row pair table several times to find a quotient
+            # measured at a few hundred rows on src-clustered input — the
+            # single-pass shape cut the 1-core collapse phase roughly in half at
+            # the 8.3M-edge bench scale (guide §2.4). The quotient's size is the
+            # number of cross-partition adjacencies between local components —
+            # orders of magnitude smaller than V for src-clustered input
+            # (conversation boundaries + tool hubs), which is what makes the
+            # driver fallback viable.
+            with loop.phase("collapse_repart"):
+                # eager materialization on purpose: ONE fully parallel job.
+                # Fusing the materialization into the quotient probe's
+                # limit-collect was tried and reverted — CollectLimit
+                # materializes incrementally (1 partition, then 4, then the
+                # rest), which serializes the merge tasks and cost ~50% at 4
+                # cores (measured 4.2 s → 6.3 s).
+                tagged = loop.checkpoint(
+                    pairs.repartition(spark_parts, "vid").mapInArrow(
+                        _merge_cc_kernel, "vid long, label long, link boolean"
+                    ),
+                    -2,
+                )
+                seeds = tagged.filter(~F.col("link")).select("vid", "label")
+            links = tagged.filter(F.col("link")).select(
+                F.col("vid").alias("src"), F.col("label").alias("dst")
             )
-        _ph("quotient_solve", t0)
+            # one job decides the path AND collects the quotient when small
+            with loop.phase("quotient_probe"):
+                head = driver_tier.collect_bounded(links, driver_tier.DRIVER_ROWS_MAX)
+            with loop.phase("quotient_solve"):
+                if head is not None:
+                    # Sequential fallback below threshold — the same trade the
+                    # reference makes (batch ≤ 75 handled sequentially,
+                    # euler_tour_tree.h:279): the root quotient fits on the
+                    # driver, so one vectorized NumPy union-find replaces
+                    # O(log n) shuffle rounds; the quotient was already
+                    # collected by the path probe. With no links every seed is
+                    # already its component min and there is nothing to
+                    # resolve (None).
+                    resolve = _driver_union_find(spark, head)
+                    if resolve is not None:
+                        resolve = F.broadcast(resolve)
+                else:
+                    endpoints = links.select(F.col("src").alias("vid")).union(
+                        links.select(F.col("dst").alias("vid"))
+                    ).distinct()
+                    labels0 = endpoints.withColumn("label", F.col("vid"))
+                    root_map = _min_label_fixpoint(links, labels0, max_iter, loop.checkpoint, on_superstep)
+                    resolve = root_map.filter(F.col("vid") != F.col("label")).select(
+                        F.col("vid").alias("label"), F.col("label").alias("root")
+                    )
         # resolve each vertex's seed through the root mapping
         if resolve is None:
             labels = seeds
@@ -434,10 +421,6 @@ def connected_components(
                 seeds.join(resolve, "label", "left")
                 .select("vid", F.coalesce("root", F.col("label")).alias("label"))
             )
-    else:
-        endpoints = edges.select(F.col("src").alias("vid")).union(edges.select(F.col("dst").alias("vid"))).distinct()
-        labels0 = endpoints.withColumn("label", F.col("vid"))
-        labels = _min_label_fixpoint(edges, labels0, max_iter, checkpoint, on_superstep)
 
     result = labels.select("vid", F.col("label").alias("component"))
     if vertices is not None:

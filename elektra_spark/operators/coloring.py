@@ -22,12 +22,10 @@ State = the uncolored frontier, strictly shrinking.
 
 from __future__ import annotations
 
-import time
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..checkpoint import CheckpointFn, RetainedCheckpointer, SuperstepHook, _no_aqe
+from ..checkpoint import CheckpointFn, SuperstepHook, supersteps
 
 
 def _vertex_priority() -> F.Column:
@@ -49,8 +47,6 @@ def greedy_coloring(
 ) -> DataFrame:
     """→ (vid, color): the Jones–Plassmann greedy coloring (0-based colors;
     adjacent vertices never share one; isolated vertices take color 0)."""
-    if checkpoint is None:
-        checkpoint = RetainedCheckpointer()
     spark = edges.sparkSession
     e = edges.select(
         F.col("src").cast("long").alias("src"), F.col("dst").cast("long").alias("dst")
@@ -60,13 +56,13 @@ def greedy_coloring(
         universe = vertices.select(F.col("vid").cast("long").alias("vid")).distinct()
     else:
         universe = both.select(F.col("src").alias("vid")).distinct()
-    with _no_aqe(spark):
+    with supersteps(spark, "greedy_coloring", checkpoint, on_superstep) as loop:
+        checkpoint = loop.checkpoint
         both = checkpoint(both, -1)
         pri = universe.select("vid", _vertex_priority().alias("h"))
         uncolored = checkpoint(pri, 0)
         colored: DataFrame | None = None  # (vid, color)
-        for rnd in range(1, max_rounds + 1):
-            t0 = time.time()
+        for rnd in loop.steps(range(1, max_rounds + 1)):
             # strict local max among UNCOLORED neighbors (absent ⇒ wins)
             nbr_max = (
                 both.join(uncolored.withColumnRenamed("vid", "src").withColumnRenamed("h", "hs"), "src")
@@ -112,8 +108,7 @@ def greedy_coloring(
                 new_colored = winners.select("vid", F.lit(0).alias("color"))
             new_colored = checkpoint(new_colored.select("vid", F.col("color").cast("int").alias("color")), rnd)
             n_new = new_colored.count()
-            if on_superstep is not None:
-                on_superstep(rnd, n_new, time.time() - t0)
+            loop.done(n_new)
             colored = (
                 new_colored
                 if colored is None

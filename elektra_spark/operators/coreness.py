@@ -43,12 +43,10 @@ tens on real link graphs, independent of vertex count.
 
 from __future__ import annotations
 
-import time
-
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..checkpoint import CheckpointFn, RetainedCheckpointer, SuperstepHook, _no_aqe
+from ..checkpoint import CheckpointFn, SuperstepHook, supersteps
 
 
 def coreness(
@@ -66,10 +64,8 @@ def coreness(
     the budget was set below the instance's depth).
     """
     spark = edges.sparkSession
-    if checkpoint is None:
-        # two live frames per round (scores + next) — needs retained files
-        checkpoint = RetainedCheckpointer()
-    with _no_aqe(spark):
+    with supersteps(spark, "coreness", checkpoint, on_superstep) as loop:
+        checkpoint = loop.checkpoint
         e = checkpoint(edges.select("src", "dst"), -1)
         both = e.union(e.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
         scores = checkpoint(
@@ -88,8 +84,7 @@ def coreness(
         prev_sum = scores.agg(F.sum("c")).collect()[0][0]
         if prev_sum is None:  # no edges → no rows; every vertex is outside any core
             return spark.createDataFrame([], "vid long, coreness long")
-        for step in range(1, max_rounds + 1):
-            t0 = time.time()
+        for step in loop.steps(range(1, max_rounds + 1)):
             nb = both.join(
                 scores.select(F.col("vid").alias("dst"), F.col("c").alias("cn")), "dst"
             ).select(F.col("src").alias("vid"), "cn")
@@ -102,8 +97,7 @@ def coreness(
             nxt = checkpoint(nxt, step)
             cur_sum = nxt.agg(F.sum("c")).collect()[0][0]
             delta = prev_sum - cur_sum
-            if on_superstep is not None:
-                on_superstep(step, delta, time.time() - t0)
+            loop.done(delta)
             scores, prev_sum = nxt, cur_sum
             if delta == 0:
                 return scores.select("vid", F.col("c").alias("coreness"))

@@ -18,12 +18,10 @@ is identical to the audited HITS/PageRank superstep.
 
 from __future__ import annotations
 
-import time
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..checkpoint import CheckpointFn, RetainedCheckpointer, SuperstepHook, _no_aqe
+from ..checkpoint import CheckpointFn, SuperstepHook, supersteps
 from .hits import _l1, _spread
 
 
@@ -44,18 +42,15 @@ def eigenvector_centrality(
     else:
         universe = both.select(F.col("src").alias("vid")).distinct()
 
-    if checkpoint is None:
-        checkpoint = RetainedCheckpointer()
-    with _no_aqe(spark):
+    with supersteps(spark, "eigenvector_centrality", checkpoint, on_superstep) as loop:
+        checkpoint = loop.checkpoint
         both = checkpoint(both, -1)
         universe = checkpoint(universe, -1)
         n = universe.count()
         if n == 0:
             return spark.createDataFrame([], "vid long, score double")
         x = checkpoint(universe.withColumn("score", F.lit(1.0 / n)), 0)
-        for step in range(1, n_iter + 1):
-            t0 = time.time()
+        for step in loop.steps(range(1, n_iter + 1)):
             x = checkpoint(_l1(universe, _spread(both, x, "src", "dst")), step)
-            if on_superstep is not None:
-                on_superstep(step, -1, time.time() - t0)
+            loop.done()
     return x.select("vid", "score")

@@ -59,7 +59,7 @@ import math
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..checkpoint import EphemeralCheckpointer, _no_aqe
+from ..checkpoint import EphemeralCheckpointer, supersteps
 from .cc import connected_components
 
 # arithmetic arc-key mix for deterministic heights: exact in both Spark and
@@ -109,8 +109,6 @@ def euler_tour(
     positions.
     """
     spark = forest.sparkSession
-    if checkpoint is None:
-        checkpoint = EphemeralCheckpointer()
     parts = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
 
     edges = forest.select(
@@ -121,7 +119,8 @@ def euler_tour(
     if labels is None:
         labels = connected_components(edges)
 
-    with _no_aqe(spark):
+    with supersteps(spark, "euler_tour", checkpoint, default=EphemeralCheckpointer) as loop:
+        checkpoint = loop.checkpoint
         # successor of (u,v): (v, w) with w the circular next neighbor after
         # u in v's sorted adjacency — one window pass, pure JVM
         w_adj = Window.partitionBy("dst").orderBy("src")
@@ -184,7 +183,7 @@ def euler_tour(
 
         # Wyllie pointer doubling: d += d[jump]; jump = jump[jump]. A null
         # jump (reached the root) joins nothing and stays solved.
-        for rnd in range(1, max_rounds + 1):
+        for rnd in loop.steps(range(1, max_rounds + 1)):
             tgt = cur.select(
                 F.col("src").alias("tsrc"),
                 F.col("dst").alias("tdst"),

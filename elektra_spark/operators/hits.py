@@ -34,12 +34,10 @@ one PageRank superstep; AQE stays off inside the fixed-shape loop.
 
 from __future__ import annotations
 
-import time
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..checkpoint import CheckpointFn, RetainedCheckpointer, SuperstepHook, _no_aqe
+from ..checkpoint import CheckpointFn, SuperstepHook, supersteps
 
 
 def _spread(edges: DataFrame, scores: DataFrame, key: str, out: str) -> DataFrame:
@@ -66,11 +64,8 @@ def hits(
     else:
         universe = e.select(F.col("src").alias("vid")).union(e.select(F.col("dst").alias("vid"))).distinct()
 
-    if checkpoint is None:
-        # this loop retains multiple live frames per round — the single-chain
-        # EphemeralCheckpointer would delete files a held frame still reads
-        checkpoint = RetainedCheckpointer()
-    with _no_aqe(spark):
+    with supersteps(spark, "hits", checkpoint, on_superstep) as loop:
+        checkpoint = loop.checkpoint
         e = checkpoint(e, -1)
         universe = checkpoint(universe, -1)
         n = universe.count()
@@ -78,14 +73,12 @@ def hits(
             return spark.createDataFrame([], "vid long, hub double, auth double")
         hub = checkpoint(universe.withColumn("score", F.lit(1.0 / n)), 0)
         auth = None
-        for step in range(1, n_iter + 1):
-            t0 = time.time()
+        for step in loop.steps(range(1, n_iter + 1)):
             auth = _l1(universe, _spread(e, hub, "src", "dst"))
             auth = checkpoint(auth, step)
             hub = _l1(universe, _spread(e, auth, "dst", "src"))
             hub = checkpoint(hub, step)
-            if on_superstep is not None:
-                on_superstep(step, -1, time.time() - t0)
+            loop.done()
     return (
         universe.join(hub.withColumnRenamed("score", "hub"), "vid", "left")
         .join(auth.withColumnRenamed("score", "auth"), "vid", "left")

@@ -39,7 +39,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..checkpoint import CheckpointFn, RetainedCheckpointer, SuperstepHook
+from ..checkpoint import CheckpointFn, SuperstepHook
 from .bfs import _expand_frontier
 
 
@@ -74,10 +74,9 @@ def influence_spread(
         seed = seeds.select(F.col("vid").cast("long").alias("vid")).distinct()
     else:
         seed = spark.createDataFrame([(int(v),) for v in seeds], "vid long").distinct()
-    if checkpoint is None:
-        checkpoint = RetainedCheckpointer()
     visited = _expand_frontier(
-        spark, live, seed.withColumn("dist", F.lit(0)), ["vid"], max_rounds, checkpoint, on_superstep
+        spark, "influence_spread", live, seed.withColumn("dist", F.lit(0)), ["vid"], max_rounds,
+        checkpoint, on_superstep,
     )
     return (
         visited.groupBy(F.col("dist").cast("int").alias("round"))

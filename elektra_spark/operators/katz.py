@@ -42,12 +42,10 @@ the plan is stable across iterations.
 
 from __future__ import annotations
 
-import time
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..checkpoint import CheckpointFn, RetainedCheckpointer, SuperstepHook, _no_aqe
+from ..checkpoint import CheckpointFn, SuperstepHook, supersteps
 from .hits import _spread
 
 
@@ -68,22 +66,17 @@ def katz_centrality(
     else:
         universe = e.select(F.col("src").alias("vid")).union(e.select(F.col("dst").alias("vid"))).distinct()
 
-    if checkpoint is None:
-        # two live frames per round (edges + current vector) — Retained, not
-        # the single-chain Ephemeral variant
-        checkpoint = RetainedCheckpointer()
-    with _no_aqe(spark):
+    with supersteps(spark, "katz_centrality", checkpoint, on_superstep) as loop:
+        checkpoint = loop.checkpoint
         e = checkpoint(e, -1)
         universe = checkpoint(universe, -1)
         x = checkpoint(universe.withColumn("score", F.lit(float(beta))), 0)
-        for step in range(1, n_iter + 1):
-            t0 = time.time()
+        for step in loop.steps(range(1, n_iter + 1)):
             inflow = _spread(e, x, "src", "dst")
             x = universe.join(inflow, "vid", "left").select(
                 "vid",
                 (F.lit(float(beta)) + F.lit(float(alpha)) * F.coalesce("raw", F.lit(0.0))).alias("score"),
             )
             x = checkpoint(x, step)
-            if on_superstep is not None:
-                on_superstep(step, -1, time.time() - t0)
+            loop.done()
     return x.select("vid", F.col("score").alias("katz"))

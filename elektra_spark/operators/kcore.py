@@ -30,12 +30,10 @@ in the tens (peel depth, not vertex count).
 
 from __future__ import annotations
 
-import time
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..checkpoint import CheckpointFn, RetainedCheckpointer, SuperstepHook, _no_aqe
+from ..checkpoint import CheckpointFn, SuperstepHook, supersteps
 
 # removed-vertex sets below this fit comfortably in a task broadcast; above
 # it the anti-join runs as a shuffle (first rounds of a heavy peel).
@@ -51,22 +49,17 @@ def k_core(
 ) -> DataFrame:
     """→ (vid, deg): vertices of the k-core with their within-core degree."""
     spark = edges.sparkSession
-    if checkpoint is None:
-        # this loop retains multiple live frames per round — the single-chain
-        # EphemeralCheckpointer would delete files a held frame still reads
-        checkpoint = RetainedCheckpointer()
-    with _no_aqe(spark):
+    with supersteps(spark, "k_core", checkpoint, on_superstep) as loop:
+        checkpoint = loop.checkpoint
         cur = checkpoint(edges.select("src", "dst"), -1)
         deg = None
-        for step in range(1, max_rounds + 1):
-            t0 = time.time()
+        for step in loop.steps(range(1, max_rounds + 1)):
             both = cur.union(cur.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
             deg = both.groupBy(F.col("src").alias("vid")).agg(F.count("*").alias("deg"))
             deg = checkpoint(deg, step)
             removed = deg.filter(F.col("deg") < k).select("vid")
             n_removed = removed.count()
-            if on_superstep is not None:
-                on_superstep(step, n_removed, time.time() - t0)
+            loop.done(n_removed)
             if n_removed == 0:
                 break
             r_src = removed.withColumnRenamed("vid", "src")

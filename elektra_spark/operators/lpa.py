@@ -26,14 +26,12 @@ always stays on Spark, so it still commits every superstep.
 
 from __future__ import annotations
 
-import time
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..checkpoint import CheckpointFn, EphemeralCheckpointer, SuperstepHook, _no_aqe
+from ..checkpoint import CheckpointFn, EphemeralCheckpointer, SuperstepHook, supersteps
 from . import driver_tier
 
 
@@ -75,32 +73,29 @@ def label_propagation(
     commits its initial labels as step ``start_step``. Without a
     ``checkpoint``, a graph within ``driver_tier.SMALL_GRAPH_MAX`` runs on
     the driver."""
-    if checkpoint is None:
-        g = (
-            driver_tier.collect_small(edges, vertices)
-            if init_labels is None
-            else driver_tier.collect_small(edges, init_labels, value="label")
-        )
-        if g is not None:
-            s, d = np.concatenate([g.src, g.dst]), np.concatenate([g.dst, g.src])
-            labels = g.vids if g.values is None else g.values.astype(np.int64)
-            for step in range(start_step, start_step + rounds):
-                t0 = time.time()
-                labels = _np_vote(s, d, labels)
-                if on_superstep is not None:
-                    on_superstep(step, -1, time.time() - t0)
-            return edges.sparkSession.createDataFrame(
-                pd.DataFrame({"vid": g.vids, "label": labels}), "vid long, label long"
+    spark = edges.sparkSession
+    with supersteps(spark, "label_propagation", checkpoint, on_superstep, EphemeralCheckpointer) as loop:
+        if checkpoint is None:
+            g = (
+                driver_tier.collect_small(edges, vertices)
+                if init_labels is None
+                else driver_tier.collect_small(edges, init_labels, value="label")
             )
-    both = edges.select("src", "dst").union(edges.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-    if vertices is not None:
-        universe = vertices.select("vid")
-    else:
-        universe = both.select(F.col("src").alias("vid")).distinct()
-
-    if checkpoint is None:
-        checkpoint = EphemeralCheckpointer()
-    with _no_aqe(edges.sparkSession):
+            if g is not None:
+                s, d = np.concatenate([g.src, g.dst]), np.concatenate([g.dst, g.src])
+                labels = g.vids if g.values is None else g.values.astype(np.int64)
+                for step in loop.steps(range(start_step, start_step + rounds)):
+                    labels = _np_vote(s, d, labels)
+                    loop.done()
+                return spark.createDataFrame(
+                    pd.DataFrame({"vid": g.vids, "label": labels}), "vid long, label long"
+                )
+        both = edges.select("src", "dst").union(edges.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
+        if vertices is not None:
+            universe = vertices.select("vid")
+        else:
+            universe = both.select(F.col("src").alias("vid")).distinct()
+        checkpoint = loop.checkpoint
         both = checkpoint(both, -1)
         if init_labels is not None:
             # a warm start is already durable: materialize, don't commit it again
@@ -108,8 +103,7 @@ def label_propagation(
         else:
             labels = checkpoint(universe.withColumn("label", F.col("vid")), start_step)
 
-        for step in range(start_step, start_step + rounds):
-            t0 = time.time()
+        for step in loop.steps(range(start_step, start_step + rounds)):
             votes = (
                 both.join(labels, both.src == labels.vid)
                 .select(F.col("dst").alias("v"), "label")
@@ -126,8 +120,7 @@ def label_propagation(
                 "vid", F.coalesce("new_label", F.col("label")).alias("label")
             )
             labels = checkpoint(new_labels, step + 1)
-            if on_superstep is not None:
-                on_superstep(step, -1, time.time() - t0)
+            loop.done()
     return labels
 
 
@@ -280,14 +273,13 @@ def seeded_label_propagation(
             .union(seeds.select("vid"))
             .distinct()
         )
-    if checkpoint is None:
-        checkpoint = EphemeralCheckpointer()
-    with _no_aqe(edges.sparkSession):
+    with supersteps(edges.sparkSession, "seeded_label_propagation", checkpoint, on_superstep,
+                    EphemeralCheckpointer) as loop:
+        checkpoint = loop.checkpoint
         both = checkpoint(both, -1)
         sd = checkpoint(seeds.select("vid", "label"), 0)
         labels = sd
-        for step in range(rounds):
-            t0 = time.time()
+        for step in loop.steps(range(rounds)):
             votes = (
                 both.join(labels, both.src == labels.vid)
                 .select(F.col("dst").alias("v"), "label")
@@ -305,8 +297,7 @@ def seeded_label_propagation(
                 "vid", F.coalesce("new_label", F.col("label")).alias("label")
             )
             labels = checkpoint(sd.unionByName(ns), step + 1)
-            if on_superstep is not None:
-                on_superstep(step, -1, time.time() - t0)
+            loop.done()
     return universe.join(labels, "vid", "left").select(
         "vid", F.coalesce("label", F.lit(unlabeled)).alias("label")
     )

@@ -27,12 +27,10 @@ family as a CC superstep; hub vertices cost a combiner, not a hot reducer.
 
 from __future__ import annotations
 
-import time
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..checkpoint import CheckpointFn, RetainedCheckpointer, SuperstepHook, _no_aqe
+from ..checkpoint import CheckpointFn, RetainedCheckpointer, SuperstepHook, supersteps
 
 
 def _edge_priority(rnd: int) -> F.Column:
@@ -51,8 +49,6 @@ def maximal_matching(
     """→ (src, dst): a maximal matching of the undirected graph — no two
     matched edges share a vertex; every unmatched alive edge would conflict.
     Input edges are canonicalized (src < dst, deduped, self-loop-free)."""
-    if checkpoint is None:
-        checkpoint = RetainedCheckpointer()
     spark = edges.sparkSession
     e = (
         edges.select(
@@ -62,11 +58,11 @@ def maximal_matching(
         .filter(F.col("src") != F.col("dst"))
         .distinct()
     )
-    with _no_aqe(spark):
+    with supersteps(spark, "maximal_matching", checkpoint, on_superstep) as loop:
+        checkpoint = loop.checkpoint
         alive = checkpoint(e, 0)
         matched: DataFrame | None = None
-        for rnd in range(1, max_rounds + 1):
-            t0 = time.time()
+        for rnd in loop.steps(range(1, max_rounds + 1)):
             pri = alive.select("src", "dst", _edge_priority(rnd).alias("h"))
             inc = pri.select(F.col("src").alias("vid"), "h", "src", "dst").unionByName(
                 pri.select(F.col("dst").alias("vid"), "h", "src", "dst")
@@ -85,8 +81,7 @@ def maximal_matching(
             )
             winners = checkpoint(winners, rnd)
             n_new = winners.count()
-            if on_superstep is not None:
-                on_superstep(rnd, n_new, time.time() - t0)
+            loop.done(n_new)
             matched = (
                 winners
                 if matched is None

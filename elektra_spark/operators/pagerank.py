@@ -69,13 +69,12 @@ import hashlib
 import os
 import shutil
 import tempfile
-import time
 
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..checkpoint import CheckpointFn, EphemeralCheckpointer, SuperstepHook, _no_aqe
+from ..checkpoint import CheckpointFn, EphemeralCheckpointer, SuperstepHook, supersteps
 from . import driver_tier
 
 # Worker-resident CSR block cache for the bsp kernel: lives at module
@@ -344,8 +343,7 @@ def _pagerank_bsp(
     damping: float,
     n_iter: int,
     buckets: int,
-    checkpoint: CheckpointFn,
-    on_superstep: SuperstepHook | None,
+    loop,
     start_step: int,
     init_ranks: DataFrame | None,
     prep_dir: str | None = None,
@@ -648,13 +646,13 @@ def _pagerank_bsp(
     # (``init_ranks``/``start_step`` re-bucket it at init). The default
     # EphemeralCheckpointer skips this: bsp state has no lineage to truncate,
     # so per-step commits would be pure overhead in a fire-and-forget run.
+    checkpoint = loop.checkpoint
     durable = bool(getattr(checkpoint, "durable", False))
     committed = None
 
     a_schema = "tb int, dst long, c double, m boolean"
     b_schema = "bucket int, sum_rank double, max_delta double"
-    for step in range(start_step, start_step + n_iter):
-        t0 = time.time()
+    for step in loop.steps(range(start_step, start_step + n_iter)):
         (
             drv.groupBy("bucket")
             .applyInPandas(make_stage_a(step), a_schema)
@@ -667,8 +665,7 @@ def _pagerank_bsp(
                 drv.groupBy("bucket").applyInPandas(make_emit(step + 1), "vid long, rank double"),
                 step + 1,
             )
-        if on_superstep is not None:
-            on_superstep(step, -1, time.time() - t0)
+        loop.done()
 
     if committed is not None:
         return committed
@@ -678,7 +675,7 @@ def _pagerank_bsp(
     return checkpoint(final, start_step + n_iter)
 
 
-def _pagerank_small(spark, g, damping, n_iter, directed, on_superstep, start_step):
+def _pagerank_small(spark, g, damping, n_iter, directed, loop, start_step):
     """The driver tier (:mod:`.driver_tier`): the oracle-shaped power
     iteration over a collected graph — ``bincount`` scatter, uniform
     dangling redistribution, warm start from ``g.values`` (ranks absent from
@@ -694,12 +691,10 @@ def _pagerank_small(spark, g, damping, n_iter, directed, on_superstep, start_ste
     inv_deg = np.divide(1.0, deg, out=np.zeros(n), where=deg > 0)
     dangling = deg == 0
     rank = np.full(n, 1.0 / n) if g.values is None else np.nan_to_num(g.values.astype(np.float64))
-    for step in range(start_step, start_step + n_iter):
-        t0 = time.time()
+    for _ in loop.steps(range(start_step, start_step + n_iter)):
         base = (1.0 - damping) / n + damping * float(rank[dangling].sum()) / n
         rank = _rank_update(rank * inv_deg, src, dst, n, base, damping)
-        if on_superstep is not None:
-            on_superstep(step, -1, time.time() - t0)
+        loop.done()
     return spark.createDataFrame(pd.DataFrame({"vid": g.vids, "rank": rank}), "vid long, rank double")
 
 
@@ -792,12 +787,10 @@ def pagerank(
         raise ValueError(f"unknown pagerank kernel {kernel!r}; expected auto|bsp|df")
     spark = edges.sparkSession
     small_ok = kernel == "auto" and checkpoint is None and bsp_prep_dir is None
-    if checkpoint is None:
-        checkpoint = EphemeralCheckpointer()
     adj_deg, deg, universe, no_dangling = _prepare(edges, vertices, directed)
     parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
 
-    with _no_aqe(spark):
+    with supersteps(spark, "pagerank", checkpoint, on_superstep, EphemeralCheckpointer) as loop:
         # persisted un-repartitioned: the bsp path re-buckets by vid range
         # and the df path re-keys through its own checkpoint, so a generic
         # hash(vid) exchange here was a dead shuffle of |V| rows (guide §2.4)
@@ -842,7 +835,7 @@ def pagerank(
                 g = driver_tier.collect_small(edges, warm, value="rank", sizes=sizes)
             if g is not None:
                 universe.unpersist()
-                return _pagerank_small(spark, g, damping, n_iter, directed, on_superstep, start_step)
+                return _pagerank_small(spark, g, damping, n_iter, directed, loop, start_step)
         if kernel in ("bsp", "auto"):
             n_slots = int(max_vid) + 1
             dense = min_vid is not None and min_vid >= 0 and n_slots <= 4 * n
@@ -866,9 +859,10 @@ def pagerank(
                 # ranking the old graph off stale CSR blocks
                 input_fp = ""
                 if bsp_prep_dir is not None:
-                    # sum the 64-bit hashes in decimal(38,0): a plain long
-                    # sum overflows under ANSI mode at ~10^? rows, decimal
-                    # headroom is 10^38 ≫ 2^63 × any real row count
+                    # sum the 64-bit hashes in decimal(38,0): a long sum of
+                    # xxhash64 values can overflow (an ANSI error) from the
+                    # second row on, while decimal(38,0) holds about
+                    # 10^38 / 2^63 ≈ 10^19 rows of them
                     def _fp(df, *cols):
                         h = F.xxhash64(*cols).cast("decimal(38,0)")
                         r = df.agg(F.count("*"), F.coalesce(F.sum(h), F.lit(0))).collect()[0]
@@ -882,12 +876,13 @@ def pagerank(
                         input_fp += f",v{vfp}"
                 out = _pagerank_bsp(
                     spark, adj_deg, universe, n, n_slots, damping, n_iter, buckets,
-                    checkpoint, on_superstep, start_step, init_ranks,
+                    loop, start_step, init_ranks,
                     prep_dir=bsp_prep_dir, input_fp=input_fp, no_dangling=no_dangling,
                 )
                 universe.unpersist()
                 return out
             kernel = "df"  # auto fallback for sparse vid spaces
+        checkpoint = loop.checkpoint
         # int32 join keys for the df superstep when every vid fits 31 bits
         # (known from the universe agg above): halves the bytes the
         # per-superstep rank exchange and contribution aggregation hash and
@@ -947,8 +942,7 @@ def pagerank(
                 start_step,
             )
 
-        for step in range(start_step, start_step + n_iter):
-            t0 = time.time()
+        for step in loop.steps(range(start_step, start_step + n_iter)):
             contrib = (
                 adj_deg.join(ranks.hint("shuffle_hash"), adj_deg.src == ranks.vid)
                 .groupBy(F.col("dst").alias("vid"))
@@ -975,8 +969,7 @@ def pagerank(
                 ).alias("rank"),
             )
             ranks = checkpoint(new_ranks, step + 1)
-            if on_superstep is not None:
-                on_superstep(step, -1, time.time() - t0)
+            loop.done()
         adj_deg.unpersist()
         universe.unpersist()
         if dangling is not None:

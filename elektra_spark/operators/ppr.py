@@ -32,12 +32,10 @@ broadcast (seed sets are small by definition).
 
 from __future__ import annotations
 
-import time
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..checkpoint import CheckpointFn, RetainedCheckpointer, SuperstepHook, _no_aqe
+from ..checkpoint import CheckpointFn, SuperstepHook, supersteps
 from .pagerank import _prepare
 
 
@@ -57,11 +55,8 @@ def personalized_pagerank(
     adj_deg, deg, universe, _ = _prepare(edges, vertices, directed)
     seed_ids = seeds.select(F.col("vid").cast("long").alias("vid")).distinct()
 
-    if checkpoint is None:
-        # multiple live frames per round (static base + rank chain) — needs
-        # the multi-chain RetainedCheckpointer, not EphemeralCheckpointer
-        checkpoint = RetainedCheckpointer()
-    with _no_aqe(spark):
+    with supersteps(spark, "personalized_pagerank", checkpoint, on_superstep) as loop:
+        checkpoint = loop.checkpoint
         adj_deg = checkpoint(adj_deg.select("src", "dst", "deg"), -1)
         n_seeds = seed_ids.count()
         if n_seeds == 0:
@@ -90,8 +85,7 @@ def personalized_pagerank(
         # per-superstep scalar when no vertex dangles
         has_dangling = dangling.count() > 0
         r = checkpoint(base.select("vid", F.col("s").alias("rank")), 0)
-        for step in range(1, n_iter + 1):
-            t0 = time.time()
+        for step in loop.steps(range(1, n_iter + 1)):
             contrib = (
                 adj_deg.join(r.withColumnRenamed("vid", "src"), "src")
                 .groupBy(F.col("dst").alias("vid"))
@@ -117,8 +111,7 @@ def personalized_pagerank(
                 ).alias("rank"),
             )
             r = checkpoint(r, step)
-            if on_superstep is not None:
-                on_superstep(step, -1, time.time() - t0)
+            loop.done()
     return r
 
 
@@ -166,9 +159,8 @@ def weighted_pagerank(
             adj.select(F.col("src").alias("vid")).union(adj.select(F.col("dst").alias("vid"))).distinct()
         )
 
-    if checkpoint is None:
-        checkpoint = RetainedCheckpointer()
-    with _no_aqe(spark):
+    with supersteps(spark, "weighted_pagerank", checkpoint, on_superstep) as loop:
+        checkpoint = loop.checkpoint
         # share = w/W_out normalized once at prep; the superstep multiplies
         # rank by a ready scalar column instead of re-dividing by the sum
         adj_n = checkpoint(
@@ -184,8 +176,7 @@ def weighted_pagerank(
         )
         has_dangling = dangling.count() > 0
         r = checkpoint(universe.withColumn("rank", F.lit(1.0 / n)), 0)
-        for step in range(1, n_iter + 1):
-            t0 = time.time()
+        for step in loop.steps(range(1, n_iter + 1)):
             contrib = (
                 adj_n.join(r.withColumnRenamed("vid", "src"), "src")
                 .groupBy(F.col("dst").alias("vid"))
@@ -210,6 +201,5 @@ def weighted_pagerank(
                 ).alias("rank"),
             )
             r = checkpoint(r, step)
-            if on_superstep is not None:
-                on_superstep(step, -1, time.time() - t0)
+            loop.done()
     return r

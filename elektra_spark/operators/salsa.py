@@ -29,12 +29,10 @@ superstep. At 100 TB per-iteration shuffle volume = |E| contribution rows.
 
 from __future__ import annotations
 
-import time
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..checkpoint import CheckpointFn, RetainedCheckpointer, SuperstepHook, _no_aqe
+from ..checkpoint import CheckpointFn, SuperstepHook, supersteps
 
 
 def salsa(
@@ -56,9 +54,8 @@ def salsa(
             .distinct()
         )
 
-    if checkpoint is None:
-        checkpoint = RetainedCheckpointer()
-    with _no_aqe(spark):
+    with supersteps(spark, "salsa", checkpoint, on_superstep) as loop:
+        checkpoint = loop.checkpoint
         outdeg = e.groupBy(F.col("src").alias("vid")).agg(F.count("*").alias("outdeg"))
         indeg = e.groupBy(F.col("dst").alias("vid")).agg(F.count("*").alias("indeg"))
         # static pre-normalized share relation, built once and reused by
@@ -82,8 +79,7 @@ def salsa(
             return spark.createDataFrame([], "vid long, hub double, auth double")
         hub = checkpoint(universe.withColumn("score", F.lit(1.0 / n)), 0)
         auth = None
-        for step in range(1, n_iter + 1):
-            t0 = time.time()
+        for step in loop.steps(range(1, n_iter + 1)):
             raw_a = (
                 shares.join(hub, shares.src == hub.vid)
                 .groupBy(F.col("dst").alias("vid"))
@@ -96,8 +92,7 @@ def salsa(
                 .agg(F.sum(F.col("score") * F.col("bwd")).alias("raw"))
             )
             hub = checkpoint(_l1(universe, raw_h), step)
-            if on_superstep is not None:
-                on_superstep(step, -1, time.time() - t0)
+            loop.done()
     return (
         universe.join(hub.withColumnRenamed("score", "hub"), "vid", "left")
         .join(auth.withColumnRenamed("score", "auth"), "vid", "left")

@@ -64,13 +64,11 @@ in-degree) sit inside map-side-combinable mins — no skew amplification.
 
 from __future__ import annotations
 
-import time
-
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..checkpoint import CheckpointFn, RetainedCheckpointer, SuperstepHook, _no_aqe
+from ..checkpoint import CheckpointFn, RetainedCheckpointer, SuperstepHook, supersteps
 
 
 def _local_min_reach(labels_pdf: pd.DataFrame, edges_pdf: pd.DataFrame) -> pd.DataFrame:
@@ -158,9 +156,8 @@ def min_forward_reach(
     in a single block).
     """
     spark = edges.sparkSession
-    if checkpoint is None:
-        checkpoint = RetainedCheckpointer()
-    with _no_aqe(spark):
+    with supersteps(spark, "min_forward_reach", checkpoint, on_superstep) as loop:
+        checkpoint = loop.checkpoint
         adj = checkpoint(edges.select(F.col("src").cast("long").alias("src"), F.col("dst").cast("long").alias("dst")), -1)
         init_label = (label_of(F.col("vid")) if label_of is not None else F.col("vid")).cast("long")
         labels = checkpoint(
@@ -180,8 +177,7 @@ def min_forward_reach(
         def with_pid(df: DataFrame) -> DataFrame:
             return df.withColumn("pid", (F.col("vid") / block).cast("long"))
 
-        for step in range(1, max_iter + 1):
-            t0 = time.time()
+        for step in loop.steps(range(1, max_iter + 1)):
             # per-block local fixpoint: collapses every within-block wave
             # (whole reply chains) in one Arrow-batched NumPy task per block
             solved = (
@@ -206,8 +202,7 @@ def min_forward_reach(
             # labels only decrease, so one two-column anti-join detects any
             # change; no change ⇒ Bellman fixpoint over all edges ⇒ closure
             changed = pulled.join(solved, ["vid", "label"], "left_anti").limit(1).count()
-            if on_superstep is not None:
-                on_superstep(step, changed, time.time() - t0)
+            loop.done(changed)
             labels = pulled
             if changed == 0:
                 break

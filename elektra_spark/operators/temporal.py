@@ -27,12 +27,10 @@ vectors — the fixpoint exists and the early exit is sound.
 
 from __future__ import annotations
 
-import time
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..checkpoint import CheckpointFn, RetainedCheckpointer, SuperstepHook, _no_aqe
+from ..checkpoint import CheckpointFn, SuperstepHook, supersteps
 
 
 def earliest_arrival(
@@ -62,13 +60,11 @@ def earliest_arrival(
     else:
         seed = spark.createDataFrame([(int(v),) for v in sources], "vid long").distinct()
 
-    if checkpoint is None:
-        checkpoint = RetainedCheckpointer()
-    with _no_aqe(spark):
+    with supersteps(spark, "earliest_arrival", checkpoint, on_superstep) as loop:
+        checkpoint = loop.checkpoint
         te = checkpoint(te, -1)
         arr = checkpoint(seed.withColumn("arrival", F.lit(int(seed_arrival)).cast("long")), 0)
-        for step in range(1, max_hops + 1):
-            t0 = time.time()
+        for step in loop.steps(range(1, max_hops + 1)):
             relaxed = (
                 te.join(
                     arr.withColumnRenamed("vid", "src").withColumnRenamed("arrival", "a"),
@@ -87,8 +83,7 @@ def earliest_arrival(
             # vertex set only grows and per-vid arrivals only drop, so a
             # two-column anti-join detects both kinds of change
             changed = nxt.join(arr, ["vid", "arrival"], "left_anti").limit(1).count()
-            if on_superstep is not None:
-                on_superstep(step, changed, time.time() - t0)
+            loop.done(changed)
             arr = nxt
             if changed == 0:
                 break

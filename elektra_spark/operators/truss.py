@@ -29,12 +29,10 @@ independent jobs so lineage is truncated per round (RetainedCheckpointer).
 
 from __future__ import annotations
 
-import time
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..checkpoint import CheckpointFn, RetainedCheckpointer, SuperstepHook, _no_aqe
+from ..checkpoint import CheckpointFn, SuperstepHook, supersteps
 from .triangles import _oriented_arcs
 
 
@@ -83,15 +81,11 @@ def k_truss(
     if k < 3:
         raise ValueError(f"k-truss needs k >= 3 (got {k})")
     spark = edges.sparkSession
-    if checkpoint is None:
-        # the loop retains the live edge frame across rounds while deriving
-        # the next — multi-chain, so the single-chain checkpointer is unsafe
-        checkpoint = RetainedCheckpointer()
-    with _no_aqe(spark):
+    with supersteps(spark, "k_truss", checkpoint, on_superstep) as loop:
+        checkpoint = loop.checkpoint
         e = checkpoint(edges.select("src", "dst"), -1)
         n_edges = e.count()
-        for step in range(1, max_rounds + 1):
-            t0 = time.time()
+        for step in loop.steps(range(1, max_rounds + 1)):
             sup = _support_of(e)
             nxt = (
                 e.join(sup, ["src", "dst"], "left")
@@ -100,8 +94,7 @@ def k_truss(
             )
             nxt = checkpoint(nxt, step)
             n_next = nxt.count()
-            if on_superstep is not None:
-                on_superstep(step, n_edges - n_next, time.time() - t0)
+            loop.done(n_edges - n_next)
             converged = n_next == n_edges
             # nxt is already parquet-committed; the projection has lineage
             # depth 1 — a second checkpoint would double per-round I/O

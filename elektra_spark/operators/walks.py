@@ -35,12 +35,10 @@ A,B < 2^20 → products < 2^50).
 
 from __future__ import annotations
 
-import time
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..checkpoint import CheckpointFn, RetainedCheckpointer, SuperstepHook, _no_aqe
+from ..checkpoint import CheckpointFn, SuperstepHook, supersteps
 
 WALK_MOD = 1_073_741_789  # largest prime < 2^30
 _A, _B, _C = 1_000_003, 999_983, 7_919
@@ -76,12 +74,11 @@ def random_walks(
     argmin total even on hash ties.
     """
     spark = edges.sparkSession
-    if checkpoint is None:
-        checkpoint = RetainedCheckpointer()
     both = edges.select("src", "dst").union(
         edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     )
-    with _no_aqe(spark):
+    with supersteps(spark, "random_walks", checkpoint, on_superstep) as loop:
+        checkpoint = loop.checkpoint
         both = checkpoint(both, -1)
         cur = checkpoint(
             start_vertices.select(
@@ -92,8 +89,7 @@ def random_walks(
             0,
         )
         out = cur
-        for t in range(1, walk_length + 1):
-            t0 = time.time()
+        for t in loop.steps(range(1, walk_length + 1)):
             cand = both.join(cur.withColumnRenamed("vid", "src"), "src").select(
                 "walk_id",
                 F.lit(t).alias("step"),
@@ -107,8 +103,7 @@ def random_walks(
             )
             nxt = checkpoint(nxt, t)
             n_live = nxt.count()
-            if on_superstep is not None:
-                on_superstep(t, n_live, time.time() - t0)
+            loop.done(n_live)
             if n_live == 0:
                 break
             out = checkpoint(out.unionByName(nxt), t)
@@ -149,12 +144,11 @@ def biased_walks(
     classify; frontier-sized, not |E|-sized, on the probe side.
     """
     spark = edges.sparkSession
-    if checkpoint is None:
-        checkpoint = RetainedCheckpointer()
     both = edges.select("src", "dst").union(
         edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     )
-    with _no_aqe(spark):
+    with supersteps(spark, "biased_walks", checkpoint, on_superstep) as loop:
+        checkpoint = loop.checkpoint
         both = checkpoint(both.distinct(), -1)  # dedup: the class marker must not fan out
         marker = both.select(
             F.col("src").alias("m_src"), F.col("dst").alias("m_dst"), F.lit(True).alias("m_hit")
@@ -169,8 +163,7 @@ def biased_walks(
             0,
         )
         out = cur.drop("prev")
-        for t in range(1, walk_length + 1):
-            t0 = time.time()
+        for t in loop.steps(range(1, walk_length + 1)):
             cand = both.join(cur.withColumnRenamed("vid", "src"), "src").select(
                 "walk_id",
                 F.col("src").alias("new_prev"),
@@ -204,8 +197,7 @@ def biased_walks(
             )
             nxt = checkpoint(nxt, t)
             n_live = nxt.count()
-            if on_superstep is not None:
-                on_superstep(t, n_live, time.time() - t0)
+            loop.done(n_live)
             if n_live == 0:
                 break
             out = checkpoint(out.unionByName(nxt.drop("prev")), t)
@@ -235,20 +227,18 @@ def maximal_independent_set(
     Isolated vertices (require ``vertices``) join the MIS in round 1.
     """
     spark = edges.sparkSession
-    if checkpoint is None:
-        checkpoint = RetainedCheckpointer()
     e = edges.select(F.col("src").cast("long").alias("src"), F.col("dst").cast("long").alias("dst"))
     both = e.union(e.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
     if vertices is not None:
         universe = vertices.select(F.col("vid").cast("long").alias("vid"))
     else:
         universe = both.select(F.col("src").alias("vid")).distinct()
-    with _no_aqe(spark):
+    with supersteps(spark, "maximal_independent_set", checkpoint, on_superstep) as loop:
+        checkpoint = loop.checkpoint
         both = checkpoint(both, -1)
         undecided = checkpoint(universe.distinct(), 0)
         members: DataFrame | None = None
-        for rnd in range(1, max_rounds + 1):
-            t0 = time.time()
+        for rnd in loop.steps(range(1, max_rounds + 1)):
             pri = undecided.select("vid", _step_hash(F.lit(0), rnd, F.col("vid")).alias("h"))
             # min neighbor priority among *undecided* neighbors (absent ⇒ no
             # undecided neighbor ⇒ the vertex wins unconditionally)
@@ -268,8 +258,7 @@ def maximal_independent_set(
             )
             winners = checkpoint(winners, rnd)
             n_new = winners.count()
-            if on_superstep is not None:
-                on_superstep(rnd, n_new, time.time() - t0)
+            loop.done(n_new)
             members = winners if members is None else checkpoint(members.unionByName(winners), rnd)
             # winners and their neighbors are decided
             touched = winners.unionByName(

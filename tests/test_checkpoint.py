@@ -117,6 +117,74 @@ def test_warm_start_commits_each_superstep_once(spark, tmp_path, op):
     assert all(abs(a[v] - b[v]) < 1e-12 for v in a)
 
 
+# one tiny graph per loop shape; the (step, frontier) lists are the ones the
+# hand-rolled loops reported before the superstep runtime replaced them
+LOOP_PAIRS = [(0, 1), (1, 2), (2, 3), (5, 6)]
+LOOP_CASES = [
+    # changed counts, early exit at 0
+    ("connected_components", {"kernel": "df"}, [(0, 4), (1, 2), (2, 1), (3, 0)]),
+    ("hop_distance", {"sources": [0], "max_hops": 2}, [(1, 1), (2, 1)]),
+    # backward ids above max_hops, deepest level first
+    ("betweenness", {"sources": [0], "max_hops": 2}, [(1, 1), (2, 1), (4, -1), (3, -1)]),
+    ("pagerank", {"kernel": "df", "n_iter": 2, "start_step": 5}, [(5, -1), (6, -1)]),
+    ("label_propagation", {"rounds": 2}, [(0, -1), (1, -1)]),  # driver tier
+]
+
+
+def test_superstep_runtime_labels_and_hook_sequences(spark):
+    """checkpoint.supersteps times, reports and labels every loop shape: the
+    hook sees the same (step, frontier) sequence as before, each superstep
+    runs under ``<outer>/<operator>/superstep/<k>``, CC's csr phases under
+    ``<outer>/connected_components/<phase>``, and the caller's description
+    and job group are back after each call."""
+    from elektra_spark.operators import betweenness, bfs, cc, lpa
+
+    ops = {
+        "connected_components": cc.connected_components,
+        "hop_distance": bfs.hop_distance,
+        "betweenness": betweenness.betweenness,
+        "pagerank": pagerank,
+        "label_propagation": lpa.label_propagation,
+    }
+    sc = spark.sparkContext
+
+    def desc():
+        return sc.getLocalProperty("spark.job.description")
+
+    e = edges_from_pairs(spark, LOOP_PAIRS)
+    sc.setJobGroup("loop-labels", "q")
+    try:
+        for op, kw, want in LOOP_CASES:
+            got = []
+            ops[op](e, on_superstep=lambda s, f, _: got.append((s, f, desc())), **kw)
+            assert [(s, f) for s, f, _ in got] == want, op
+            assert [d for _, _, d in got] == [f"q/{op}/superstep/{s}" for s, _ in want], op
+            assert desc() == "q" and sc.getLocalProperty("spark.jobGroup.id") == "loop-labels", op
+        phases = []
+        cc.connected_components(e, on_phase=lambda name, _: phases.append((name, desc())))
+        names = ["collapse_repart", "quotient_probe", "quotient_solve"]
+        assert phases == [(n, f"q/connected_components/{n}") for n in names]
+        assert desc() == "q"
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+
+
+def test_operators_loop_only_through_the_superstep_runtime():
+    """No operator times or reports a superstep by hand: every loop goes
+    through checkpoint.supersteps, so none imports ``time`` or calls an
+    ``on_superstep``/``on_phase`` hook itself."""
+    import re
+    from pathlib import Path
+
+    from elektra_spark import operators
+
+    by_hand = re.compile(r"^\s*(import time\b|from time import)|\btime\.time\(\)|\bon_(superstep|phase)\(")
+    for path in sorted(Path(operators.__file__).parent.glob("*.py")):
+        for i, line in enumerate(path.read_text().splitlines(), 1):
+            assert not by_hand.search(line), f"{path.name}:{i} hand-rolled superstep; use checkpoint.supersteps"
+
+
 def test_lineage_and_metrics_recorded(spark, tmp_path):
     edges = edges_from_pairs(spark, CHAIN[:15])
     run = CheckpointedRun(spark, str(tmp_path / "wh"), "m")

@@ -60,6 +60,8 @@ def main():
         import time
 
         t0 = time.time()
+        # root of every job label: query/operator/phase/step
+        spark.sparkContext.setJobDescription(name)
         try:
             sdf = fn(spark, sf_dir)
             scols = sdf.columns
