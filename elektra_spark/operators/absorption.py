@@ -33,6 +33,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .universe import graph_input
+
 
 def absorption_probability(
     arcs: DataFrame,
@@ -47,11 +49,11 @@ def absorption_probability(
     """
     if rounds < 1:
         raise ValueError("rounds must be >= 1")
+    arcs, universe = graph_input(arcs, vertices)
     a = absorbing.select(F.col("vid")).distinct()
     outdeg = arcs.groupBy(F.col("src").alias("vid")).agg(F.count(F.lit(1)).alias("deg"))
     flagged = (
-        vertices.select("vid")
-        .join(a.withColumn("is_abs", F.lit(True)), "vid", "left")
+        universe.join(a.withColumn("is_abs", F.lit(True)), "vid", "left")
         .join(outdeg, "vid", "left")
         .select("vid", F.coalesce("is_abs", F.lit(False)).alias("is_abs"), "deg")
         .persist()

@@ -35,6 +35,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..checkpoint import CheckpointFn, SuperstepHook, supersteps
+from .universe import graph_input
 
 # rho for a zero mantissa (md5 chars 3..15 all zero — probability 2^-52);
 # also the max trailing-zero count + 1 the 52-bit slice can produce
@@ -95,12 +96,10 @@ def hyperball(
     if m < 2 or m > 256 or (m & (m - 1)):
         raise ValueError(f"m must be a power of two in [2, 256], got {m}")
     spark = edges.sparkSession
-    e = edges.select(F.col("src").cast("long").alias("src"), F.col("dst").cast("long").alias("dst"))
+    e, universe = graph_input(
+        edges.select(F.col("src").cast("long").alias("src"), F.col("dst").cast("long").alias("dst")), vertices
+    )
     both = e.union(e.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-    if vertices is not None:
-        universe = vertices.select(F.col("vid").cast("long").alias("vid")).distinct()
-    else:
-        universe = both.select(F.col("src").alias("vid")).distinct()
     reg, rho = _reg_rho(F.col("vid"), m)
     with supersteps(spark, "hyperball", checkpoint, on_superstep) as loop:
         checkpoint = loop.checkpoint

@@ -47,6 +47,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..checkpoint import CheckpointFn, SuperstepHook, supersteps
+from .universe import graph_input, over_vertices
 
 
 def betweenness(
@@ -67,6 +68,7 @@ def betweenness(
     appear only with ``vertices``.
     """
     spark = edges.sparkSession
+    edges, _ = graph_input(edges, vertices)
     both = edges.select("src", "dst").union(
         edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     )
@@ -136,10 +138,4 @@ def betweenness(
         bc = alld.groupBy("vid").agg(F.sum("delta").alias("bc"))
     else:
         bc = spark.createDataFrame([], "vid long, bc double")
-    if vertices is not None:
-        bc = (
-            vertices.select("vid")
-            .join(bc, "vid", "left")
-            .select("vid", F.coalesce("bc", F.lit(0.0)).alias("bc"))
-        )
-    return bc
+    return over_vertices(bc, vertices, {"bc": F.lit(0.0)})

@@ -37,6 +37,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..checkpoint import CheckpointFn, SuperstepHook, supersteps
+from .universe import graph_input, over_vertices
 
 
 def _expand_frontier(
@@ -95,6 +96,7 @@ def hop_distance(
     within ``max_hops`` (rows for unreached vertices require ``vertices``).
     """
     spark = edges.sparkSession
+    edges, _ = graph_input(edges, vertices)
     both = edges.select("src", "dst").union(
         edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     )
@@ -108,13 +110,7 @@ def hop_distance(
         checkpoint, on_superstep,
     )
     out = visited.select("vid", F.col("dist").cast("int").alias("dist"))
-    if vertices is not None:
-        out = (
-            vertices.select("vid")
-            .join(out, "vid", "left")
-            .select("vid", F.coalesce("dist", F.lit(-1)).cast("int").alias("dist"))
-        )
-    return out
+    return over_vertices(out, vertices, {"dist": F.lit(-1)})
 
 
 def weighted_distance(
@@ -150,7 +146,7 @@ def weighted_distance(
     """
     spark = edges.sparkSession
     w_expr = F.col(weight).cast("long") if weight else (F.lit(1) + (F.col("src") + F.col("dst")) % 5).cast("long")
-    fwd = edges.select("src", "dst", w_expr.alias("w"))
+    fwd, _ = graph_input(edges.select("src", "dst", w_expr.alias("w")), vertices)
     both = fwd.union(fwd.select(F.col("dst").alias("src"), F.col("src").alias("dst"), "w"))
     if isinstance(sources, DataFrame):
         seed = sources.select(F.col("vid").cast("long").alias("vid")).distinct()
@@ -184,13 +180,7 @@ def weighted_distance(
             if changed == 0:
                 break
     out = dist.select("vid", F.col("dist").cast("long").alias("dist"))
-    if vertices is not None:
-        out = (
-            vertices.select("vid")
-            .join(out, "vid", "left")
-            .select("vid", F.coalesce("dist", F.lit(-1)).cast("long").alias("dist"))
-        )
-    return out
+    return over_vertices(out, vertices, {"dist": F.lit(-1)})
 
 
 def _lcm_upto(n: int) -> int:
@@ -239,6 +229,7 @@ def harmonic_centrality(
     engine-dependent ulp.
     """
     spark = edges.sparkSession
+    edges, _ = graph_input(edges, vertices)
     both = edges.select("src", "dst").union(
         edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     )
@@ -262,13 +253,7 @@ def harmonic_centrality(
         F.sum(F.expr(f"cast({L} div dist as long)")).alias("s")
     )
     out = scaled.select("vid", F.round(F.col("s").cast("double") / F.lit(float(L)), 6).alias("harmonic"))
-    if vertices is not None:
-        out = (
-            vertices.select("vid")
-            .join(out, "vid", "left")
-            .select("vid", F.coalesce("harmonic", F.lit(0.0)).alias("harmonic"))
-        )
-    return out
+    return over_vertices(out, vertices, {"harmonic": F.lit(0.0)})
 
 
 def closeness_centrality(
@@ -293,6 +278,7 @@ def closeness_centrality(
     100 TB envelope matches harmonic's: |landmarks| × reached state rows.
     """
     spark = edges.sparkSession
+    edges, _ = graph_input(edges, vertices)
     both = edges.select("src", "dst").union(
         edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     )
@@ -317,13 +303,7 @@ def closeness_centrality(
     out = agg.select(
         "vid", F.round(F.col("r").cast("double") / F.col("sd").cast("double"), 6).alias("closeness")
     )
-    if vertices is not None:
-        out = (
-            vertices.select("vid")
-            .join(out, "vid", "left")
-            .select("vid", F.coalesce("closeness", F.lit(0.0)).alias("closeness"))
-        )
-    return out
+    return over_vertices(out, vertices, {"closeness": F.lit(0.0)})
 
 
 def pseudo_diameter(
@@ -350,7 +330,9 @@ def pseudo_diameter(
     component's eccentricity) + two TakeOrdered-style argmax cuts.
     """
     spark = edges.sparkSession
-    e = edges.select(F.col("src").cast("long").alias("src"), F.col("dst").cast("long").alias("dst"))
+    e, _ = graph_input(
+        edges.select(F.col("src").cast("long").alias("src"), F.col("dst").cast("long").alias("dst")), vertices
+    )
     start_row = e.select(F.least(F.min("src"), F.min("dst")).alias("v")).collect()[0]
     if start_row["v"] is None:
         return spark.createDataFrame(
@@ -403,7 +385,7 @@ def widest_path(
     finite."""
     spark = edges.sparkSession
     w_expr = F.col(weight).cast("long") if weight else (F.lit(1) + (F.col("src") + F.col("dst")) % 5).cast("long")
-    fwd = edges.select("src", "dst", w_expr.alias("w"))
+    fwd, _ = graph_input(edges.select("src", "dst", w_expr.alias("w")), vertices)
     both = fwd.union(fwd.select(F.col("dst").alias("src"), F.col("src").alias("dst"), "w"))
     if isinstance(sources, DataFrame):
         seed = sources.select(F.col("vid").cast("long").alias("vid")).distinct()
@@ -428,10 +410,4 @@ def widest_path(
             if changed == 0:
                 break
     out = width.select("vid", F.col("width").cast("long").alias("width"))
-    if vertices is not None:
-        out = (
-            vertices.select("vid")
-            .join(out, "vid", "left")
-            .select("vid", F.coalesce("width", F.lit(-1)).cast("long").alias("width"))
-        )
-    return out
+    return over_vertices(out, vertices, {"width": F.lit(-1)})

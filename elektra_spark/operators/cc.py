@@ -46,6 +46,7 @@ from pyspark.sql import functions as F
 
 from ..checkpoint import CheckpointFn, EphemeralCheckpointer, SuperstepHook, supersteps
 from . import driver_tier
+from .universe import graph_input, over_vertices
 
 
 def _np_min_labels(s, d, n: int):
@@ -343,9 +344,9 @@ def connected_components(
     if kernel not in ("auto", "csr", "df"):
         raise ValueError(f"unknown connected_components kernel {kernel!r}; expected auto|csr|df")
     spark = edges.sparkSession
+    edges, universe = graph_input(edges, vertices)
     if kernel == "df":
-        endpoints = edges.select(F.col("src").alias("vid")).union(edges.select(F.col("dst").alias("vid"))).distinct()
-        labels0 = endpoints.withColumn("label", F.col("vid"))
+        labels0 = universe.withColumn("label", F.col("vid"))
         labels = _min_label_fixpoint(edges, labels0, max_iter, checkpoint, on_superstep)
     else:
         with supersteps(
@@ -405,9 +406,7 @@ def connected_components(
                     if resolve is not None:
                         resolve = F.broadcast(resolve)
                 else:
-                    endpoints = links.select(F.col("src").alias("vid")).union(
-                        links.select(F.col("dst").alias("vid"))
-                    ).distinct()
+                    _, endpoints = graph_input(links)
                     labels0 = endpoints.withColumn("label", F.col("vid"))
                     root_map = _min_label_fixpoint(links, labels0, max_iter, loop.checkpoint, on_superstep)
                     resolve = root_map.filter(F.col("vid") != F.col("label")).select(
@@ -422,12 +421,9 @@ def connected_components(
                 .select("vid", F.coalesce("root", F.col("label")).alias("label"))
             )
 
-    result = labels.select("vid", F.col("label").alias("component"))
-    if vertices is not None:
-        vids = vertices.select("vid")
-        isolated = vids.join(result.select("vid"), "vid", "left_anti").withColumn("component", F.col("vid"))
-        result = result.join(vids, "vid", "left_semi").unionByName(isolated)
-    return result
+        # vertices of the table with no edge are their own component
+        labels = over_vertices(labels, vertices, {"label": F.col("vid")})
+    return labels.select("vid", F.col("label").alias("component"))
 
 
 def batch_connected(labels: DataFrame, queries: DataFrame) -> DataFrame:

@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..checkpoint import CheckpointFn, SuperstepHook, supersteps
+from .universe import graph_input
 
 
 def _vertex_priority() -> F.Column:
@@ -48,14 +49,10 @@ def greedy_coloring(
     """→ (vid, color): the Jones–Plassmann greedy coloring (0-based colors;
     adjacent vertices never share one; isolated vertices take color 0)."""
     spark = edges.sparkSession
-    e = edges.select(
-        F.col("src").cast("long").alias("src"), F.col("dst").cast("long").alias("dst")
+    e, universe = graph_input(
+        edges.select(F.col("src").cast("long").alias("src"), F.col("dst").cast("long").alias("dst")), vertices
     )
     both = e.union(e.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-    if vertices is not None:
-        universe = vertices.select(F.col("vid").cast("long").alias("vid")).distinct()
-    else:
-        universe = both.select(F.col("src").alias("vid")).distinct()
     with supersteps(spark, "greedy_coloring", checkpoint, on_superstep) as loop:
         checkpoint = loop.checkpoint
         both = checkpoint(both, -1)

@@ -29,6 +29,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .universe import graph_input
+
 
 def densest_subgraph(
     edges: DataFrame, eps_permille: int = 100, max_rounds: int = 64
@@ -47,12 +49,7 @@ def densest_subgraph(
         .distinct()
         .localCheckpoint(eager=True)
     )
-    verts = (
-        alive.select(F.col("src").alias("vid"))
-        .union(alive.select(F.col("dst").alias("vid")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    verts = graph_input(alive)[1].localCheckpoint(eager=True)
     removed_parts: list[DataFrame] = []
     sched: list[tuple[int, int, int]] = []  # (round, n, m)
     coef = 2 * (1000 + eps_permille)

@@ -76,9 +76,7 @@ def collect_small(
     sizes: tuple[int, ...] | None = None,
 ) -> SmallGraph | None:
     """The graph as dense-indexed NumPy arrays, or ``None`` when it has more
-    than :data:`SMALL_GRAPH_MAX` edges or vertices, or an edge with an
-    endpoint outside ``vertices`` (the Spark kernels give such edges their
-    own meaning, so those graphs keep it).
+    than :data:`SMALL_GRAPH_MAX` edges or vertices.
 
     ``sizes`` is ``(edge rows, vertex rows)`` when the caller has counted
     them already; otherwise one count job over both tables decides first,
@@ -87,9 +85,12 @@ def collect_small(
     instead of nulls (a null would turn an int64 column into float64 in
     pandas and round vids ≥ 2^53).
 
-    Vertex ids are ``vertices.vid`` when a vertex table is given, else every
+    The graph follows :mod:`.universe`'s rule, applied here in NumPy: with
+    a vertex table the vertex ids are its distinct ``vid`` values and an
+    edge with an endpoint outside it is dropped; without one they are every
     edge endpoint. ``value`` names a column of ``vertices`` returned aligned
-    to the sorted ids (nulls read as NaN).
+    to the sorted ids (a repeated vid keeps its first row's value; nulls
+    read as NaN).
     """
     k = SMALL_GRAPH_MAX
     tables = [edges] if vertices is None else [edges, vertices]
@@ -126,7 +127,7 @@ def collect_small(
         vids = np.unique(np.concatenate([src, dst]))
         return SmallGraph(vids, np.searchsorted(vids, src), np.searchsorted(vids, dst), None)
     vids, first = np.unique(pdf["a"].to_numpy(np.int64)[is_v], return_index=True)
-    if not (np.isin(src, vids).all() and np.isin(dst, vids).all()):
-        return None
+    inside = np.isin(src, vids) & np.isin(dst, vids)
+    src, dst = src[inside], dst[inside]
     values = pdf["x"].to_numpy()[is_v][first] if value is not None else None
     return SmallGraph(vids, np.searchsorted(vids, src), np.searchsorted(vids, dst), values)

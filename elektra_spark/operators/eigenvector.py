@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 
 from ..checkpoint import CheckpointFn, SuperstepHook, supersteps
 from .hits import _l1, _spread
+from .universe import graph_input
 
 
 def eigenvector_centrality(
@@ -34,13 +35,10 @@ def eigenvector_centrality(
 ) -> DataFrame:
     """→ (vid, score) after exactly ``n_iter`` L1-normalized iterations."""
     spark = edges.sparkSession
+    edges, universe = graph_input(edges, vertices)
     both = edges.select("src", "dst").union(
         edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     )
-    if vertices is not None:
-        universe = vertices.select("vid")
-    else:
-        universe = both.select(F.col("src").alias("vid")).distinct()
 
     with supersteps(spark, "eigenvector_centrality", checkpoint, on_superstep) as loop:
         checkpoint = loop.checkpoint

@@ -38,6 +38,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..checkpoint import CheckpointFn, SuperstepHook, supersteps
+from .universe import graph_input
 
 
 def _spread(edges: DataFrame, scores: DataFrame, key: str, out: str) -> DataFrame:
@@ -58,11 +59,7 @@ def hits(
 ) -> DataFrame:
     """→ (vid, hub, auth) after exactly ``n_iter`` synchronous iterations."""
     spark = edges.sparkSession
-    e = edges.select("src", "dst")
-    if vertices is not None:
-        universe = vertices.select("vid")
-    else:
-        universe = e.select(F.col("src").alias("vid")).union(e.select(F.col("dst").alias("vid"))).distinct()
+    e, universe = graph_input(edges.select("src", "dst"), vertices)
 
     with supersteps(spark, "hits", checkpoint, on_superstep) as loop:
         checkpoint = loop.checkpoint

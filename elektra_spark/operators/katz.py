@@ -47,6 +47,7 @@ from pyspark.sql import functions as F
 
 from ..checkpoint import CheckpointFn, SuperstepHook, supersteps
 from .hits import _spread
+from .universe import graph_input
 
 
 def katz_centrality(
@@ -60,11 +61,7 @@ def katz_centrality(
 ) -> DataFrame:
     """→ (vid, katz) after exactly ``n_iter`` synchronous iterations."""
     spark = edges.sparkSession
-    e = edges.select("src", "dst")
-    if vertices is not None:
-        universe = vertices.select("vid")
-    else:
-        universe = e.select(F.col("src").alias("vid")).union(e.select(F.col("dst").alias("vid"))).distinct()
+    e, universe = graph_input(edges.select("src", "dst"), vertices)
 
     with supersteps(spark, "katz_centrality", checkpoint, on_superstep) as loop:
         checkpoint = loop.checkpoint

@@ -40,6 +40,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .universe import graph_input
+
 
 def _move_priority(rnd: int):
     """Per-round md5 move priority — the repo's portable 12-hex slice."""
@@ -52,6 +54,7 @@ def louvain_moves(edges: DataFrame, rounds: int, vertices: DataFrame | None = No
     Luby-mover schedule, over the canonical undirected edge set."""
     if rounds < 1:
         raise ValueError("rounds must be >= 1")
+    edges, verts = graph_input(edges, vertices)
     e = (
         edges.select(
             F.least("src", "dst").cast("long").alias("src"),
@@ -62,7 +65,9 @@ def louvain_moves(edges: DataFrame, rounds: int, vertices: DataFrame | None = No
     )
     b = e.union(e.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
     deg = b.groupBy(F.col("src").alias("vid")).agg(F.count(F.lit(1)).alias("d"))
-    verts = (vertices.select("vid") if vertices is not None else deg.select("vid")).distinct()
+    if vertices is None:
+        # self-loops are not part of the canonical edge set
+        verts = deg.select("vid")
     two_m = e.count() * 2  # scalar: one count, broadcast as a literal
     lab = verts.select("vid", F.col("vid").alias("lab"))
     for t in range(rounds):

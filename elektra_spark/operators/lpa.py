@@ -33,6 +33,7 @@ from pyspark.sql import functions as F
 
 from ..checkpoint import CheckpointFn, EphemeralCheckpointer, SuperstepHook, supersteps
 from . import driver_tier
+from .universe import graph_input, over_vertices
 
 
 def _np_vote(s, d, labels):
@@ -68,14 +69,16 @@ def label_propagation(
     """→ (vid, label) after exactly ``rounds`` synchronous supersteps.
 
     The vertex set is ``init_labels``' vids on a warm start, else
-    ``vertices``, else every edge endpoint. A warm start's labels are
+    ``vertices``, else every edge endpoint (:mod:`.universe`); an edge with
+    an endpoint outside it carries no vote. A warm start's labels are
     materialized, not committed again as step ``start_step``; a fresh run
     commits its initial labels as step ``start_step``. Without a
     ``checkpoint``, a graph within ``driver_tier.SMALL_GRAPH_MAX`` runs on
     the driver."""
     spark = edges.sparkSession
+    small_ok = checkpoint is None  # a durable run commits every superstep on Spark
     with supersteps(spark, "label_propagation", checkpoint, on_superstep, EphemeralCheckpointer) as loop:
-        if checkpoint is None:
+        if small_ok:
             g = (
                 driver_tier.collect_small(edges, vertices)
                 if init_labels is None
@@ -90,11 +93,8 @@ def label_propagation(
                 return spark.createDataFrame(
                     pd.DataFrame({"vid": g.vids, "label": labels}), "vid long, label long"
                 )
+        edges, universe = graph_input(edges, vertices)
         both = edges.select("src", "dst").union(edges.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-        if vertices is not None:
-            universe = vertices.select("vid")
-        else:
-            universe = both.select(F.col("src").alias("vid")).distinct()
         checkpoint = loop.checkpoint
         both = checkpoint(both, -1)
         if init_labels is not None:
@@ -262,17 +262,12 @@ def seeded_label_propagation(
     the labeled working set starts at |seeds| and grows by one BFS ring per
     round, so early supersteps shuffle frontier-sized relations, not |V|.
     """
+    edges, universe = graph_input(edges, vertices)
     both = edges.select("src", "dst").union(
         edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     )
-    if vertices is not None:
-        universe = vertices.select("vid")
-    else:
-        universe = (
-            both.select(F.col("src").alias("vid"))
-            .union(seeds.select("vid"))
-            .distinct()
-        )
+    if vertices is None:
+        universe = universe.union(seeds.select(F.col("vid").cast("long")))
     with supersteps(edges.sparkSession, "seeded_label_propagation", checkpoint, on_superstep,
                     EphemeralCheckpointer) as loop:
         checkpoint = loop.checkpoint
@@ -298,6 +293,4 @@ def seeded_label_propagation(
             )
             labels = checkpoint(sd.unionByName(ns), step + 1)
             loop.done()
-    return universe.join(labels, "vid", "left").select(
-        "vid", F.coalesce("label", F.lit(unlabeled)).alias("label")
-    )
+    return over_vertices(labels, universe, {"label": F.lit(unlabeled)})

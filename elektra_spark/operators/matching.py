@@ -30,7 +30,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..checkpoint import CheckpointFn, RetainedCheckpointer, SuperstepHook, supersteps
+from ..checkpoint import CheckpointFn, SuperstepHook, supersteps
+from .universe import graph_input
 
 
 def _edge_priority(rnd: int) -> F.Column:
@@ -87,11 +88,7 @@ def maximal_matching(
                 if matched is None
                 else checkpoint(matched.unionByName(winners), rnd)
             )
-            mv = (
-                winners.select(F.col("src").alias("vid"))
-                .unionByName(winners.select(F.col("dst").alias("vid")))
-                .distinct()
-            )
+            _, mv = graph_input(winners)
             alive = checkpoint(
                 alive.join(mv.withColumnRenamed("vid", "src"), "src", "left_anti").join(
                     mv.withColumnRenamed("vid", "dst"), "dst", "left_anti"
@@ -157,30 +154,32 @@ def coarsen(
     """→ (src, dst, weight): ``levels`` rounds of (maximal matching →
     contract). Level 1 weights count fine edges; deeper levels sum the
     weights of the edges they merge (exact cut preservation)."""
-    if checkpoint is None:
-        checkpoint = RetainedCheckpointer()
-    coarse = contract_matching(edges, maximal_matching(edges, checkpoint=checkpoint))
-    for lvl in range(1, levels):
-        coarse = checkpoint(coarse, -lvl)
-        m = maximal_matching(coarse.select("src", "dst"), checkpoint=checkpoint)
-        rep = m.select(F.col("dst").alias("vid"), F.col("src").alias("rep"))
-        rs = rep.withColumnRenamed("vid", "src").withColumnRenamed("rep", "rs")
-        rd = rep.withColumnRenamed("vid", "dst").withColumnRenamed("rep", "rd")
-        coarse = (
-            coarse.join(rs, "src", "left")
-            .join(rd, "dst", "left")
-            .select(
-                F.coalesce("rs", F.col("src")).alias("a"),
-                F.coalesce("rd", F.col("dst")).alias("b"),
-                "weight",
+    # one checkpointer (the caller's, else a RetainedCheckpointer) serves
+    # every level's matching loop
+    with supersteps(edges.sparkSession, "coarsen", checkpoint, no_aqe=False) as loop:
+        checkpoint = loop.checkpoint
+        coarse = contract_matching(edges, maximal_matching(edges, checkpoint=checkpoint))
+        for lvl in range(1, levels):
+            coarse = checkpoint(coarse, -lvl)
+            m = maximal_matching(coarse.select("src", "dst"), checkpoint=checkpoint)
+            rep = m.select(F.col("dst").alias("vid"), F.col("src").alias("rep"))
+            rs = rep.withColumnRenamed("vid", "src").withColumnRenamed("rep", "rs")
+            rd = rep.withColumnRenamed("vid", "dst").withColumnRenamed("rep", "rd")
+            coarse = (
+                coarse.join(rs, "src", "left")
+                .join(rd, "dst", "left")
+                .select(
+                    F.coalesce("rs", F.col("src")).alias("a"),
+                    F.coalesce("rd", F.col("dst")).alias("b"),
+                    "weight",
+                )
+                .select(
+                    F.least("a", "b").alias("src"),
+                    F.greatest("a", "b").alias("dst"),
+                    "weight",
+                )
+                .filter(F.col("src") != F.col("dst"))
+                .groupBy("src", "dst")
+                .agg(F.sum("weight").alias("weight"))
             )
-            .select(
-                F.least("a", "b").alias("src"),
-                F.greatest("a", "b").alias("dst"),
-                "weight",
-            )
-            .filter(F.col("src") != F.col("dst"))
-            .groupBy("src", "dst")
-            .agg(F.sum("weight").alias("weight"))
-        )
     return coarse

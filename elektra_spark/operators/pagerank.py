@@ -76,6 +76,7 @@ from pyspark.sql import functions as F
 
 from ..checkpoint import CheckpointFn, EphemeralCheckpointer, SuperstepHook, supersteps
 from . import driver_tier
+from .universe import graph_input
 
 # Worker-resident CSR block cache for the bsp kernel: lives at module
 # scope so it survives across tasks within a reused Python worker (the
@@ -699,7 +700,8 @@ def _pagerank_small(spark, g, damping, n_iter, directed, loop, start_step):
 
 
 def _prepare(edges: DataFrame, vertices: DataFrame | None, directed: bool):
-    """adjacency with source degrees + full vertex universe.
+    """adjacency with source degrees + full vertex universe
+    (:func:`.universe.graph_input`).
 
     Undirected graphs with no vertex table get the universe as a by-product
     of the degree aggregation (every endpoint appears as a src of the
@@ -708,6 +710,7 @@ def _prepare(edges: DataFrame, vertices: DataFrame | None, directed: bool):
     provably contains no dangling vertex (every member has an out-edge), so
     callers skip the dangling machinery without a probe job.
     """
+    edges, universe = graph_input(edges, vertices)
     if directed:
         adj = edges.select("src", "dst")
     else:
@@ -715,14 +718,9 @@ def _prepare(edges: DataFrame, vertices: DataFrame | None, directed: bool):
             edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
         )
     deg = adj.groupBy("src").agg(F.count("*").alias("deg"))
-    no_dangling = False
-    if vertices is not None:
-        universe = vertices.select("vid")
-    elif directed:
-        universe = adj.select(F.col("src").alias("vid")).union(adj.select(F.col("dst").alias("vid"))).distinct()
-    else:
+    no_dangling = vertices is None and not directed
+    if no_dangling:
         universe = deg.select(F.col("src").alias("vid"))
-        no_dangling = True
     adj_deg = adj.join(deg, "src")
     return adj_deg, deg, universe, no_dangling
 
@@ -870,9 +868,8 @@ def pagerank(
 
                     input_fp = f",e{_fp(edges, 'src', 'dst')},d{int(directed)}"
                     if vertices is not None:
-                        # computed in the universe aggregate above — same
-                        # rows (universe = vertices.select(vid)), same
-                        # expression, so the marker string is unchanged
+                        # computed in the universe aggregate above (the
+                        # table's distinct vids), same expression as _fp
                         input_fp += f",v{vfp}"
                 out = _pagerank_bsp(
                     spark, adj_deg, universe, n, n_slots, damping, n_iter, buckets,

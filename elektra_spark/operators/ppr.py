@@ -37,6 +37,7 @@ from pyspark.sql import functions as F
 
 from ..checkpoint import CheckpointFn, SuperstepHook, supersteps
 from .pagerank import _prepare
+from .universe import graph_input
 
 
 def personalized_pagerank(
@@ -146,18 +147,12 @@ def weighted_pagerank(
     w_expr = F.col(weight).cast("double") if weight else (
         F.lit(1) + (F.col("src") + F.col("dst")) % 5
     ).cast("double")
-    fwd = edges.select("src", "dst", w_expr.alias("w"))
+    fwd, universe = graph_input(edges.select("src", "dst", w_expr.alias("w")), vertices)
     if directed:
         adj = fwd
     else:
         adj = fwd.union(fwd.select(F.col("dst").alias("src"), F.col("src").alias("dst"), "w"))
     wout = adj.groupBy("src").agg(F.sum("w").alias("wout"))
-    if vertices is not None:
-        universe = vertices.select("vid")
-    else:
-        universe = (
-            adj.select(F.col("src").alias("vid")).union(adj.select(F.col("dst").alias("vid"))).distinct()
-        )
 
     with supersteps(spark, "weighted_pagerank", checkpoint, on_superstep) as loop:
         checkpoint = loop.checkpoint

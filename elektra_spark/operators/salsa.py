@@ -33,6 +33,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..checkpoint import CheckpointFn, SuperstepHook, supersteps
+from .universe import graph_input
 
 
 def salsa(
@@ -44,15 +45,7 @@ def salsa(
 ) -> DataFrame:
     """→ (vid, hub, auth) after exactly ``n_iter`` synchronous iterations."""
     spark = edges.sparkSession
-    e = edges.select("src", "dst")
-    if vertices is not None:
-        universe = vertices.select("vid")
-    else:
-        universe = (
-            e.select(F.col("src").alias("vid"))
-            .union(e.select(F.col("dst").alias("vid")))
-            .distinct()
-        )
+    e, universe = graph_input(edges.select("src", "dst"), vertices)
 
     with supersteps(spark, "salsa", checkpoint, on_superstep) as loop:
         checkpoint = loop.checkpoint

@@ -39,6 +39,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .cc import connected_components
+from .universe import graph_input
 
 
 def scan_clusters(
@@ -53,6 +54,7 @@ def scan_clusters(
         raise ValueError(f"eps_permille must be in (0, 1000], got {eps_permille}")
     if mu < 2:
         raise ValueError(f"mu must be >= 2, got {mu}")
+    edges, verts = graph_input(edges, vertices)
     e = (
         edges.select(
             F.least("src", "dst").cast("long").alias("src"),
@@ -90,7 +92,9 @@ def scan_clusters(
         .groupBy("vid")
         .agg(F.count(F.lit(1)).alias("en"))
     )
-    verts = (vertices.select("vid") if vertices is not None else deg.select("vid")).distinct()
+    if vertices is None:
+        # self-loops are not part of the canonical edge set
+        verts = deg.select("vid")
     core = epsdeg.filter(F.col("en") + 1 >= mu).select("vid")
     core_edges = sim.join(core.withColumnRenamed("vid", "src"), "src", "left_semi").join(
         core.withColumnRenamed("vid", "dst"), "dst", "left_semi"

@@ -68,7 +68,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..checkpoint import CheckpointFn, RetainedCheckpointer, SuperstepHook, supersteps
+from ..checkpoint import CheckpointFn, SuperstepHook, supersteps
+from .universe import graph_input
 
 
 def _local_min_reach(labels_pdf: pd.DataFrame, edges_pdf: pd.DataFrame) -> pd.DataFrame:
@@ -243,67 +244,64 @@ def strongly_connected_components(
     space — assigned a vertex.
     """
     spark = edges.sparkSession
-    if vertices is None:
-        vertices = (
-            edges.select(F.col("src").alias("vid"))
-            .unionByName(edges.select(F.col("dst").alias("vid")))
-            .distinct()
-        )
-    if checkpoint is None:
-        checkpoint = RetainedCheckpointer()
-    remaining_v = checkpoint(vertices.select(F.col("vid").cast("long").alias("vid")).distinct(), -1)
-    remaining_e = checkpoint(
-        edges.select(F.col("src").cast("long").alias("src"), F.col("dst").cast("long").alias("dst")), -1
+    edges, universe = graph_input(
+        edges.select(F.col("src").cast("long").alias("src"), F.col("dst").cast("long").alias("dst")), vertices
     )
-    assigned: DataFrame | None = None
-    for rnd in range(1, max_rounds + 1):
-        if remaining_v.limit(1).count() == 0:
-            break
-        # round 1: raw vids (fast path on topologically aligned vid orders);
-        # later rounds: scrambled keys = effectively random pivots
-        key_of = None if rnd == 1 else _scramble
-        color = checkpoint(
-            min_forward_reach(
-                remaining_e, remaining_v, checkpoint=checkpoint, on_superstep=on_superstep, label_of=key_of
-            ),
-            rnd,
-        ).withColumnRenamed("label", "color")
-        # same-color edge restriction: two vertices of one SCC always share a
-        # color (their forward sets within the remaining graph are equal), so
-        # cross-color edges are never intra-SCC — they are both excluded from
-        # the backward pass AND permanently dropped below, which is the
-        # recursion step that makes each color class an independent
-        # subproblem (Orzan-style coloring; without the drop, the next
-        # round's global re-coloring can re-merge classes and a chain
-        # degenerates to O(n) rounds)
-        same_e = checkpoint(
-            remaining_e.join(color.select(F.col("vid").alias("src"), F.col("color").alias("sc")), "src")
-            .join(color.select(F.col("vid").alias("dst"), F.col("color").alias("dc")), "dst")
-            .filter(F.col("sc") == F.col("dc"))
-            .select("src", "dst"),
-            rnd,
-        )
-        # reversed: mr(u) == color(u) iff the class root reaches u —
-        # mutual reachability with the root
-        ce = same_e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        mr = min_forward_reach(
-            ce, remaining_v, checkpoint=checkpoint, on_superstep=on_superstep, label_of=key_of
-        )
-        matched = color.join(mr, "vid").filter(F.col("color") == F.col("label")).select(
-            "vid", F.col("color").alias("ckey")
-        )
-        # re-label each extracted key to the SCC's min vid inside the round,
-        # so raw-vid and scrambled-key rounds share one output key space
-        rep = matched.groupBy("ckey").agg(F.min("vid").alias("scc"))
-        new = checkpoint(matched.join(rep, "ckey").select("vid", "scc"), rnd)
-        assigned = new if assigned is None else checkpoint(assigned.unionByName(new), rnd)
-        remaining_v = checkpoint(remaining_v.join(new, "vid", "left_anti"), rnd)
-        remaining_e = checkpoint(
-            same_e.join(new.select(F.col("vid").alias("src")), "src", "left_anti").join(
-                new.select(F.col("vid").alias("dst")), "dst", "left_anti"
-            ),
-            rnd,
-        )
-    else:
-        raise RuntimeError(f"scc did not finish in {max_rounds} FW-BW rounds")
-    return assigned if assigned is not None else vertices.select("vid", F.col("vid").alias("scc"))
+    # one checkpointer (the caller's, else a RetainedCheckpointer) serves
+    # this loop and every min_forward_reach loop it runs
+    with supersteps(spark, "strongly_connected_components", checkpoint, no_aqe=False) as loop:
+        checkpoint = loop.checkpoint
+        remaining_v = checkpoint(universe, -1)
+        remaining_e = checkpoint(edges, -1)
+        assigned: DataFrame | None = None
+        for rnd in loop.steps(range(1, max_rounds + 1)):
+            if remaining_v.limit(1).count() == 0:
+                break
+            # round 1: raw vids (fast path on topologically aligned vid orders);
+            # later rounds: scrambled keys = effectively random pivots
+            key_of = None if rnd == 1 else _scramble
+            color = checkpoint(
+                min_forward_reach(
+                    remaining_e, remaining_v, checkpoint=checkpoint, on_superstep=on_superstep, label_of=key_of
+                ),
+                rnd,
+            ).withColumnRenamed("label", "color")
+            # same-color edge restriction: two vertices of one SCC always share a
+            # color (their forward sets within the remaining graph are equal), so
+            # cross-color edges are never intra-SCC — they are both excluded from
+            # the backward pass AND permanently dropped below, which is the
+            # recursion step that makes each color class an independent
+            # subproblem (Orzan-style coloring; without the drop, the next
+            # round's global re-coloring can re-merge classes and a chain
+            # degenerates to O(n) rounds)
+            same_e = checkpoint(
+                remaining_e.join(color.select(F.col("vid").alias("src"), F.col("color").alias("sc")), "src")
+                .join(color.select(F.col("vid").alias("dst"), F.col("color").alias("dc")), "dst")
+                .filter(F.col("sc") == F.col("dc"))
+                .select("src", "dst"),
+                rnd,
+            )
+            # reversed: mr(u) == color(u) iff the class root reaches u —
+            # mutual reachability with the root
+            ce = same_e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+            mr = min_forward_reach(
+                ce, remaining_v, checkpoint=checkpoint, on_superstep=on_superstep, label_of=key_of
+            )
+            matched = color.join(mr, "vid").filter(F.col("color") == F.col("label")).select(
+                "vid", F.col("color").alias("ckey")
+            )
+            # re-label each extracted key to the SCC's min vid inside the round,
+            # so raw-vid and scrambled-key rounds share one output key space
+            rep = matched.groupBy("ckey").agg(F.min("vid").alias("scc"))
+            new = checkpoint(matched.join(rep, "ckey").select("vid", "scc"), rnd)
+            assigned = new if assigned is None else checkpoint(assigned.unionByName(new), rnd)
+            remaining_v = checkpoint(remaining_v.join(new, "vid", "left_anti"), rnd)
+            remaining_e = checkpoint(
+                same_e.join(new.select(F.col("vid").alias("src")), "src", "left_anti").join(
+                    new.select(F.col("vid").alias("dst")), "dst", "left_anti"
+                ),
+                rnd,
+            )
+        else:
+            raise RuntimeError(f"scc did not finish in {max_rounds} FW-BW rounds")
+    return assigned if assigned is not None else universe.select("vid", F.col("vid").alias("scc"))

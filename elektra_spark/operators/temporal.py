@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..checkpoint import CheckpointFn, SuperstepHook, supersteps
+from .universe import graph_input, over_vertices
 
 
 def earliest_arrival(
@@ -52,8 +53,8 @@ def earliest_arrival(
     (src, dst, t) requires ``t ≥ arrival(src)`` and sets ``arrival(dst) ≤ t``.
     """
     spark = tedges.sparkSession
-    te = tedges.select(
-        F.col("src").cast("long"), F.col("dst").cast("long"), F.col("t").cast("long")
+    te, _ = graph_input(
+        tedges.select(F.col("src").cast("long"), F.col("dst").cast("long"), F.col("t").cast("long")), vertices
     )
     if isinstance(sources, DataFrame):
         seed = sources.select(F.col("vid").cast("long").alias("vid")).distinct()
@@ -88,13 +89,7 @@ def earliest_arrival(
             if changed == 0:
                 break
     out = arr.select("vid", F.col("arrival").cast("long").alias("arrival"))
-    if vertices is not None:
-        out = (
-            vertices.select("vid")
-            .join(out, "vid", "left")
-            .select("vid", F.coalesce("arrival", F.lit(-1)).cast("long").alias("arrival"))
-        )
-    return out
+    return over_vertices(out, vertices, {"arrival": F.lit(-1)})
 
 
 #: seed arrival for the reversed/negated reduction — below every negated
@@ -123,6 +118,7 @@ def latest_departure(
     arrival −t₁ maximizes the forward departure t₁ — so
     ``departure(v) = −arrival_rev(v)`` exactly, hop bound preserved. One
     kernel, both temporal directions."""
+    tedges, _ = graph_input(tedges, vertices)
     rev = tedges.select(
         F.col("dst").alias("src"), F.col("src").alias("dst"), (-F.col("t")).cast("long").alias("t")
     )
@@ -140,15 +136,5 @@ def latest_departure(
         tset = targets.select(F.col("vid").cast("long").alias("vid")).distinct()
     else:
         tset = spark.createDataFrame([(int(v),) for v in targets], "vid long").distinct()
-    out = (
-        a.join(tset, "vid", "left_anti")
-        .select("vid", (-F.col("arrival")).cast("long").alias("departure"))
-    )
-    if vertices is not None:
-        out = (
-            vertices.select("vid")
-            .join(tset, "vid", "left_anti")
-            .join(out, "vid", "left")
-            .select("vid", F.coalesce("departure", F.lit(-1)).cast("long").alias("departure"))
-        )
-    return out
+    out = a.select("vid", (-F.col("arrival")).cast("long").alias("departure"))
+    return over_vertices(out, vertices, {"departure": F.lit(-1)}).join(tset, "vid", "left_anti")

@@ -39,6 +39,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..checkpoint import CheckpointFn, SuperstepHook, supersteps
+from .universe import graph_input, over_vertices
 
 WALK_MOD = 1_073_741_789  # largest prime < 2^30
 _A, _B, _C = 1_000_003, 999_983, 7_919
@@ -227,16 +228,14 @@ def maximal_independent_set(
     Isolated vertices (require ``vertices``) join the MIS in round 1.
     """
     spark = edges.sparkSession
-    e = edges.select(F.col("src").cast("long").alias("src"), F.col("dst").cast("long").alias("dst"))
+    e, universe = graph_input(
+        edges.select(F.col("src").cast("long").alias("src"), F.col("dst").cast("long").alias("dst")), vertices
+    )
     both = e.union(e.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-    if vertices is not None:
-        universe = vertices.select(F.col("vid").cast("long").alias("vid"))
-    else:
-        universe = both.select(F.col("src").alias("vid")).distinct()
     with supersteps(spark, "maximal_independent_set", checkpoint, on_superstep) as loop:
         checkpoint = loop.checkpoint
         both = checkpoint(both, -1)
-        undecided = checkpoint(universe.distinct(), 0)
+        undecided = checkpoint(universe, 0)
         members: DataFrame | None = None
         for rnd in loop.steps(range(1, max_rounds + 1)):
             pri = undecided.select("vid", _step_hash(F.lit(0), rnd, F.col("vid")).alias("h"))
@@ -270,5 +269,4 @@ def maximal_independent_set(
         else:
             raise RuntimeError(f"MIS did not finish in {max_rounds} Luby rounds")
     mdf = members if members is not None else universe.limit(0)
-    out = universe.join(mdf.withColumn("in_mis", F.lit(True)), "vid", "left")
-    return out.select("vid", F.coalesce("in_mis", F.lit(False)).alias("in_mis"))
+    return over_vertices(mdf.withColumn("in_mis", F.lit(True)), universe, {"in_mis": F.lit(False)})

@@ -168,6 +168,24 @@ def seeded_lpa_oracle(edges, seeds, vids=None, rounds=5, unlabeled=-1):
     return {v: labels.get(v, unlabeled) for v in universe}
 
 
+def hits_oracle(pairs, verts, n_iter):
+    """Directed L1-normalized HITS power iteration (pairs are src→dst)."""
+    hub = {v: 1.0 / len(verts) for v in verts}
+    auth = {v: 0.0 for v in verts}
+    for _ in range(n_iter):
+        raw = {}
+        for a, b in pairs:
+            raw[b] = raw.get(b, 0.0) + hub[a]
+        tot = sum(raw.values()) or 1.0
+        auth = {v: raw.get(v, 0.0) / tot for v in verts}
+        raw = {}
+        for a, b in pairs:
+            raw[a] = raw.get(a, 0.0) + auth[b]
+        tot = sum(raw.values()) or 1.0
+        hub = {v: raw.get(v, 0.0) / tot for v in verts}
+    return hub, auth
+
+
 def triangle_count_oracle(edges) -> int:
     """Exact triangle count via adjacency-set intersection (each triangle is
     counted once per edge → divide by 3)."""

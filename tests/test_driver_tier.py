@@ -165,18 +165,6 @@ def test_tier_forced_fallback(spark, monkeypatch, pairs, vids):
     assert on_tier[1] == lpa_oracle(pairs, vids, rounds=3)
 
 
-def test_tier_declines_edges_outside_vertex_table(spark, tier):
-    """An edge endpoint missing from the vertex table keeps the Spark
-    path's own answer: LPA drops the edge, df PageRank (sparse vids, so
-    auto picks df) also ranks the missing endpoint. Same answer with the
-    tier on and off."""
-    e, v = _edges(spark, [(0, 1), (1, 2), (2, 5)]), _verts(spark, range(4))
-    assert driver_tier.collect_small(e, v) is None
-    assert _labels(label_propagation(e, vertices=v, rounds=2)) == lpa_oracle([(0, 1), (1, 2)], range(4), rounds=2)
-    se, sv = _edges(spark, [(0, 100), (100, 200), (200, 5000)]), _verts(spark, [0, 100, 200, 300])
-    _assert_ranks(_ranks(pagerank(se, vertices=sv, n_iter=4)), _ranks(pagerank(se, vertices=sv, n_iter=4, kernel="df")))
-
-
 def test_tier_taken_only_when_nothing_specific_asked(spark, monkeypatch, tmp_path):
     """A named kernel, a checkpointer or a bsp prep dir keeps the Spark
     path; the default call takes the tier."""

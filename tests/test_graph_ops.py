@@ -11,7 +11,7 @@ from elektra_spark.operators.forest import spanning_forest
 from elektra_spark.operators.lpa import label_propagation
 from elektra_spark.operators.triangles import triangle_count
 
-from .oracles import lpa_oracle, spanning_forest_invariants, triangle_count_oracle
+from .oracles import hits_oracle, lpa_oracle, spanning_forest_invariants, triangle_count_oracle
 
 HOUSE = [(0, 1), (1, 2), (0, 2), (2, 3), (3, 1), (1, 4), (3, 4)]
 CLIQUE5_PLUS_PATH = [(a, b) for a in range(5) for b in range(a + 1, 5)] + [(5, 6), (6, 7)]
@@ -118,24 +118,6 @@ def _kcore_oracle(pairs, k):
         edges = {(a, b) for a, b in edges if a not in removed and b not in removed}
 
 
-def _hits_oracle(pairs, verts, n_iter):
-    """Directed L1-normalized HITS power iteration (pairs are src→dst)."""
-    hub = {v: 1.0 / len(verts) for v in verts}
-    auth = {v: 0.0 for v in verts}
-    for _ in range(n_iter):
-        raw = {}
-        for a, b in pairs:
-            raw[b] = raw.get(b, 0.0) + hub[a]
-        tot = sum(raw.values()) or 1.0
-        auth = {v: raw.get(v, 0.0) / tot for v in verts}
-        raw = {}
-        for a, b in pairs:
-            raw[a] = raw.get(a, 0.0) + auth[b]
-        tot = sum(raw.values()) or 1.0
-        hub = {v: raw.get(v, 0.0) / tot for v in verts}
-    return hub, auth
-
-
 @pytest.mark.parametrize(
     "pairs,seeds,max_hops",
     [
@@ -186,7 +168,7 @@ def test_hits_matches_oracle(spark):
     edges = edges_from_pairs(spark, pairs)
     vdf = spark.createDataFrame([(v,) for v in verts], "vid long")
     rows = hits(edges, vertices=vdf, n_iter=6).collect()
-    hub_o, auth_o = _hits_oracle(pairs, verts, 6)
+    hub_o, auth_o = hits_oracle(pairs, verts, 6)
     for r in rows:
         assert abs(r["hub"] - hub_o[r["vid"]]) < 1e-9
         assert abs(r["auth"] - auth_o[r["vid"]]) < 1e-9
