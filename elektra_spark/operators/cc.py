@@ -33,6 +33,10 @@ At 100 TB: the heavy relation (edges) is shuffled **once** (the range
 partition); supersteps shuffle only the label table, which shrinks to the
 quotient graph after phase 1. Hub vertices are harmless here because min() is
 a fully map-side-combinable aggregate.
+
+A graph within ``driver_tier.SMALL_GRAPH_MAX``, run on the default kernel
+with no checkpointer, never reaches either level: the driver tier collects it
+and runs the NumPy kernel of both levels once (:func:`_cc_small`).
 """
 
 from __future__ import annotations
@@ -299,6 +303,28 @@ def _driver_union_find(spark, links_pdf: pd.DataFrame) -> DataFrame:
     return spark.createDataFrame(out) if len(out) else None
 
 
+def _cc_small(edges: DataFrame, vertices: DataFrame | None, on_phase) -> DataFrame | None:
+    """The driver tier (:mod:`.driver_tier`): :func:`_np_min_labels` over the
+    collected graph, or ``None`` when it is over
+    ``driver_tier.SMALL_GRAPH_MAX``. Its steps report under the csr
+    kernel's phase names: the size job is ``quotient_probe``, the collect
+    and dense relabel (or the decline) ``collapse_repart``, the NumPy solve
+    ``quotient_solve``."""
+    spark = edges.sparkSession
+    with supersteps(spark, "connected_components", on_phase=on_phase) as loop:
+        with loop.phase("quotient_probe"):
+            sizes = driver_tier.table_sizes(edges, vertices)
+        with loop.phase("collapse_repart"):
+            g = driver_tier.collect_small(edges, vertices, sizes=sizes)
+        if g is None:
+            return None
+        with loop.phase("quotient_solve"):
+            component = g.vids[_np_min_labels(g.src, g.dst, len(g.vids))]
+    return driver_tier.local_frame(
+        spark, pd.DataFrame({"vid": g.vids, "component": component}), "vid long, component long"
+    )
+
+
 def connected_components(
     edges: DataFrame,
     vertices: DataFrame | None = None,
@@ -323,7 +349,11 @@ def connected_components(
                  once; supersteps touch only the quotient.
       - 'df'   : pure DataFrame hash-to-min + pointer jumping over the raw
                  edges (O(log n) supersteps; reference/simple path).
-      - 'auto' : 'csr'.
+      - 'auto' : with no ``checkpoint``, a graph of at most
+                 ``driver_tier.SMALL_GRAPH_MAX`` edges and vertices is
+                 solved on the driver (:func:`_cc_small`: one size job, one
+                 collect, :func:`_np_min_labels`) and returned as a
+                 one-partition frame; otherwise 'csr'.
 
     ``pre_partitioned``: the input edge table is already src-clustered (e.g.
     stored range-partitioned/sorted by src — the recommended Iceberg table
@@ -333,16 +363,24 @@ def connected_components(
     small.
 
     ``on_phase``: observability hook, called with ``(name, seconds)`` for
-    the csr kernel's three eager phases (``collapse_repart`` = local
-    union-find kernel + the one vid-shuffle of the pair table,
-    ``quotient_probe`` = links collect, ``quotient_solve`` = driver UF or
-    distributed fixpoint; each a ``loop.phase`` of
-    :func:`~elektra_spark.checkpoint.supersteps`, which also labels its
-    jobs); the final label resolve is lazy and lands in the caller's
-    action.
+    three eager phases, each a ``loop.phase`` of
+    :func:`~elektra_spark.checkpoint.supersteps` (which also labels its
+    jobs). The csr kernel fires ``collapse_repart`` (local union-find
+    kernel + the one vid-shuffle of the pair table), ``quotient_probe``
+    (links collect) and ``quotient_solve`` (driver UF or distributed
+    fixpoint); its final label resolve is lazy and lands in the caller's
+    action. The driver tier fires ``quotient_probe`` (the size job),
+    ``collapse_repart`` (the collect and dense relabel) and
+    ``quotient_solve`` (the NumPy solve), in that order; on a graph over
+    its bound the first two (the second without a job) precede the csr
+    kernel's three.
     """
     if kernel not in ("auto", "csr", "df"):
         raise ValueError(f"unknown connected_components kernel {kernel!r}; expected auto|csr|df")
+    if kernel == "auto" and checkpoint is None:
+        small = _cc_small(edges, vertices, on_phase)
+        if small is not None:
+            return small
     spark = edges.sparkSession
     edges, universe = graph_input(edges, vertices)
     if kernel == "df":

@@ -7,25 +7,32 @@ that encode side files. Every operator here makes the reference's trade —
 the sequential fallback below a threshold (elektra
 ``euler_tour_tree.h:279``), and the Python-boundary cost that "Accelerating
 Python UDFs in Vectorized Query Execution" (CIDR 2022) measures, paid once
-instead of per stage — under two bounds and one collect rule:
+instead of per stage — under three bounds and one collect rule:
 
 - :data:`SMALL_GRAPH_MAX` bounds a whole input graph, edges and vertices.
-  :func:`collect_small` brings it to the driver for
-  :func:`~elektra_spark.operators.pagerank.pagerank` and
-  :func:`~elektra_spark.operators.lpa.label_propagation`, which take the
-  tier only when the caller asked for nothing specific (the default
-  kernel, no checkpointer, no bsp prep dir), so durable runs still commit
-  every superstep.
+  :func:`collect_small` brings it to the driver (one size job,
+  :func:`table_sizes`, then one collect) for
+  :func:`~elektra_spark.operators.pagerank.pagerank`,
+  :func:`~elektra_spark.operators.lpa.label_propagation`,
+  :func:`~elektra_spark.operators.cc.connected_components` and
+  :func:`~elektra_spark.operators.triangles.triangle_count`. The first
+  three take the tier only when the caller asked for nothing specific (the
+  default kernel, no checkpointer, no bsp prep dir), so durable runs still
+  commit every superstep; CC and triangles answer in a one-partition frame
+  (:func:`local_frame`).
+- :data:`DRIVER_WEDGES_MAX` bounds the work of the triangle tier: the
+  wedges its degree-ordered enumeration visits, Σ C(d⁺, 2) over the
+  oriented out-degrees, known before it enumerates any. Over it the Spark
+  wedge join runs.
 - :data:`DRIVER_ROWS_MAX` bounds a *derived* relation that a distributed
-  operator has already shrunk: the CC quotient links
-  (:func:`~elektra_spark.operators.cc.connected_components`), the winner
-  union of both forests (:mod:`~elektra_spark.operators.forest`), the
-  contracted add batch and the delete slice's edges and vertices
+  operator has already shrunk: the CC quotient links of the csr kernel,
+  the winner union of both forests (:mod:`~elektra_spark.operators.forest`),
+  the contracted add batch and the delete slice's edges and vertices
   (:class:`~elektra_spark.dynamic.updates.DynamicGraph`). Each collects it
   with :func:`collect_bounded` — one job that both decides the path and
   ships the rows — and otherwise keeps its distributed fallback.
 
-Tests set either bound to 0 (or to a small k) to force the fallback.
+Tests set any bound to 0 (or to a small k) to force the fallback.
 """
 
 from __future__ import annotations
@@ -51,6 +58,11 @@ SMALL_GRAPH_MAX = 500_000
 # (collect_bounded). Over it, the operator's distributed path runs.
 DRIVER_ROWS_MAX = 5_000_000
 
+# Bound on the wedges the triangle tier enumerates (Σ C(d⁺, 2) over the
+# degree-oriented out-degrees). The tier closes them in fixed-size chunks
+# (triangles._WEDGE_CHUNK), so the bound caps driver time, not memory.
+DRIVER_WEDGES_MAX = 50_000_000
+
 
 def collect_bounded(df: DataFrame, k: int) -> pd.DataFrame | None:
     """``df`` as pandas when it has at most ``k`` rows, else ``None``.
@@ -60,6 +72,30 @@ def collect_bounded(df: DataFrame, k: int) -> pd.DataFrame | None:
     first."""
     pdf = df.limit(k + 1).toPandas()
     return pdf if len(pdf) <= k else None
+
+
+def local_frame(spark, pdf: pd.DataFrame, schema: str) -> DataFrame:
+    """A driver-tier answer as a one-partition DataFrame.
+
+    ``createDataFrame`` spreads a local relation over up to
+    ``defaultParallelism`` slices; a caller that writes the answer (the
+    CC labels a :class:`~elektra_spark.dynamic.updates.DynamicGraph`
+    commits) would write a file per slice. A relation of at most one row is
+    one slice already and collects with no job, so it is left as is."""
+    df = spark.createDataFrame(pdf, schema)
+    return df if len(pdf) <= 1 else df.coalesce(1)
+
+
+def table_sizes(edges: DataFrame, vertices: DataFrame | None = None) -> tuple[int, ...]:
+    """``(edge rows,)`` or ``(edge rows, vertex rows)``: one count job over
+    both tables."""
+    tables = [edges] if vertices is None else [edges, vertices]
+    with _no_aqe(edges.sparkSession):
+        counts = reduce(
+            DataFrame.union,
+            [t.agg(F.lit(i).alias("t"), F.count("*").alias("n")) for i, t in enumerate(tables)],
+        ).collect()
+    return tuple(r["n"] for r in sorted(counts))
 
 
 class SmallGraph(NamedTuple):
@@ -79,11 +115,11 @@ def collect_small(
     than :data:`SMALL_GRAPH_MAX` edges or vertices.
 
     ``sizes`` is ``(edge rows, vertex rows)`` when the caller has counted
-    them already; otherwise one count job over both tables decides first,
-    so a graph over the bound ships no rows to the driver. Within the bound
-    one more job collects both tables at once; rows carry a kind tag
-    instead of nulls (a null would turn an int64 column into float64 in
-    pandas and round vids ≥ 2^53).
+    them already; otherwise one count job over both tables
+    (:func:`table_sizes`) decides first, so a graph over the bound ships no
+    rows to the driver. Within the bound one more job collects both tables
+    at once; rows carry a kind tag instead of nulls (a null would turn an
+    int64 column into float64 in pandas and round vids ≥ 2^53).
 
     The graph follows :mod:`.universe`'s rule, applied here in NumPy: with
     a vertex table the vertex ids are its distinct ``vid`` values and an
@@ -92,17 +128,11 @@ def collect_small(
     to the sorted ids (a repeated vid keeps its first row's value; nulls
     read as NaN).
     """
-    k = SMALL_GRAPH_MAX
-    tables = [edges] if vertices is None else [edges, vertices]
+    if sizes is None:
+        sizes = table_sizes(edges, vertices)
+    if max(sizes) > SMALL_GRAPH_MAX:
+        return None
     with _no_aqe(edges.sparkSession):
-        if sizes is None:
-            counts = reduce(
-                DataFrame.union,
-                [t.agg(F.lit(i).alias("t"), F.count("*").alias("n")) for i, t in enumerate(tables)],
-            ).collect()
-            sizes = tuple(r["n"] for r in sorted(counts))
-        if max(sizes) > k:
-            return None
         vtype = vertices.schema[value].dataType if value is not None else "long"
         probe = edges.select(
             F.col("src").cast("long").alias("a"),

@@ -62,6 +62,9 @@ def louvain_moves(edges: DataFrame, rounds: int, vertices: DataFrame | None = No
         )
         .filter(F.col("src") != F.col("dst"))
         .distinct()
+        # materialized once: every round's localCheckpoint and the two_m
+        # count would otherwise re-run the distinct exchange
+        .localCheckpoint(eager=True)
     )
     b = e.union(e.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
     deg = b.groupBy(F.col("src").alias("vid")).agg(F.count(F.lit(1)).alias("d"))

@@ -62,6 +62,10 @@ def scan_clusters(
         )
         .filter(F.col("src") != F.col("dst"))
         .distinct()
+        # materialized once: the similarity, core and border plans and
+        # connected_components' collect or collapse would otherwise each
+        # re-run the distinct exchange
+        .localCheckpoint(eager=True)
     )
     b = e.union(e.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
     deg = b.groupBy(F.col("src").alias("vid")).agg(F.count(F.lit(1)).alias("d"))

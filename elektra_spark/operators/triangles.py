@@ -11,14 +11,29 @@ is the skew story at 100 TB.
 
 Plan shape: two shuffle joins on arc endpoints + one count. AQE handles any
 residual skew in the wedge probe join.
+
+:func:`triangle_count` (and so :func:`transitivity`,
+:func:`triangle_count_sampled` and :func:`triangle_count_delta`'s batch
+term) first tries the driver tier (:mod:`.driver_tier`): a graph within
+``SMALL_GRAPH_MAX`` edges is collected and counted in NumPy by the same
+orientation (:func:`_np_triangle_count`), unless its wedges exceed
+``DRIVER_WEDGES_MAX``. Both paths count the same wedges, so they agree on
+any input, duplicate rows and self-loops included.
 """
 
 from __future__ import annotations
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from . import driver_tier
 from .degrees import degrees
+
+# wedges closed per NumPy pass of the driver tier: bounds its peak memory
+# (a few int64 arrays of this length) whatever the graph's wedge count
+_WEDGE_CHUNK = 1 << 22
 
 
 def _oriented_arcs(edges: DataFrame) -> DataFrame:
@@ -37,8 +52,59 @@ def _oriented_arcs(edges: DataFrame) -> DataFrame:
     )
 
 
+def _np_triangle_count(src: np.ndarray, dst: np.ndarray, n: int) -> int | None:
+    """The wedge join of :func:`triangle_count` over dense-indexed edge
+    rows, or ``None`` when it has more than ``driver_tier.DRIVER_WEDGES_MAX``
+    wedges.
+
+    Arcs are oriented by the same (degree, vid) rank as
+    :func:`_oriented_arcs` (degrees count edge rows, so a duplicate row is a
+    second arc and a self-loop a self-arc) and grouped by apex into a CSR
+    sorted by target. Arc ``p`` then pairs with the later arcs of its apex,
+    so the wedges are enumerated in arc order, chunk by chunk; a wedge
+    ``(v, w)`` with ``v < w`` counts when an edge row joins ``v`` and ``w``
+    (a ``searchsorted`` over the sorted undirected edge keys)."""
+    deg = np.bincount(src, minlength=n) + np.bincount(dst, minlength=n)
+    lower_first = (deg[src] < deg[dst]) | ((deg[src] == deg[dst]) & (src < dst))
+    apex = np.where(lower_first, src, dst)
+    out_deg = np.bincount(apex, minlength=n)
+    if int((out_deg * (out_deg - 1) // 2).sum()) > driver_tier.DRIVER_WEDGES_MAX:
+        return None
+    tip = np.where(lower_first, dst, src)
+    order = np.lexsort((tip, apex))
+    apex, tip = apex[order], tip[order]
+    partners = np.cumsum(out_deg)[apex] - np.arange(len(tip)) - 1
+    ends = np.cumsum(partners)
+    keys = np.unique(np.minimum(src, dst) * n + np.maximum(src, dst))
+    total, start = 0, 0
+    while start < len(tip):
+        done = int(ends[start - 1]) if start else 0
+        stop = max(int(np.searchsorted(ends, done + _WEDGE_CHUNK, side="right")), start + 1)
+        cnt = partners[start:stop]
+        first = np.repeat(np.arange(start, stop), cnt)
+        # the k-th partner of arc p is arc p + 1 + k
+        second = first + 1 + np.arange(len(first)) - np.repeat(np.cumsum(cnt) - cnt, cnt)
+        v, w = tip[first], tip[second]
+        q = v[v < w] * n + w[v < w]
+        hit = keys[np.minimum(np.searchsorted(keys, q), len(keys) - 1)] == q
+        total += int(np.count_nonzero(hit))
+        start = stop
+    return total
+
+
 def triangle_count(edges: DataFrame) -> DataFrame:
-    """→ single-row DataFrame (n_triangles: long)."""
+    """→ single-row DataFrame (n_triangles: long).
+
+    A graph within the driver tier's bounds is counted by
+    :func:`_np_triangle_count` after one size job and one collect; any
+    other by the Spark wedge join."""
+    g = driver_tier.collect_small(edges)
+    if g is not None:
+        n = _np_triangle_count(g.src, g.dst, len(g.vids))
+        if n is not None:
+            return driver_tier.local_frame(
+                edges.sparkSession, pd.DataFrame({"n_triangles": [n]}), "n_triangles long"
+            )
     arcs = _oriented_arcs(edges)
     e1 = arcs.select(F.col("a").alias("u"), F.col("b").alias("v"))
     e2 = arcs.select(F.col("a").alias("u"), F.col("b").alias("w"))

@@ -136,7 +136,8 @@ def test_superstep_runtime_labels_and_hook_sequences(spark):
     hook sees the same (step, frontier) sequence as before, each superstep
     runs under ``<outer>/<operator>/superstep/<k>``, CC's csr phases under
     ``<outer>/connected_components/<phase>``, and the caller's description
-    and job group are back after each call."""
+    and job group are back after each call. The csr kernel and the driver
+    tier fire the same three phase names, each in its own order."""
     from elektra_spark.operators import betweenness, bfs, cc, lpa
 
     ops = {
@@ -160,11 +161,14 @@ def test_superstep_runtime_labels_and_hook_sequences(spark):
             assert [(s, f) for s, f, _ in got] == want, op
             assert [d for _, _, d in got] == [f"q/{op}/superstep/{s}" for s, _ in want], op
             assert desc() == "q" and sc.getLocalProperty("spark.jobGroup.id") == "loop-labels", op
-        phases = []
-        cc.connected_components(e, on_phase=lambda name, _: phases.append((name, desc())))
-        names = ["collapse_repart", "quotient_probe", "quotient_solve"]
-        assert phases == [(n, f"q/connected_components/{n}") for n in names]
-        assert desc() == "q"
+        for kernel, names in [
+            ("csr", ["collapse_repart", "quotient_probe", "quotient_solve"]),
+            ("auto", ["quotient_probe", "collapse_repart", "quotient_solve"]),  # driver tier
+        ]:
+            phases = []
+            cc.connected_components(e, kernel=kernel, on_phase=lambda name, _: phases.append((name, desc())))
+            assert phases == [(n, f"q/connected_components/{n}") for n in names], kernel
+            assert desc() == "q"
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)

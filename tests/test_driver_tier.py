@@ -1,5 +1,6 @@
 """Driver fallbacks (operators/driver_tier.py): the small-graph tier of
-PageRank and LPA, and the bounded collects of CC and the forests.
+PageRank, LPA, CC and triangle counting, and the bounded collects of CC and
+the forests.
 
 Every case runs with the fallback taken and with it forced off
 (``SMALL_GRAPH_MAX`` / ``DRIVER_ROWS_MAX`` set to 0 or a small k, so the
@@ -11,10 +12,14 @@ import pytest
 from elektra_spark.operators import driver_tier
 from elektra_spark.operators import lpa as lpa_mod
 from elektra_spark.operators import pagerank as pr_mod
+from elektra_spark.operators import triangles as tri_mod
+from elektra_spark.operators.cc import connected_components
 from elektra_spark.operators.lpa import label_propagation
 from elektra_spark.operators.pagerank import pagerank
+from elektra_spark.operators.triangles import triangle_count
 
-from .oracles import lpa_oracle, pagerank_oracle
+from .oracles import cc_oracle, lpa_oracle, pagerank_oracle, triangle_count_oracle
+from .test_graph_ops import CLIQUE5_PLUS_PATH, HOUSE, SPANNING_K5ISH, _random_graph
 
 BIG = 2**31
 # sparse vids, vids ≥ 2^31 (one past 2^40) and, in the vertex table below,
@@ -301,3 +306,146 @@ def test_driver_bound_lives_only_in_driver_tier():
         for i, line in enumerate((root / rel).read_text().splitlines(), 1):
             assert not size.search(line), f"{rel}:{i} size literal; use driver_tier.DRIVER_ROWS_MAX"
             assert not probe.search(line), f"{rel}:{i} bounded collect; use driver_tier.collect_bounded"
+
+
+CC_CASES = {
+    "sparse-isolated": (PAIRS, VIDS),
+    "no-vertex-table": (PAIRS, None),
+    "empty-edges": ([], [4, BIG, 2**40]),
+}
+
+
+def _components(df):
+    return {r["vid"]: r["component"] for r in df.collect()}
+
+
+@pytest.mark.parametrize("case", CC_CASES)
+@pytest.mark.parametrize("bound", ["tier", "0", "k"])
+def test_cc_tier_matches_kernels_and_oracle(spark, monkeypatch, case, bound):
+    """The default call answers like csr, df and the oracle on sparse vids
+    (one ≥ 2^31, one at 2^40), isolated table vertices, an empty edge table
+    and no vertex table; with the bound at 0 or at one below the graph's
+    size, collect_small declines and csr gives the same answer."""
+    pairs, vids = CC_CASES[case]
+    e = _edges(spark, pairs)
+    v = None if vids is None else _verts(spark, vids)
+    want = cc_oracle(pairs, vids)
+    seen = _spy_tier(monkeypatch)
+    if bound != "tier":
+        size = max(len(pairs), len(vids or []))
+        monkeypatch.setattr(driver_tier, "SMALL_GRAPH_MAX", 0 if bound == "0" else size - 1)
+    assert _components(connected_components(e, vertices=v)) == want
+    assert seen == [bound == "tier"]
+    if bound == "tier":
+        for kernel in ("csr", "df"):
+            assert _components(connected_components(e, vertices=v, kernel=kernel)) == want, kernel
+
+
+def _hub_graph(n=120, seed=4):
+    """Preferential attachment (two links per new vertex) plus a hub joined
+    to every vertex: a power-law degree sequence with triangles around the
+    hub."""
+    import random
+
+    rng = random.Random(seed)
+    pairs, ends = {(0, 1), (1, 2), (0, 2)}, [0, 1, 1, 2, 0, 2]
+    for u in range(3, n):
+        for w in {rng.choice(ends), rng.choice(ends)}:
+            pairs.add((w, u))
+            ends += [w, u]
+    return sorted(pairs | {(n, u) for u in range(n)})
+
+
+TRI_GRAPHS = {
+    "house": HOUSE,
+    "clique5path": CLIQUE5_PLUS_PATH,
+    "k5ish": SPANNING_K5ISH,
+    "random": _random_graph(11, 80, 200),
+    "hub": _hub_graph(),
+    # inputs the Spark plan takes as they are: each row is an arc, a
+    # self-loop a self-arc
+    "duplicates": HOUSE + HOUSE[:3],
+    "reversed": HOUSE + [(b, a) for a, b in HOUSE[2:5]],
+    "self-loop": HOUSE + [(2, 2), (4, 4)],
+}
+SIMPLE = ("house", "clique5path", "k5ish", "random", "hub")
+
+
+def _n_triangles(e):
+    return triangle_count(e).collect()[0]["n_triangles"]
+
+
+@pytest.mark.parametrize("name", TRI_GRAPHS)
+def test_triangle_tier_matches_spark_plan(spark, monkeypatch, name):
+    """The tier's count equals the Spark wedge join's, which runs when
+    collect_small declines (bound 0, or one below the edge count)."""
+    pairs = TRI_GRAPHS[name]
+    e = _edges(spark, pairs)
+    seen = _spy_tier(monkeypatch)
+    on_tier = _n_triangles(e)
+    on_spark = []
+    for bound in (0, len(pairs) - 1):
+        monkeypatch.setattr(driver_tier, "SMALL_GRAPH_MAX", bound)
+        on_spark.append(_n_triangles(e))
+    assert seen == [True, False, False]
+    assert on_spark == [on_tier, on_tier]
+    if name in SIMPLE:
+        assert on_tier == triangle_count_oracle(pairs)
+
+
+def _wedges(pairs):
+    """Σ C(d⁺, 2) over the (degree, vid)-oriented out-degrees of the rows."""
+    from collections import Counter
+
+    deg = Counter(v for e in pairs for v in e)
+    out = Counter(min(e, key=lambda v: (deg[v], v)) for e in pairs)
+    return sum(d * (d - 1) // 2 for d in out.values())
+
+
+@pytest.mark.parametrize("name", ["hub", "duplicates", "self-loop"])
+def test_triangle_wedge_bound(spark, monkeypatch, name):
+    """The tier enumerates a graph of exactly DRIVER_WEDGES_MAX wedges and
+    hands one more (or any, at 0) to the Spark plan, with the same count."""
+    pairs = TRI_GRAPHS[name]
+    w = _wedges(pairs)
+    e = _edges(spark, pairs)
+    ran = []
+    real = tri_mod._np_triangle_count
+    monkeypatch.setattr(
+        tri_mod, "_np_triangle_count", lambda *a: ran.append(real(*a)) or ran[-1]
+    )
+    counts = []
+    for bound in (0, w, w - 1):
+        monkeypatch.setattr(driver_tier, "DRIVER_WEDGES_MAX", bound)
+        counts.append(_n_triangles(e))
+    assert w > 0 and [n is not None for n in ran] == [False, True, False]
+    assert counts == [ran[1]] * 3
+
+
+def _jobs(spark, fn):
+    """(fn(), number of Spark jobs it ran)."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "job count")
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_tier_job_counts(spark):
+    """Default CC on a small graph runs at most 2 jobs inside the call (the
+    size job and the collect), and triangle_count(e).collect() at most 2 in
+    all: its one-row answer collects with no job."""
+    e, v = _edges(spark, PAIRS), _verts(spark, VIDS)
+    labels, cc_jobs = _jobs(spark, lambda: connected_components(e, vertices=v))
+    assert cc_jobs <= 2
+    assert _components(labels) == cc_oracle(PAIRS, VIDS)
+    assert labels.rdd.getNumPartitions() == 1
+    tri = _edges(spark, HOUSE)
+    n, tri_jobs = _jobs(spark, lambda: _n_triangles(tri))
+    assert tri_jobs <= 2
+    assert n == triangle_count_oracle(HOUSE)

@@ -49,6 +49,7 @@ def _out_of_table_case(name):
         "pagerank-auto": (pr("auto"), ranks),
         "pagerank-bsp": (pr("bsp"), ranks),
         "pagerank-df": (pr("df"), ranks),
+        "cc-tier": (cc("auto"), cc_oracle(INDUCED, VIDS)),
         "cc-csr": (cc("csr"), cc_oracle(INDUCED, VIDS)),
         "cc-df": (cc("df"), cc_oracle(INDUCED, VIDS)),
         "lpa-tier": (lpa, labels),
@@ -67,7 +68,7 @@ def _close(got, want):
     "kernel",
     [
         "pagerank-tier", "pagerank-auto", "pagerank-bsp", "pagerank-df",
-        "cc-csr", "cc-df", "lpa-tier", "lpa-spark", "hits",
+        "cc-tier", "cc-csr", "cc-df", "lpa-tier", "lpa-spark", "hits",
     ],
 )
 def test_out_of_table_edges_leave_the_graph_on_every_kernel(spark, monkeypatch, kernel):
@@ -88,7 +89,7 @@ PATH = [(0, 1), (1, 2), (2, 3)]
 
 @pytest.mark.parametrize(
     "op",
-    ["pagerank-tier", "pagerank-df", "hits", "katz", "salsa", "cc", "lpa-tier", "lpa-spark"],
+    ["pagerank-tier", "pagerank-df", "hits", "katz", "salsa", "cc", "cc-tier", "lpa-tier", "lpa-spark"],
 )
 def test_duplicated_vid_changes_no_output(spark, monkeypatch, op):
     """A vertex table that lists a vid twice gives the output of its
@@ -101,7 +102,8 @@ def test_duplicated_vid_changes_no_output(spark, monkeypatch, op):
         "hits": lambda e, v: hits(e, vertices=v, n_iter=3),
         "katz": lambda e, v: katz_centrality(e, vertices=v, n_iter=3),
         "salsa": lambda e, v: salsa(e, vertices=v, n_iter=3),
-        "cc": lambda e, v: connected_components(e, vertices=v),
+        "cc": lambda e, v: connected_components(e, vertices=v, kernel="csr"),
+        "cc-tier": lambda e, v: connected_components(e, vertices=v),
         "lpa-tier": lambda e, v: label_propagation(e, vertices=v, rounds=2),
         "lpa-spark": lambda e, v: label_propagation(e, vertices=v, rounds=2),
     }[op]
