@@ -24,13 +24,30 @@ machinery, with identical post-state by the CheckRep invariants
   dynamic_connectivity.h:379-592, with the doubling search replaced by a
   set-oriented recompute); labels of untouched components are preserved
   verbatim.
+
+**Driver tier.** Without levels, while the current snapshot of each of
+``edges``, ``labels`` and ``forest`` has at most
+``driver_tier.SMALL_GRAPH_MAX`` rows (read from the catalog manifest, so the
+check costs no job), :meth:`DynamicGraph.create`, ``batch_add_edges``,
+``batch_delete_edges`` and ``batch_connected`` run the same steps in NumPy
+on the driver (the reference's sequential fallback below a threshold,
+elektra euler_tour_tree.h:279). State is read with
+:meth:`~elektra_spark.tables.SnapshotCatalog.read_arrow` and committed as
+Arrow tables under the Spark path's operation names, so both paths leave
+the same snapshots, versions and history; the only Spark job of a batch or a
+query is the bounded collect of its input (``create``: the edges and the
+vertex table). Larger graphs, larger inputs and ``levels=True`` take the
+Spark path below.
 """
 
 from __future__ import annotations
 
+import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import BooleanType, StructField, StructType
 
 from ..operators import driver_tier
 from ..operators.cc import _np_components, connected_components
@@ -55,8 +72,6 @@ def _solve_contracted_driver(pdf: pd.DataFrame):
     Returns (mapping rows [(component, new_component)], winner rows
     [(src, dst)]).
     """
-    import numpy as np
-
     pdf = pdf.sort_values(["src", "dst"], ignore_index=True)
     cu = pdf["cu"].to_numpy(dtype=np.int64)
     cv = pdf["cv"].to_numpy(dtype=np.int64)
@@ -70,10 +85,54 @@ def _solve_contracted_driver(pdf: pd.DataFrame):
 
 def _canon(batch: DataFrame) -> DataFrame:
     return (
-        batch.select(F.least("src", "dst").alias("src"), F.greatest("src", "dst").alias("dst"))
+        batch.select(
+            F.least("src", "dst").cast("long").alias("src"), F.greatest("src", "dst").cast("long").alias("dst")
+        )
         .filter(F.col("src") != F.col("dst"))
         .dropDuplicates(["src", "dst"])
     )
+
+
+# ---- the driver tier (module docstring) -------------------------------------
+
+
+def _collect(df: DataFrame, *cols: str) -> list[np.ndarray] | None:
+    """``cols`` of ``df`` as int64 arrays, or ``None`` when ``df`` has more
+    than ``driver_tier.SMALL_GRAPH_MAX`` rows or a null in them. One job."""
+    pdf = driver_tier.collect_bounded(
+        df.select(*[F.col(c).cast("long") for c in cols]), driver_tier.SMALL_GRAPH_MAX
+    )
+    if pdf is None or pdf.isna().to_numpy().any():
+        return None
+    return [pdf[c].to_numpy(np.int64) for c in cols]
+
+
+def _np_canon(src: np.ndarray, dst: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """:func:`_canon` in NumPy: (least, greatest), self-loops dropped,
+    distinct, sorted by (src, dst)."""
+    a, b = np.minimum(src, dst), np.maximum(src, dst)
+    keep = a != b
+    pairs = np.unique(np.stack([a[keep], b[keep]], axis=1), axis=0)
+    return pairs[:, 0], pairs[:, 1]
+
+
+def _np_pairs_in(s: np.ndarray, d: np.ndarray, ts: np.ndarray, td: np.ndarray) -> np.ndarray:
+    """Mask of the ``(s, d)`` pairs that occur among the ``(ts, td)`` pairs
+    (a semi-join on both keys, over a dense relabel of the ids)."""
+    ids, inv = np.unique(np.concatenate([s, d, ts, td]), return_inverse=True)
+    n, m, k = len(ids), len(s), len(ts)
+    key = inv[:m] * n + inv[m : 2 * m]
+    return np.isin(key, inv[2 * m : 2 * m + k] * n + inv[2 * m + k :])
+
+
+def _np_lookup(keys: np.ndarray, vals: np.ndarray, x: np.ndarray) -> np.ndarray:
+    """The ``vals`` entry of each ``x`` in ``keys`` (distinct); ``x``
+    itself where ``keys`` lacks it (a left join with a coalesce)."""
+    if not len(keys):
+        return x.copy()
+    order = np.argsort(keys)
+    i = order[np.minimum(np.searchsorted(keys, x, sorter=order), len(keys) - 1)]
+    return np.where(keys[i] == x, vals[i], x)
 
 
 class DynamicGraph:
@@ -126,20 +185,62 @@ class DynamicGraph:
         check_rep: bool = False,
     ) -> "DynamicGraph":
         g = cls(catalog, prefix, levels=levels, check_rep=check_rep)
-        edges = _canon(edges)
-        catalog.write(g._t("edges"), edges, "create")
-        lbls = connected_components(edges, vertices=vertices)
-        catalog.write(g._t("labels"), lbls, "create")
-        forest = spanning_forest(edges)
-        catalog.write(g._t("forest"), forest, "create")
-        if levels:
-            from .levels import with_levels
+        if levels or not g._create_on_driver(edges, vertices):
+            edges = _canon(edges)
+            catalog.write(g._t("edges"), edges, "create")
+            lbls = connected_components(edges, vertices=vertices)
+            catalog.write(g._t("labels"), lbls, "create")
+            forest = spanning_forest(edges)
+            catalog.write(g._t("forest"), forest, "create")
+            if levels:
+                from .levels import with_levels
 
-            n = g.labels().count()
-            catalog.write(g._t("levels"), with_levels(edges, forest, n), "create")
+                n = g.labels().count()
+                catalog.write(g._t("levels"), with_levels(edges, forest, n), "create")
         if check_rep:
             g.check_rep()
         return g
+
+    def _create_on_driver(self, edges: DataFrame, vertices: DataFrame | None) -> bool:
+        """:meth:`create` in the driver tier: the same three commits, or
+        ``False`` (nothing committed) when an input is over the bound. The
+        labels follow :mod:`~elektra_spark.operators.universe`'s rule (the
+        vertex table's distinct vids over the subgraph it induces); the
+        forest spans every canonical edge, as on the Spark path."""
+        e = _collect(edges.dropna(subset=["src", "dst"]), "src", "dst")
+        v = _collect(vertices, "vid") if e is not None and vertices is not None else None
+        if e is None or (vertices is not None and v is None):
+            return False
+        src, dst = _np_canon(*e)
+        self._commit("edges", "create", src=src, dst=dst)
+        if v is None:
+            vids, comp = _np_components(src, dst)
+        else:
+            vids = np.unique(v[0])
+            inside = np.isin(src, vids) & np.isin(dst, vids)
+            vids, comp = _np_components(src[inside], dst[inside], vids)
+        self._commit("labels", "create", vid=vids, component=comp)
+        forest = _winners(pd.DataFrame({"src": src, "dst": dst}))
+        self._commit("forest", "create", src=forest["src"].to_numpy(), dst=forest["dst"].to_numpy())
+        return True
+
+    # -- the driver tier's state ------------------------------------------------
+    def _on_driver(self) -> bool:
+        """The driver tier runs: no levels, and each state table's current
+        snapshot has at most ``driver_tier.SMALL_GRAPH_MAX`` rows by its
+        manifest count (a missing count is over the bound). No job."""
+        return not self.levels and all(
+            (n := self.catalog.rows(self._t(t))) is not None and n <= driver_tier.SMALL_GRAPH_MAX
+            for t in ("edges", "labels", "forest")
+        )
+
+    def _state(self, name: str, *cols: str) -> list[np.ndarray]:
+        t = self.catalog.read_arrow(self._t(name))
+        return [t.column(c).to_numpy().astype(np.int64, copy=False) for c in cols]
+
+    def _commit(self, name: str, operation: str, **cols: np.ndarray) -> None:
+        table = pa.table({c: pa.array(v, pa.int64()) for c, v in cols.items()})
+        self.catalog.write(self._t(name), table, operation)
 
     # -- reads ----------------------------------------------------------------
     def edges(self) -> DataFrame:
@@ -200,24 +301,46 @@ class DynamicGraph:
             check_level_invariants(self.levels_table(), lbls.count())
 
     def batch_connected(self, queries: DataFrame) -> DataFrame:
+        """elektra ``BatchConnected`` over the current labels
+        (:func:`~elektra_spark.operators.cc.batch_connected`); in the driver
+        tier the query batch is collected, answered in NumPy and returned
+        as a one-partition frame (``driver_tier.local_frame``)."""
         from ..operators.cc import batch_connected
 
-        return batch_connected(self.labels(), queries)
+        q = _collect(queries, "u", "v") if self._on_driver() else None
+        if q is None:
+            return batch_connected(self.labels(), queries)
+        u, v = q
+        vid, comp = self._state("labels", "vid", "component")
+        schema = StructType(
+            [queries.schema["u"], queries.schema["v"], StructField("connected", BooleanType())]
+        )
+        answer = pd.DataFrame({"u": u, "v": v, "connected": _np_lookup(vid, comp, u) == _np_lookup(vid, comp, v)})
+        return driver_tier.local_frame(queries.sparkSession, answer, schema)
 
     # -- batch insert ----------------------------------------------------------
-    def batch_add_edges(self, batch: DataFrame, driver_threshold: int | None = None) -> None:
+    def batch_add_edges(self, batch: DataFrame) -> None:
         """Insert an edge batch (elektra ``BatchAddEdges``,
         dynamic_connectivity.h:44-110): contract by current labels, spanning
         tree of the contracted graph, relabel through the root mapping.
 
-        The contracted cross-component graph (one row per batch edge joining
-        distinct components) is solved on the driver when it has ≤
-        ``driver_threshold`` rows (default ``driver_tier.DRIVER_ROWS_MAX``,
-        read at call time) — vectorized NumPy, one bounded collect — else by
-        the distributed CC + spanning-forest operators, so arbitrarily large
-        insert batches (the reference's bread and butter) never OOM the
-        driver.
+        In the driver tier (module docstring) the whole batch runs in NumPy.
+        Otherwise the contracted cross-component graph (one row per batch
+        edge joining distinct components) is solved on the driver when it
+        has at most ``driver_tier.DRIVER_ROWS_MAX`` rows — vectorized NumPy,
+        one bounded collect — else by the distributed CC + spanning-forest
+        operators, so arbitrarily large insert batches (the reference's
+        bread and butter) never OOM the driver.
         """
+        b = _collect(batch.dropna(subset=["src", "dst"]), "src", "dst") if self._on_driver() else None
+        if b is not None:
+            self._add_on_driver(*_np_canon(*b))
+        else:
+            self._add_on_spark(batch)
+        if self.with_check_rep:
+            self.check_rep()
+
+    def _add_on_spark(self, batch: DataFrame) -> None:
         spark = batch.sparkSession
         batch = _canon(batch)
         # filter out already-present edges (InsertIntoEdgeTable dedup,
@@ -239,9 +362,7 @@ class DynamicGraph:
         # one job decides the path AND collects the cross batch when small
         # (formerly an eager checkpoint + count + collect — three jobs per
         # batch on a path whose cost is almost entirely fixed job overhead)
-        if driver_threshold is None:
-            driver_threshold = driver_tier.DRIVER_ROWS_MAX
-        head = driver_tier.collect_bounded(cross, driver_threshold)
+        head = driver_tier.collect_bounded(cross, driver_tier.DRIVER_ROWS_MAX)
 
         mapping_df = winners_df = None
         if head is not None and len(head):
@@ -308,11 +429,53 @@ class DynamicGraph:
                     F.lit(False).alias("is_tree"),
                 )
             self.catalog.merge_insert(self._t("levels"), new_rows, ["src", "dst"])
-        if self.with_check_rep:
-            self.check_rep()
+
+    def _add_on_driver(self, src: np.ndarray, dst: np.ndarray) -> None:
+        """The insert path of :meth:`batch_add_edges` over the canonical
+        batch, in NumPy, with the same commits."""
+        es, ed = self._state("edges", "src", "dst")
+        fresh = ~_np_pairs_in(src, dst, es, ed)
+        src, dst = src[fresh], dst[fresh]
+        vid, comp = self._state("labels", "vid", "component")
+        ends = np.unique(np.concatenate([src, dst]))
+        unseen = ends[~np.isin(ends, vid)]
+        vid, comp = np.concatenate([vid, unseen]), np.concatenate([comp, unseen])
+        cu, cv = _np_lookup(vid, comp, src), _np_lookup(vid, comp, dst)
+        cross = cu != cv
+        self._commit("edges", "merge_insert", src=np.concatenate([es, src]), dst=np.concatenate([ed, dst]))
+        winners = None
+        if cross.any():
+            mapping, winners = _solve_contracted_driver(
+                pd.DataFrame({"src": src[cross], "dst": dst[cross], "cu": cu[cross], "cv": cv[cross]})
+            )
+            comp = _np_lookup(
+                mapping["component"].to_numpy(np.int64), mapping["new_component"].to_numpy(np.int64), comp
+            )
+        self._commit("labels", "batch_add_edges", vid=vid, component=comp)
+        if winners is not None and len(winners):
+            fs, fd = self._state("forest", "src", "dst")
+            self._commit(
+                "forest", "batch_add_edges",
+                src=np.concatenate([fs, winners["src"].to_numpy(np.int64)]),
+                dst=np.concatenate([fd, winners["dst"].to_numpy(np.int64)]),
+            )
 
     # -- batch delete -----------------------------------------------------------
     def batch_delete_edges(self, batch: DataFrame) -> None:
+        """Delete an edge batch (elektra ``BatchDeleteEdges``,
+        dynamic_connectivity.h:169-377): unknown edges are ignored, non-tree
+        deletions change only the edge table, and tree deletions recompute
+        the components they split (module docstring). In the driver tier
+        the whole batch runs in NumPy."""
+        b = _collect(batch.dropna(subset=["src", "dst"]), "src", "dst") if self._on_driver() else None
+        if b is not None:
+            self._delete_on_driver(*_np_canon(*b))
+        else:
+            self._delete_on_spark(batch)
+        if self.with_check_rep:
+            self.check_rep()
+
+    def _delete_on_spark(self, batch: DataFrame) -> None:
         batch = _canon(batch)
         # RemoveUnknownEdges (connectivity-helpers.h:280-283)
         known = batch.join(self.edges(), ["src", "dst"], "left_semi").localCheckpoint(eager=True)
@@ -323,10 +486,7 @@ class DynamicGraph:
         # tree / non-tree split: only forest deletions can split components
         tree_dels = known.join(self.forest(), ["src", "dst"], "left_semi").localCheckpoint(eager=True)
         if tree_dels.count() == 0:
-            # non-tree fast path: connectivity unchanged
-            if self.with_check_rep:
-                self.check_rep()
-            return
+            return  # non-tree fast path: connectivity unchanged
 
         labels = self.labels()
         # affected components = components containing any deleted tree edge
@@ -358,8 +518,6 @@ class DynamicGraph:
         vpdf = driver_tier.collect_bounded(sub_vertices, k) if sub_pdf is not None else None
         new_sub_labels = new_sub_forest = None
         if vpdf is not None:
-            import numpy as np
-
             spark = batch.sparkSession
             es = sub_pdf["src"].to_numpy(dtype=np.int64)
             ed = sub_pdf["dst"].to_numpy(dtype=np.int64)
@@ -371,7 +529,7 @@ class DynamicGraph:
             new_sub_forest = spark.createDataFrame(fo if len(fo) else [], "src long, dst long")
         if new_sub_labels is None:
             new_sub_labels = connected_components(sub_edges, vertices=sub_vertices)
-        untouched = labels.join(F.broadcast(affected), "component", "left_anti")
+        untouched = labels.join(F.broadcast(affected), "component", "left_anti").select("vid", "component")
         self.catalog.write(self._t("labels"), untouched.unionByName(new_sub_labels), "batch_delete_edges")
 
         if new_sub_forest is None:
@@ -414,5 +572,34 @@ class DynamicGraph:
                 )
                 lvl = push_down_non_tree_edges(lvl, nontree_batch, int(top_row))
             self.catalog.write(self._t("levels"), lvl, "batch_delete_edges")
-        if self.with_check_rep:
-            self.check_rep()
+
+    def _delete_on_driver(self, src: np.ndarray, dst: np.ndarray) -> None:
+        """The delete path of :meth:`batch_delete_edges` over the canonical
+        batch, in NumPy, with the same commits: the affected components'
+        slice is recomputed by the kernels the Spark path's driver fallback
+        runs (``_np_components``, ``_winners``)."""
+        es, ed = self._state("edges", "src", "dst")
+        known = _np_pairs_in(es, ed, src, dst)
+        ks, kd, es, ed = es[known], ed[known], es[~known], ed[~known]
+        self._commit("edges", "merge_delete", src=es, dst=ed)
+        fs, fd = self._state("forest", "src", "dst")
+        tree = _np_pairs_in(fs, fd, ks, kd)
+        if not tree.any():
+            return  # non-tree fast path: connectivity unchanged
+        vid, comp = self._state("labels", "vid", "component")
+        # affected components: those of the deleted tree edges' src vertices
+        affected = np.unique(comp[np.isin(vid, fs[tree])])
+        member = np.isin(comp, affected)
+        sub = np.isin(es, vid[member])
+        new_vid, new_comp = _np_components(es[sub], ed[sub], vid[member])
+        self._commit(
+            "labels", "batch_delete_edges",
+            vid=np.concatenate([vid[~member], new_vid]), component=np.concatenate([comp[~member], new_comp]),
+        )
+        sub_forest = _winners(pd.DataFrame({"src": es[sub], "dst": ed[sub]}))
+        keep = ~tree & ~np.isin(fs, vid[member])
+        self._commit(
+            "forest", "batch_delete_edges",
+            src=np.concatenate([fs[keep], sub_forest["src"].to_numpy(np.int64)]),
+            dst=np.concatenate([fd[keep], sub_forest["dst"].to_numpy(np.int64)]),
+        )

@@ -19,7 +19,13 @@ instead of per stage — under three bounds and one collect rule:
   three take the tier only when the caller asked for nothing specific (the
   default kernel, no checkpointer, no bsp prep dir), so durable runs still
   commit every superstep; CC and triangles answer in a one-partition frame
-  (:func:`local_frame`).
+  (:func:`local_frame`). The fourth user,
+  :class:`~elektra_spark.dynamic.updates.DynamicGraph` without levels,
+  sizes its state from the row counts the catalog manifest records for the
+  current ``edges``, ``labels`` and ``forest`` snapshots (no job), reads
+  and commits that state through Arrow, and collects only its input (the
+  update or query batch, or ``create``'s edges and vertex table) with
+  :func:`collect_bounded` under this bound.
 - :data:`DRIVER_WEDGES_MAX` bounds the work of the triangle tier: the
   wedges its degree-ordered enumeration visits, Σ C(d⁺, 2) over the
   oriented out-degrees, known before it enumerates any. Over it the Spark
@@ -27,8 +33,8 @@ instead of per stage — under three bounds and one collect rule:
 - :data:`DRIVER_ROWS_MAX` bounds a *derived* relation that a distributed
   operator has already shrunk: the CC quotient links of the csr kernel,
   the winner union of both forests (:mod:`~elektra_spark.operators.forest`),
-  the contracted add batch and the delete slice's edges and vertices
-  (:class:`~elektra_spark.dynamic.updates.DynamicGraph`). Each collects it
+  and, on ``DynamicGraph``'s Spark path, the contracted add batch and the
+  delete slice's edges and vertices. Each collects it
   with :func:`collect_bounded` — one job that both decides the path and
   ships the rows — and otherwise keeps its distributed fallback.
 
@@ -50,8 +56,9 @@ from ..checkpoint import _no_aqe
 # Bound on both edges and vertices for the driver tier: the collect runs only
 # when each table has at most SMALL_GRAPH_MAX rows. The smallest
 # graph a bench.py leaf runs on kernel='auto' has 1,041,259 edges, so every
-# bench leaf stays distributed. Tests set it to 0 to force the distributed
-# path.
+# bench operator leaf stays distributed (its email-Eu-core DynamicGraph
+# leaves, run when that graph is present, take the tier). Tests set it to 0
+# to force the distributed path.
 SMALL_GRAPH_MAX = 500_000
 
 # Bound on the rows of a derived relation that a driver fallback collects

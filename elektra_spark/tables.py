@@ -20,6 +20,12 @@ JSON manifest:
   anti/semi joins and committed as a new snapshot — the same logical plan an
   Iceberg copy-on-write MERGE produces.
 - **Time travel**: ``read(version=...)`` + ``history()``.
+- **Driver-side access**: a small table is read into Arrow with
+  :meth:`~SnapshotCatalog.read_arrow` (exactly the files the manifest entry
+  names) and committed from a ``pyarrow.Table`` by the same ``_commit``, so
+  the driver tier of :class:`~elektra_spark.dynamic.updates.DynamicGraph`
+  runs no Spark job for state; :meth:`~SnapshotCatalog.rows` reads a
+  snapshot's row count from the manifest. All file I/O stays in this module.
 
 At 100 TB these operations are exactly Iceberg's, and
 :func:`elektra_spark.session.iceberg_configs` flips state storage to a real
@@ -32,8 +38,10 @@ import json
 import os
 import shutil
 import time
+import uuid
 from dataclasses import dataclass
 
+import pyarrow as pa
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -78,9 +86,12 @@ class SnapshotCatalog:
         os.replace(tmp, self._manifest_path(name))  # atomic commit point
 
     # ---- core commit protocol --------------------------------------------
-    def _commit(self, name: str, df: DataFrame, operation: str) -> SnapshotInfo:
+    def _commit(self, name: str, df: DataFrame | pa.Table, operation: str) -> SnapshotInfo:
         """Write df as the next snapshot and atomically swap the manifest.
 
+        ``df`` is a Spark DataFrame or a ``pyarrow.Table``; an Arrow table
+        is written from the driver as one ``part-00000-…parquet`` file. Either
+        way a ``v_<n>/`` directory a crashed writer left behind is replaced.
         The snapshot entry records each data file's row count (``files``,
         file name → rows) and their sum (``rows``), read from the parquet
         footers just written — pyarrow on the driver, no Spark job. This is
@@ -90,7 +101,12 @@ class SnapshotCatalog:
         man = self._load_manifest(name)
         version = (man["current"] or 0) + 1
         snap_dir = os.path.join(self._table_dir(name), f"v_{version}")
-        df.write.mode("overwrite").parquet(snap_dir)
+        if isinstance(df, pa.Table):
+            shutil.rmtree(snap_dir, ignore_errors=True)
+            os.makedirs(snap_dir)
+            pq.write_table(df, os.path.join(snap_dir, f"part-00000-{uuid.uuid4()}-c000.snappy.parquet"))
+        else:
+            df.write.mode("overwrite").parquet(snap_dir)
         files = {
             f: pq.read_metadata(os.path.join(snap_dir, f)).num_rows
             for f in sorted(os.listdir(snap_dir))
@@ -115,7 +131,7 @@ class SnapshotCatalog:
     def exists(self, name: str) -> bool:
         return self._load_manifest(name)["current"] is not None
 
-    def write(self, name: str, df: DataFrame, operation: str = "overwrite") -> SnapshotInfo:
+    def write(self, name: str, df: DataFrame | pa.Table, operation: str = "overwrite") -> SnapshotInfo:
         return self._commit(name, df, operation)
 
     def add_entry(self, name: str, key: str, entry: dict) -> None:
@@ -129,13 +145,30 @@ class SnapshotCatalog:
     def entries(self, name: str, key: str) -> list[dict]:
         return self._load_manifest(name).get(key, [])
 
-    def read(self, name: str, version: int | None = None) -> DataFrame:
+    def _snapshot(self, name: str, version: int | None = None) -> dict:
         man = self._load_manifest(name)
         if man["current"] is None:
             raise FileNotFoundError(f"table {name} does not exist in {self.root}")
         version = version or man["current"]
-        snap = next(s for s in man["snapshots"] if s["version"] == version)
-        return self.spark.read.parquet(snap["path"])
+        return next(s for s in man["snapshots"] if s["version"] == version)
+
+    def read(self, name: str, version: int | None = None) -> DataFrame:
+        return self.spark.read.parquet(self._snapshot(name, version)["path"])
+
+    def read_arrow(self, name: str, version: int | None = None) -> pa.Table:
+        """The snapshot as one Arrow table on the driver, read from exactly
+        the data files its manifest entry names (a stray file in the
+        snapshot directory is not part of it). No Spark job."""
+        snap = self._snapshot(name, version)
+        return pa.concat_tables([pq.read_table(os.path.join(snap["path"], f)) for f in snap["files"]])
+
+    def rows(self, name: str) -> int | None:
+        """The current snapshot's row count as the manifest records it, or
+        ``None`` when the table does not exist or its entry has no count."""
+        try:
+            return self._snapshot(name).get("rows")
+        except FileNotFoundError:
+            return None
 
     def history(self, name: str) -> list[dict]:
         return self._load_manifest(name)["snapshots"]
